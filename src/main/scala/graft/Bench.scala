@@ -21,11 +21,7 @@ object Bench {
     val realOut = System.out
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.localSession()
 
     // r11 measurement-hygiene fix (guide §1.1/§5, declared in
     // OPTIMIZATION_r11.md): queries that eagerly localCheckpoint

@@ -141,11 +141,7 @@ object Build {
   /** CLI: `runMain graft.Build <sfDir> <warehouseDir>` */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, out) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = graft.core.Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.localSession()
     val report = build(spark, sfDir, out)
     report.tables.foreach(t => println(s"[build] table $t -> $out/$t"))
     report.checks.foreach(c =>

@@ -12,13 +12,20 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Build a local session. `cpus` is the local parallelism; on a real
-    * cluster the same confs apply, with shuffle partitions sized by AQE.
+  /** The local session every graft main runs on: `local[cpus]` with
+    * `cpus` from `SPARK_GRAFT_CPUS` (default: the available processors),
+    * Spark logging at WARN. On a real cluster the same confs apply
+    * through [[tune]], with shuffle partitions sized by AQE.
     */
-  def localSession(cpus: Int, appName: String = "graft"): SparkSession =
-    tune(SparkSession.builder().master(s"local[$cpus]"), cpus)
-      .appName(appName)
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString).toInt
+    val spark = tune(SparkSession.builder().master(s"local[$cpus]"), cpus)
+      .appName("graft")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Apply graft's planning confs to any builder (local or cluster). */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = b
@@ -51,12 +58,9 @@ object Graft {
     // tiny unsorted per-map streams lose to one sorted spill file at
     // scale, so the stock 200 stays. Small-frame queries that would pay
     // the ×8 fan-out on tiny iterative exchanges scope it away via
-    // Mining.withShufflePartitions (both confs, r8 VERDICT #1).
-    // dev A/B only (driver sets no env): SPARK_GRAFT_FANOUT=1 rebuilds
-    // the ×1 arm of the r9 measurements on the current tree.
+    // [[withShuffleWidth]].
     .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      (shufflePartitions *
-        sys.env.get("SPARK_GRAFT_FANOUT").map(_.toInt).getOrElse(8)).toString)
+      (shufflePartitions * 8).toString)
     // Spark's stock 10 MB, deliberately NOT raised: the planner's size
     // estimate is the COMPRESSED on-disk footprint scaled by column
     // pruning, and the in-memory HashedRelation it actually builds runs
@@ -70,4 +74,43 @@ object Graft {
     // broadcast; SF-scaling tables flip to SMJ exactly when they should.
     .config("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     .config("spark.ui.enabled", "false")
+
+  /** Runs `body` with the shuffle WIDTH scoped to `width` — BOTH
+    * `spark.sql.shuffle.partitions` AND
+    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` — and
+    * restores both afterwards. With no `width`, the scope narrows
+    * [[tune]]'s ×8 pre-coalesce fan-out back to ×1 of the session's base
+    * `shuffle.partitions`.
+    *
+    * Scoping only `shuffle.partitions` is silently inert when AQE
+    * coalescing is on: Spark sizes the pre-coalesce map output by
+    * initialPartitionNum when that conf is set, so the global ×8 fan-out
+    * (256 on local[32]) would make every tiny fixpoint round launch
+    * 256-way shuffles that AQE then coalesces (measured as a 2×
+    * q_components regression). The base width is read from the conf
+    * itself, NOT `sessionState.conf.numShufflePartitions`: under AQE
+    * coalescing that getter RETURNS initialPartitionNum, which would make
+    * the ×1 scope a silent no-op.
+    *
+    * The ×8 fan-out wins on corpus-sized sorts (q14 5×, fact 2× at 64×)
+    * but taxes exchanges of domain-bounded frames (graph fixed points,
+    * post-rollup |users|/|days|/|deciles| frames, streaming state stores)
+    * 2-3× in pure task scheduling. Confs are read at EXECUTION time, so
+    * this narrows only plans actually run inside the scope (actions,
+    * eager `localCheckpoint`s, streams run to completion) — a lazy frame
+    * returned outward plans at the caller's width.
+    */
+  private[graft] def withShuffleWidth[A](spark: SparkSession, width: Option[Int] = None)(
+      body: => A): A = {
+    val n = width.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val olds = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(k => spark.conf.set(k, n.toString))
+    try body
+    finally olds.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

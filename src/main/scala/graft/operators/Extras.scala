@@ -1001,7 +1001,7 @@ object Extras {
     * (driver-side assembly, same as E13's set counts).
     */
   def funnel(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r9 VERDICT #4): v/c/p are |users|-bounded and
     // the three counts execute HERE, inside the scope — the global ×8
     // pre-coalesce width taxed the chained tiny exchanges 2× (judge
@@ -1345,7 +1345,7 @@ object Extras {
     * 2·cum ≥ tot — no float boundary, no interpolation.
     */
   def weightedMedian(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the first rollup is (flag × price-cents)
     // domain-bounded and the two windows key on 3 flags, so the global
@@ -1473,7 +1473,7 @@ object Extras {
     * is exact integer cents end to end.
     */
   def winsorize(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the first rollup is (year × price-cents)
     // domain-bounded — the checkpointed cells, the two windows, the

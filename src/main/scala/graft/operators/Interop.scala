@@ -425,7 +425,7 @@ object Interop {
     * rule trades for parallelism.
     */
   def compactionPlan(spark: SparkSession, dir: String): DataFrame =
-      Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r10 VERDICT #4): every frame past the first
     // partial aggregate is |fragments|-bounded (~10³ here, ~10⁶ at
     // 100 TB), so the global ×8 pre-coalesce width only taxed the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Graft
 import graft.functions.Fns._
 import graft.sources.Tables
 
@@ -19,64 +20,6 @@ import graft.sources.Tables
   * over those exact aggregates.
   */
 object Mining {
-
-  /** Runs `body` with the shuffle WIDTH scoped to `n` — BOTH
-    * `spark.sql.shuffle.partitions` AND
-    * `spark.sql.adaptive.coalescePartitions.initialPartitionNum`.
-    * Scoping only the former is silently inert when AQE coalescing is
-    * on: Spark sizes the pre-coalesce map output by initialPartitionNum
-    * when that conf is set, so [[graft.core.Graft.tune]]'s global 8×
-    * fan-out (256 on local[32]) would make every tiny fixpoint round
-    * launch 256-way shuffles that AQE then coalesces — the r8 judge
-    * measured exactly this as a 2× q_components regression when r8's
-    * tune started setting initialPartitionNum globally. Confs are read
-    * at EXECUTION time, so this narrows only plans actually run inside
-    * the scope (eager `localCheckpoint`/`count` rounds) — a lazy frame
-    * returned outward plans at the caller's width. For graph fixed
-    * points and other |V|-bounded frames that are orders of magnitude
-    * smaller than the corpus that produced them: at scan width every
-    * tiny round pays full-width task scheduling.
-    */
-  private[graft] def withShufflePartitions[A](
-      spark: SparkSession, n: Int)(body: => A): A = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    val olds = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, n.toString))
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Scope ONLY the AQE pre-coalesce fan-out to ×1 — i.e. pin
-    * `initialPartitionNum` to the session's `shuffle.partitions` for
-    * the duration of `body`, leaving the real cluster width itself
-    * untouched. This is the narrow-frame variant of
-    * [[withShufflePartitions]] for faces whose exchanges are dominated
-    * by domain-bounded post-rollup frames (|users|, |days|, |deciles|):
-    * Graft.tune's global ×8 fan-out wins on corpus-sized sorts (q14 5×,
-    * fact 2× at 64× — measured both ways, r9) but taxes tiny exchanges
-    * 2-3× in pure task scheduling. Confs are read at EXECUTION time, so
-    * the face must run its actions (or eagerly `localCheckpoint` its
-    * bounded result) INSIDE the scope — a lazy frame returned outward
-    * plans at the caller's width.
-    */
-  private[graft] def withStockFanout[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val old = spark.conf.getOption(key)
-    // NOT sessionState.conf.numShufflePartitions — under AQE coalescing
-    // that getter RETURNS initialPartitionNum, which would make this
-    // scope a silent no-op (the r8 silent-inert-conf class again,
-    // caught by task-count probing this round). Read the base conf.
-    spark.conf.set(key, spark.conf.get("spark.sql.shuffle.partitions"))
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** E44: event-type Markov transition matrix — P(next event type |
     * current type) per user journey, the session-flow fingerprint
@@ -1089,7 +1032,7 @@ object Mining {
     * checksum dodged for the same reason).
     */
   def gini(spark: SparkSession, dir: String): DataFrame =
-      withStockFanout(spark) {
+      Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // every frame past the first rollup is |customers|-bounded, and
     // `rangeParts` reads initialPartitionNum under AQE — so the global
@@ -1460,7 +1403,7 @@ object Mining {
     * corpus-sized exchange is the per-user aggregate; both prefix
     * passes run on ≤|distinct hours| rows.
     */
-  def kaplanMeier(spark: SparkSession, dir: String): DataFrame = withStockFanout(spark) {
+  def kaplanMeier(spark: SparkSession, dir: String): DataFrame = Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r9 VERDICT #4): every exchange past the per-user
     // aggregate is |distinct hours|-bounded; the global ×8 pre-coalesce
     // width taxed the face 2-3× in task scheduling (judge solo 2.48 s,
@@ -1540,7 +1483,7 @@ object Mining {
     // pinned to 8 reducers at any deployment size.
     val spark = edges.sparkSession
     val width = math.max(4, spark.sparkContext.defaultParallelism / 4)
-    withShufflePartitions(spark, width)(componentsLoop(edges))
+    Graft.withShuffleWidth(spark, Some(width))(componentsLoop(edges))
   }
 
   /** The RDD a `localCheckpoint`ed Dataset is served from (the
@@ -1943,7 +1886,7 @@ object Mining {
     * division (identical bits in both engines); S and ranks are
     * integers; τ rounds by the §8(d) floor idiom.
     */
-  def trendRobust(spark: SparkSession, dir: String): DataFrame = withStockFanout(spark) {
+  def trendRobust(spark: SparkSession, dir: String): DataFrame = Graft.withShuffleWidth(spark) {
     // r11 (guide §2.4): `monthly` feeds FOUR plan branches (both pair
     // sides + the intercept candidates) and `pairs` three (MK sums +
     // the slope median's cells/total arms) — without cutting lineage

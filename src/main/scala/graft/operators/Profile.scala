@@ -256,7 +256,7 @@ object Profile {
     * aren't required.
     */
   def histogramDepth(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r9 VERDICT #4): globalIndex's range exchange is
     // explicitly sized (rangeParts), so the only AQE-planned exchange is
     // the 9-group decile aggregate — which the global ×8 width taxed
@@ -361,7 +361,7 @@ object Profile {
     * the end.
     */
   def ksDrift(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // r12 (r11 VERDICT #7, the ks bimodality diagnosis): event-log
     // capture of 8 solo reps localized the run-to-run spread to the
     // 256-task stages — the global ×8 pre-coalesce fan-out reaches this
@@ -578,7 +578,7 @@ object Profile {
     * grain.
     */
   def cusumDrift(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the daily rollup is |days|-bounded (~2.5 k rows),
     // and `rangeParts` reads initialPartitionNum under AQE — the global

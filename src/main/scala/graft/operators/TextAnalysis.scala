@@ -923,7 +923,7 @@ object TextAnalysis {
     * arithmetic. Engine-identical at every scale by construction.
     */
   def curriculum(spark: SparkSession, dir: String): DataFrame =
-      graft.operators.Mining.withStockFanout(spark) {
+      graft.core.Graft.withShuffleWidth(spark) {
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // every exchange here is documents-bounded (the scored frame and
     // the 10-decile rollup), and `rangeParts` reads initialPartitionNum

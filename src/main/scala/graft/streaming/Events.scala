@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
+import graft.core.Graft
 import graft.functions.Fns._
 import graft.sources.Tables
 
@@ -68,6 +71,89 @@ object Events {
       java.nio.file.Files.copy(src, feedDir.resolve("events.parquet"))
     }
     feedDir
+  }
+
+  /** Stage the events feed as 4 part files: a rate-limited
+    * (`maxFilesPerTrigger = 1`) stream then takes 4 micro-batches, and
+    * a restart can reveal the feed in halves.
+    */
+  private def stageFourFiles(spark: SparkSession, path: String,
+      prefix: String): java.nio.file.Path = {
+    val feedDir = tempDir(prefix)
+    spark.read.parquet(path).repartition(4)
+      .write.mode("overwrite").parquet(feedDir.toString)
+    feedDir
+  }
+
+  /** The driver every streaming face runs through: `face` runs with a
+    * [[StreamRun]] over `dir`'s events feed, inside a width-8 scope.
+    *
+    * Width 8: stateful streaming queries instantiate one state store PER
+    * shuffle partition per stateful operator per micro-batch (a
+    * stream-stream join keeps FOUR per partition), so the session's
+    * scan-sized width would spend seconds on store commits for kilobytes
+    * of state. The scope covers initialPartitionNum too: the streaming
+    * plan itself ignores AQE, but the batch work the faces run eagerly
+    * inside it (staging writes, sentinel and horizon aggregates,
+    * foreachBatch folds) would otherwise launch at the global ×8
+    * pre-coalesce fan-out.
+    */
+  private[graft] def runAvailableNow[A](spark: SparkSession, dir: String)(
+      face: StreamRun => A): A =
+    Graft.withShuffleWidth(spark, Some(8))(face(new StreamRun(spark, dir)))
+
+  /** What a streaming face gets from [[runAvailableNow]]: the events
+    * feed's path and raw schema, file-stream sources over a staged copy
+    * of the feed, and [[drain]], which runs one query to completion.
+    */
+  private[graft] final class StreamRun(spark: SparkSession, dir: String) {
+    val path = s"$dir/events.parquet"
+
+    /** The feed's RAW schema: every staged part file carries it, so it
+      * is the schema a file-stream source over a staged copy declares.
+      */
+    lazy val schema: StructType = spark.read.parquet(path).schema
+
+    /** A fresh file-stream source over `feedDir` (FileStreamSource
+      * consumes a DIRECTORY: files land and are processed once). Each
+      * call is a separate source, so a stream-stream join calls it per
+      * side. `oneFilePerBatch` rate-limits it to one file per batch.
+      */
+    def source(feedDir: java.nio.file.Path,
+        oneFilePerBatch: Boolean = false): DataFrame = {
+      val reader = spark.readStream.schema(schema)
+      (if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1") else reader)
+        .parquet(feedDir.toString)
+    }
+
+    /** [[source]] with `ts` normalized to ns and `event_ts` as its
+      * event-time timestamp.
+      */
+    def events(feedDir: java.nio.file.Path,
+        oneFilePerBatch: Boolean = false): DataFrame =
+      Tables.normalizeEventTs(source(feedDir, oneFilePerBatch))
+        .withColumn("event_ts", nsToTimestamp(col("ts")))
+
+    /** Start `writer` under `Trigger.AvailableNow` (the scheduled
+      * catch-up shape: process everything present, then stop) and wait
+      * for it to finish. A failed query's error propagates; a query that
+      * is still running on the way out (timeout, failure) is stopped.
+      */
+    def drain(writer: DataStreamWriter[_]): StreamingQuery = {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      try require(q.awaitTermination(300000),
+        "AvailableNow run did not self-terminate")
+      finally if (q.isActive) q.stop()
+      q
+    }
+
+    /** [[drain]] `df` into the memory sink `sink` in output `mode`, and
+      * return the sink table.
+      */
+    def toMemory(df: Dataset[_], mode: String, sink: String): DataFrame = {
+      drain(df.writeStream.outputMode(mode).format("memory").queryName(sink))
+      spark.table(sink)
+    }
   }
 
   /** Shared transform: tumbling hourly window aggregate. In streaming
@@ -267,26 +353,12 @@ object Events {
     * the batch oracle states this result exactly; StreamingSpec holds
     * the incremental-arrival and self-termination properties.
     */
-  def qStreamHourly(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    // FileStreamSource consumes a DIRECTORY (the arrival contract:
-    // files land, get processed once); stage the feed into one
-    val feedDir = stageFeed(path, "graft_feed")
-    val stream = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .withWatermark("event_ts", "1 hour")
-    val q = hourlyAgg(stream).writeStream
-      .outputMode("complete").format("memory").queryName("q_stream_hourly_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_hourly_sink")
-  }
+  def qStreamHourly(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val stream = r.events(stageFeed(r.path, "graft_feed"))
+        .withWatermark("event_ts", "1 hour")
+      r.toMemory(hourlyAgg(stream), "complete", "q_stream_hourly_sink")
+    }
 
   /** D8: end-to-end streaming dedup the batch harness drives — the
     * events feed as a file stream through [[dedupWithinWatermark]]
@@ -298,26 +370,14 @@ object Events {
     * batch `SELECT DISTINCT` exactly, which is the oracle. State cost
     * at scale is bounded by the horizon, not the stream length.
     */
-  def qStreamDedup(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_dedup")
-    val stream = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-    val deduped = dedupWithinWatermark(stream,
-      Seq("user_id", "event_type"), delay = "3650 days")
-      .select(col("user_id"), col("event_type"))
-    val q = deduped.writeStream
-      .outputMode("append").format("memory").queryName("q_stream_dedup_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_dedup_sink")
-  }
+  def qStreamDedup(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val deduped = dedupWithinWatermark(
+        r.events(stageFeed(r.path, "graft_feed_dedup")),
+        Seq("user_id", "event_type"), delay = "3650 days")
+        .select(col("user_id"), col("event_type"))
+      r.toMemory(deduped, "append", "q_stream_dedup_sink")
+    }
 
   val qStreamDedupSql: String =
     """SELECT DISTINCT user_id, event_type FROM events""".stripMargin
@@ -330,27 +390,17 @@ object Events {
     * `Trigger.AvailableNow`. Complete-mode output over the whole feed
     * is arrival-invariant, so the batch join's SQL is the exact oracle.
     */
-  def qStreamEnrich(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_enrich")
-    val stream = spark.readStream.schema(schema).parquet(feedDir.toString)
-      .select(col("user_id"), col("value"))
-    val dim = Tables(spark, dir).customer
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
-    val agg = stream.join(dim, "user_id")
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("total_value"))
-    val q = agg.writeStream
-      .outputMode("complete").format("memory").queryName("q_stream_enrich_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_enrich_sink")
-  }
+  def qStreamEnrich(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val stream = r.source(stageFeed(r.path, "graft_feed_enrich"))
+        .select(col("user_id"), col("value"))
+      val dim = Tables(spark, dir).customer
+        .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
+      val agg = stream.join(dim, "user_id")
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_events"), decSum(col("value")).as("total_value"))
+      r.toMemory(agg, "complete", "q_stream_enrich_sink")
+    }
 
   /** D10: end-to-end STATEFUL sessionization the batch harness drives —
     * [[sessionizeStateful]]'s real `flatMapGroupsWithState` +
@@ -370,53 +420,43 @@ object Events {
     * 2-dp, so both land within ulps of the same 2-dp value and the
     * round recovers it bit-for-bit.
     */
-  def qStreamSessionize(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    // schema = the RAW feed schema (feed-dir files must match it);
-    // ev = the normalized view (ts as ns long) for high-water-mark math.
-    val schema = spark.read.parquet(path).schema
-    val ev = Tables.normalizeEventTs(spark.read.parquet(path))
-    val feedDir = stageFeed(path, "graft_feed_sess")
-    val gapUs = 30L * 60 * 1000000
-    val maxUs = ev.agg(max(nsToUs(col("ts")))).collect()(0).getLong(0)
-    val sentinelUs = maxUs + 2 * gapUs
-    // sentinel feed, same schema as the real one (unused columns null);
-    // ts is rendered in the RAW feed's physical type so the sentinel
-    // part-file parses under the same readStream schema.
-    // FileStreamSource lists FILES in the feed dir, so the sentinel
-    // batch is staged to a scratch dir and its part-file moved in flat.
-    val scratch = tempDir("graft_sentinel")
-    ev.select(col("user_id")).distinct()
-      .withColumn("ts",
-        Tables.tsLiteralAs(lit(sentinelUs * 1000L), schema("ts").dataType))
-      .withColumn("value", lit(0.0))
-      .select(schema.fieldNames.map(f =>
-        if (Seq("user_id", "ts", "value").contains(f)) col(f)
-        else lit(null).cast(schema(f).dataType).as(f)): _*)
-      .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-    val part = java.nio.file.Files.list(scratch).filter(p =>
-      p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    java.nio.file.Files.move(part, feedDir.resolve("zz_sentinel.parquet"))
-    val stream = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .select(col("user_id"), nsToUs(col("ts")).as("ts_us"),
-        col("value").cast("double").as("value"))
-      .as(Encoders.product[Ev])
-    val sessions = sessionizeStateful(stream, gapUs)(
-      Encoders.product[SessionOut])
-    val q = sessions.writeStream
-      .outputMode("append").format("memory").queryName("q_stream_sess_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_sess_sink")
-      .filter(col("session_start_us") < sentinelUs)
-      .select(col("user_id"), col("session_start_us"), col("n_events"),
-        round(col("total_value"), 2).as("total_value"))
-  }
+  def qStreamSessionize(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      // ev = the normalized view (ts as ns long) for high-water-mark math
+      val ev = Tables.normalizeEventTs(spark.read.parquet(r.path))
+      val feedDir = stageFeed(r.path, "graft_feed_sess")
+      val gapUs = 30L * 60 * 1000000
+      val maxUs = ev.agg(max(nsToUs(col("ts")))).collect()(0).getLong(0)
+      val sentinelUs = maxUs + 2 * gapUs
+      // sentinel feed, same schema as the real one (unused columns null);
+      // ts is rendered in the RAW feed's physical type so the sentinel
+      // part-file parses under the same readStream schema.
+      // FileStreamSource lists FILES in the feed dir, so the sentinel
+      // batch is staged to a scratch dir and its part-file moved in flat.
+      val schema = r.schema
+      val scratch = tempDir("graft_sentinel")
+      ev.select(col("user_id")).distinct()
+        .withColumn("ts",
+          Tables.tsLiteralAs(lit(sentinelUs * 1000L), schema("ts").dataType))
+        .withColumn("value", lit(0.0))
+        .select(schema.fieldNames.map(f =>
+          if (Seq("user_id", "ts", "value").contains(f)) col(f)
+          else lit(null).cast(schema(f).dataType).as(f)): _*)
+        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+      val part = java.nio.file.Files.list(scratch).filter(p =>
+        p.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      java.nio.file.Files.move(part, feedDir.resolve("zz_sentinel.parquet"))
+      val stream = Tables.normalizeEventTs(r.source(feedDir))
+        .select(col("user_id"), nsToUs(col("ts")).as("ts_us"),
+          col("value").cast("double").as("value"))
+        .as(Encoders.product[Ev])
+      val sessions = sessionizeStateful(stream, gapUs)(
+        Encoders.product[SessionOut])
+      r.toMemory(sessions, "append", "q_stream_sess_sink")
+        .filter(col("session_start_us") < sentinelUs)
+        .select(col("user_id"), col("session_start_us"), col("n_events"),
+          round(col("total_value"), 2).as("total_value"))
+    }
 
   val qStreamSessionizeSql: String =
     """WITH e AS (
@@ -435,17 +475,6 @@ object Events {
       |FROM numbered
       |GROUP BY user_id, session_id""".stripMargin
 
-  // Every streaming face scopes its shuffle width to 8 via
-  // Mining.withShufflePartitions — stateful streaming queries
-  // instantiate one state store PER shuffle partition per stateful
-  // operator per micro-batch (a stream-stream join keeps FOUR per
-  // partition), so the session's scan-sized width would spend seconds
-  // on store commits for kilobytes of state. The shared helper scopes
-  // initialPartitionNum alongside shuffle.partitions (r9): the
-  // streaming plan itself ignores AQE, but the batch sub-queries these
-  // faces run (foreachBatch folds, final state reads) would otherwise
-  // launch at the global 8×-width pre-coalesce fan-out.
-
   /** D11: end-to-end stream–stream interval join the batch harness
     * drives — E14's range-join semantics (clicks in the hour before
     * each purchase) as a real watermarked stream-stream join under
@@ -457,36 +486,24 @@ object Events {
     * sink to (purchase, n_clicks) per converting purchase; the batch
     * join's SQL is the exact oracle.
     */
-  def qStreamJoin(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_join")
-    def feed() = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .withWatermark("event_ts", "2 hours")
-    val purchases = feed().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_event_id"),
-        col("event_ts").as("p_ts"))
-    val clicks = feed().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_event_id"),
-        col("event_ts").as("c_ts"))
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"))
-    val q = joined.writeStream
-      .outputMode("append").format("memory").queryName("q_stream_join_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_join_sink")
-      .groupBy(col("p_user").as("user_id"), col("purchase_event_id"))
-      .agg(count(lit(1)).as("n_clicks"))
-  }
+  def qStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val feedDir = stageFeed(r.path, "graft_feed_join")
+      def feed() = r.events(feedDir).withWatermark("event_ts", "2 hours")
+      val purchases = feed().filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("event_id").as("purchase_event_id"),
+          col("event_ts").as("p_ts"))
+      val clicks = feed().filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("click_event_id"),
+          col("event_ts").as("c_ts"))
+      val joined = purchases.join(clicks,
+        col("p_user") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+          col("c_ts") <= col("p_ts"))
+      r.toMemory(joined, "append", "q_stream_join_sink")
+        .groupBy(col("p_user").as("user_id"), col("purchase_event_id"))
+        .agg(count(lit(1)).as("n_clicks"))
+    }
 
   val qStreamJoinSql: String =
     """WITH e AS (
@@ -546,9 +563,9 @@ object Events {
   }
 
   /** One `Trigger.AvailableNow` pass of D12's CDC fold over `feedDir`,
-    * returning the batch ids THIS pass processed. Restart recovery is
-    * split across the two durable stores exactly as a production
-    * lakehouse job splits it:
+    * drained by `r` (so inside its runner's width scope), returning the
+    * batch ids THIS pass processed. Restart recovery is split across the
+    * two durable stores exactly as a production lakehouse job splits it:
     *   - SOURCE offsets live in `checkpoint` (when given): a restarted
     *     pass consumes only files the committed offsets haven't covered
     *     — never re-reads finished input (exactly-once consumption; the
@@ -561,14 +578,11 @@ object Events {
     *     content, so at-least-once replay converges to exactly-once
     *     output.
     */
-  private[graft] def cdcPass(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, feedDir: String,
+  private[graft] def cdcPass(r: StreamRun, feedDir: java.nio.file.Path,
       stateRoot: java.nio.file.Path,
       checkpoint: Option[String]): Seq[Long] = {
-    import org.apache.spark.sql.streaming.Trigger
     val processed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val changes = Tables.normalizeEventTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir))
+    val changes = Tables.normalizeEventTs(r.source(feedDir, oneFilePerBatch = true))
       .select(col("user_id").as("key"), nsToUs(col("ts")).as("seq"),
         col("event_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
@@ -592,12 +606,7 @@ object Events {
           .parquet(stateRoot.resolve(s"v$batchId").toString)
         processed.add(batchId): Unit
       }
-      .trigger(Trigger.AvailableNow())
-    val q = checkpoint
-      .fold(writer)(c => writer.option("checkpointLocation", c)).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
+    r.drain(checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)))
     import scala.jdk.CollectionConverters._
     processed.iterator().asScala.toSeq.sorted
   }
@@ -622,18 +631,14 @@ object Events {
           .otherwise(lit("updated")).as("cdc_action"))
   }
 
-  def qStreamCdc(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = tempDir("graft_feed_cdc")
-    spark.read.parquet(path).repartition(4)
-      .write.mode("overwrite").parquet(feedDir.toString)
-    val stateRoot = tempDir("graft_cdc_state")
-    val ran = cdcPass(spark, schema, feedDir.toString, stateRoot, None)
-    require(ran.nonEmpty, "no micro-batch ran")
-    cdcFinal(spark, dir, stateRoot)
-  }
+  def qStreamCdc(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val feedDir = stageFourFiles(spark, r.path, "graft_feed_cdc")
+      val stateRoot = tempDir("graft_cdc_state")
+      val ran = cdcPass(r, feedDir, stateRoot, None)
+      require(ran.nonEmpty, "no micro-batch ran")
+      cdcFinal(spark, dir, stateRoot)
+    }
 
   /** D17 `q_stream_restart`: checkpoint-restart recovery as an
     * ORACLE-FACED query (r8 VERDICT item #6's production form, beyond
@@ -651,12 +656,8 @@ object Events {
     * D12's: recovery is only correct if it is output-invisible).
     */
   def qStreamRestart(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Mining.withShufflePartitions(spark, 8) {
-      val path = s"$dir/events.parquet"
-      val schema = spark.read.parquet(path).schema
-      val staged = tempDir("graft_restartq_stage")
-      spark.read.parquet(path).repartition(4)
-        .write.mode("overwrite").parquet(staged.toString)
+    runAvailableNow(spark, dir) { r =>
+      val staged = stageFourFiles(spark, r.path, "graft_restartq_stage")
       val parts = staged.toFile.listFiles()
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       val feedDir = tempDir("graft_restartq_feed")
@@ -664,11 +665,11 @@ object Events {
       val stateRoot = tempDir("graft_restartq_state")
       parts.take(2).foreach(f =>
         java.nio.file.Files.copy(f.toPath, feedDir.resolve(f.getName)))
-      val run1 = cdcPass(spark, schema, feedDir.toString, stateRoot, Some(ckpt))
+      val run1 = cdcPass(r, feedDir, stateRoot, Some(ckpt))
       require(run1.nonEmpty, "first pass ran no micro-batch")
       parts.drop(2).foreach(f =>
         java.nio.file.Files.copy(f.toPath, feedDir.resolve(f.getName)))
-      val run2 = cdcPass(spark, schema, feedDir.toString, stateRoot, Some(ckpt))
+      val run2 = cdcPass(r, feedDir, stateRoot, Some(ckpt))
       require(run2.nonEmpty && run2.head > run1.last,
         s"resumed pass re-ran committed batches: $run1 then $run2")
       cdcFinal(spark, dir, stateRoot)
@@ -684,32 +685,21 @@ object Events {
     * in-plan 5% error claim the oracle states as TRUE; the claim is a
     * deterministic function of this feed, oracle-checked at every scale.
     */
-  def qStreamUniques(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_uniques")
-    val stream = spark.readStream.schema(schema).parquet(feedDir.toString)
-      .select(col("event_type"), col("user_id"))
-    val agg = stream.groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), 0.02).as("n_approx"))
-    val q = agg.writeStream
-      .outputMode("complete").format("memory")
-      .queryName("q_stream_uniques_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    val approx = spark.table("q_stream_uniques_sink")
-    val exact = Tables(spark, dir).events
-      .groupBy(col("event_type"))
-      .agg(count_distinct(col("user_id")).as("n_users"))
-    exact.join(approx, "event_type")
-      .select(col("event_type"), col("n_users"),
-        (abs(col("n_approx") - col("n_users"))
-          <= col("n_users").cast("double") * 0.05).as("approx_ok"))
-  }
+  def qStreamUniques(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val stream = r.source(stageFeed(r.path, "graft_feed_uniques"))
+        .select(col("event_type"), col("user_id"))
+      val agg = stream.groupBy(col("event_type"))
+        .agg(approx_count_distinct(col("user_id"), 0.02).as("n_approx"))
+      val approx = r.toMemory(agg, "complete", "q_stream_uniques_sink")
+      val exact = Tables(spark, dir).events
+        .groupBy(col("event_type"))
+        .agg(count_distinct(col("user_id")).as("n_users"))
+      exact.join(approx, "event_type")
+        .select(col("event_type"), col("n_users"),
+          (abs(col("n_approx") - col("n_users"))
+            <= col("n_users").cast("double") * 0.05).as("approx_ok"))
+    }
 
   val qStreamUniquesSql: String =
     """SELECT event_type,
@@ -736,25 +726,12 @@ object Events {
     * with D7 (tumbling) and D10 (session) every batch windowing face
     * has a live streaming twin.
     */
-  def qStreamSliding(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_sliding")
-    val stream = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .withWatermark("event_ts", "1 hour")
-    val q = slidingAgg(stream).writeStream
-      .outputMode("complete").format("memory")
-      .queryName("q_stream_sliding_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_sliding_sink")
-  }
+  def qStreamSliding(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val stream = r.events(stageFeed(r.path, "graft_feed_sliding"))
+        .withWatermark("event_ts", "1 hour")
+      r.toMemory(slidingAgg(stream), "complete", "q_stream_sliding_sink")
+    }
 
   /** D15: end-to-end stream-stream LEFT OUTER interval join — the
     * join mode real CDC/attribution consumers hit first: every
@@ -780,46 +757,34 @@ object Events {
     * null row under ANY arrival order, so the batch LEFT JOIN over the
     * same horizon states the result exactly.
     */
-  def qStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
-    val feedDir = stageFeed(path, "graft_feed_left_join")
-    def feed() = Tables.normalizeEventTs(
-        spark.readStream.schema(schema).parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .withWatermark("event_ts", "2 hours")
-    val purchases = feed().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_event_id"),
-        col("event_ts").as("p_ts"))
-    val clicks = feed().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_event_id"),
-        col("event_ts").as("c_ts"))
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"),
-      "left_outer")
-    val q = joined.writeStream
-      .outputMode("append").format("memory")
-      .queryName("q_stream_left_join_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    // closed horizon from the static table (1-row aggregate): the MIN
-    // of the two sides' max event times − (watermark delay + margin)
-    val mx = Tables(spark, dir).events.agg(
-      max(when(col("event_type") === "purchase", nsToUs(col("ts")))).as("mp"),
-      max(when(col("event_type") === "click", nsToUs(col("ts")))).as("mc")).head
-    val horizonUs =
-      math.min(mx.getLong(0), mx.getLong(1)) - (2L + 1L) * 3600L * 1000000L
-    spark.table("q_stream_left_join_sink")
-      .filter(unix_micros(col("p_ts")) <= horizonUs)
-      .groupBy(col("p_user").as("user_id"), col("purchase_event_id"))
-      .agg(count(col("click_event_id")).as("n_clicks"))
-  }
+  def qStreamLeftJoin(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val feedDir = stageFeed(r.path, "graft_feed_left_join")
+      def feed() = r.events(feedDir).withWatermark("event_ts", "2 hours")
+      val purchases = feed().filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("event_id").as("purchase_event_id"),
+          col("event_ts").as("p_ts"))
+      val clicks = feed().filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("click_event_id"),
+          col("event_ts").as("c_ts"))
+      val joined = purchases.join(clicks,
+        col("p_user") === col("c_user") &&
+          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+          col("c_ts") <= col("p_ts"),
+        "left_outer")
+      val sink = r.toMemory(joined, "append", "q_stream_left_join_sink")
+      // closed horizon from the static table (1-row aggregate): the MIN
+      // of the two sides' max event times − (watermark delay + margin)
+      val mx = Tables(spark, dir).events.agg(
+        max(when(col("event_type") === "purchase", nsToUs(col("ts")))).as("mp"),
+        max(when(col("event_type") === "click", nsToUs(col("ts")))).as("mc")).head
+      val horizonUs =
+        math.min(mx.getLong(0), mx.getLong(1)) - (2L + 1L) * 3600L * 1000000L
+      sink
+        .filter(unix_micros(col("p_ts")) <= horizonUs)
+        .groupBy(col("p_user").as("user_id"), col("purchase_event_id"))
+        .agg(count(col("click_event_id")).as("n_clicks"))
+    }
 
   /** D16 `q_stream_late`: the LATE-DATA AUDIT — what a watermark
     * actually does to a real feed. The events table arrives in three
@@ -862,63 +827,52 @@ object Events {
     * oracle's drop rule. (dbt source freshness — A20 — is the batch
     * cousin: both quantify arrival lag against a declared tolerance.)
     */
-  def qStreamLate(spark: SparkSession, dir: String): DataFrame = graft.operators.Mining.withShufflePartitions(
-      spark, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val path = s"$dir/events.parquet"
-    val raw = spark.read.parquet(path)
-    val schema = raw.schema
-    val feedDir = tempDir("graft_feed_late")
-    def stageWave(df: org.apache.spark.sql.DataFrame, n: Int, mtimeMs: Long): Unit = {
-      val tmp = tempDir(s"graft_late_wave$n")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val s = java.nio.file.Files.list(tmp)
-        try {
-          val it = s.iterator()
-          var found: java.nio.file.Path = null
-          while (it.hasNext && found == null) {
-            val f = it.next()
-            if (f.getFileName.toString.endsWith(".parquet")) found = f
-          }
-          require(found != null, s"stageWave: no parquet part under $tmp")
-          found
-        } finally s.close()
+  def qStreamLate(spark: SparkSession, dir: String): DataFrame =
+    runAvailableNow(spark, dir) { r =>
+      val raw = spark.read.parquet(r.path)
+      val feedDir = tempDir("graft_feed_late")
+      def stageWave(df: DataFrame, n: Int, mtimeMs: Long): Unit = {
+        val tmp = tempDir(s"graft_late_wave$n")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = {
+          val s = java.nio.file.Files.list(tmp)
+          try {
+            val it = s.iterator()
+            var found: java.nio.file.Path = null
+            while (it.hasNext && found == null) {
+              val f = it.next()
+              if (f.getFileName.toString.endsWith(".parquet")) found = f
+            }
+            require(found != null, s"stageWave: no parquet part under $tmp")
+            found
+          } finally s.close()
+        }
+        val dst = feedDir.resolve(f"part-$n%05d.parquet")
+        java.nio.file.Files.copy(part, dst)
+        java.nio.file.Files.setLastModifiedTime(dst,
+          java.nio.file.attribute.FileTime.fromMillis(mtimeMs)): Unit
       }
-      val dst = feedDir.resolve(f"part-$n%05d.parquet")
-      java.nio.file.Files.copy(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtimeMs)): Unit
+      val now = System.currentTimeMillis()
+      stageWave(raw.filter(col("event_id") % 7 =!= 0), 0, now - 60000)
+      // 1-row aggregate: the filler must outrun every real event time
+      val maxNs = Tables.normalizeEventTs(raw)
+        .agg(max(col("ts"))).head.getLong(0)
+      val filler = spark.range(1).select(r.schema.fields.map { f =>
+        (f.name match {
+          case "ts" =>
+            Tables.tsLiteralAs(lit(maxNs + 8640000000000000L), f.dataType)
+          case "event_id" | "user_id" => lit(-1L).cast(f.dataType)
+          case "event_type" => lit("__filler").cast(f.dataType)
+          case "value" => lit(0.0).cast(f.dataType)
+          case _ => lit("").cast(f.dataType)
+        }).as(f.name)
+      }: _*)
+      stageWave(filler, 1, now - 40000)
+      stageWave(raw.filter(col("event_id") % 7 === 0), 2, now - 20000)
+      val stream = r.events(feedDir, oneFilePerBatch = true)
+        .withWatermark("event_ts", "2 hours")
+      r.toMemory(hourlyAgg(stream), "append", "q_stream_late_sink")
     }
-    val now = System.currentTimeMillis()
-    stageWave(raw.filter(col("event_id") % 7 =!= 0), 0, now - 60000)
-    // 1-row aggregate: the filler must outrun every real event time
-    val maxNs = Tables.normalizeEventTs(raw)
-      .agg(max(col("ts"))).head.getLong(0)
-    val filler = spark.range(1).select(schema.fields.map { f =>
-      (f.name match {
-        case "ts" =>
-          Tables.tsLiteralAs(lit(maxNs + 8640000000000000L), f.dataType)
-        case "event_id" | "user_id" => lit(-1L).cast(f.dataType)
-        case "event_type" => lit("__filler").cast(f.dataType)
-        case "value" => lit(0.0).cast(f.dataType)
-        case _ => lit("").cast(f.dataType)
-      }).as(f.name)
-    }: _*)
-    stageWave(filler, 1, now - 40000)
-    stageWave(raw.filter(col("event_id") % 7 === 0), 2, now - 20000)
-    val stream = Tables.normalizeEventTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(feedDir.toString))
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .withWatermark("event_ts", "2 hours")
-    val q = hourlyAgg(stream).writeStream
-      .outputMode("append").format("memory").queryName("q_stream_late_sink")
-      .trigger(Trigger.AvailableNow()).start()
-    try require(q.awaitTermination(300000),
-      "AvailableNow run did not self-terminate")
-    finally if (q.isActive) q.stop()
-    spark.table("q_stream_late_sink")
-  }
 
   val qStreamLateSql: String =
     """WITH e AS (
@@ -969,24 +923,12 @@ object Events {
     * checkpoint restarts).
     */
   def qStreamBackpressure(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Mining.withShufflePartitions(spark, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      val path = s"$dir/events.parquet"
-      val schema = spark.read.parquet(path).schema
-      val feedDir = tempDir("graft_feed_bp")
-      spark.read.parquet(path).repartition(4)
-        .write.mode("overwrite").parquet(feedDir.toString)
-      val stream = Tables.normalizeEventTs(
-          spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feedDir.toString))
-        .withColumn("event_ts", nsToTimestamp(col("ts")))
+    runAvailableNow(spark, dir) { r =>
+      val feedDir = stageFourFiles(spark, r.path, "graft_feed_bp")
+      val stream = r.events(feedDir, oneFilePerBatch = true)
         .withWatermark("event_ts", "1 hour")
-      val q = hourlyAgg(stream).writeStream
-        .outputMode("complete").format("memory").queryName("q_stream_bp_sink")
-        .trigger(Trigger.AvailableNow()).start()
-      try require(q.awaitTermination(300000),
-        "AvailableNow run did not self-terminate")
-      finally if (q.isActive) q.stop()
+      val q = r.drain(hourlyAgg(stream).writeStream
+        .outputMode("complete").format("memory").queryName("q_stream_bp_sink"))
       val data = q.recentProgress.filter(_.numInputRows > 0)
       val nBatches = data.length.toLong
       val rowsIn = data.map(_.numInputRows).sum

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -55,16 +54,9 @@ object ScalePlans {
     val thresholdMb: Option[Int] =
       args.lift(2).filter(_ != "-").map(_.toInt)
     val append = args.length > 3 && args(3) == "append"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    var builder = graft.core.Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus)
-    thresholdMb.foreach { mb =>
-      builder = builder.config("spark.sql.autoBroadcastJoinThreshold",
-        (mb.toLong << 20).toString)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.localSession()
+    thresholdMb.foreach(mb => spark.conf.set(
+      "spark.sql.autoBroadcastJoinThreshold", (mb.toLong << 20).toString))
 
     // The executed (post-AQE-finalization) plan is only observable
     // after the job finishes; a listener keeps the QueryExecution of

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev harness: synthesize an N×-replicated copy of a testdata scale
@@ -38,11 +38,7 @@ object ScaleUp {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 8
     val distinctMode = args.length > 3 && args(3) == "distinct"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = graft.core.Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.localSession()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
 

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the skewed sibling of a ScaleUp directory: every table is
@@ -30,11 +29,7 @@ object SkewUp {
     val srcDir = args(0)
     val outDir = args(1)
     val hotMod = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = graft.core.Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.localSession()
 
     new java.io.File(outDir).mkdirs()
     val tables = Seq("region", "nation", "customer", "supplier", "part",

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev-only streaming decomposition probe (r11 VERDICT #4): runs the
@@ -20,11 +19,7 @@ object StreamProbe {
     val dir = args(0)
     val outFile = Paths.get(args(1))
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString).toInt
-    val spark = graft.core.Graft.tune(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.localSession()
     if (outFile.getParent != null) Files.createDirectories(outFile.getParent)
     def append(line: String): Unit =
       Files.writeString(outFile, line + "\n",

@@ -313,8 +313,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_winsorize: executes inside the ×1 fan-out scope, serves a bounded checkpoint") {
-    // r12: the face now runs entirely inside withStockFanout and
-    // eagerly checkpoints its 7-row result, so the returned plan is the
+    // The face runs entirely inside a base-width withShuffleWidth scope
+    // and eagerly checkpoints its 7-row result, so the returned plan is the
     // materialized RDD (the window-over-cells shape executed behind it
     // is value-pinned by the oracle and by the r11 history). Pin the
     // scope instead: the served RDD's partition count must not exceed
@@ -371,13 +371,13 @@ class PlanSpec extends AnyFunSuite {
     // initialPartitionNum, and when that conf is set Spark ignores
     // shuffle.partitions for the pre-coalesce width — so scoping only
     // shuffle.partitions is silently inert. Pin that a plan EXECUTED
-    // inside the scope launches its exchanges at the scoped width, and
-    // that both confs restore afterwards.
+    // inside an explicit-width Graft.withShuffleWidth scope launches its
+    // exchanges at the scoped width, and that both confs restore afterwards.
     import org.apache.spark.sql.functions.col
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     val before = keys.map(spark.conf.getOption)
-    val widths = graft.operators.Mining.withShufflePartitions(spark, 8) {
+    val widths = graft.core.Graft.withShuffleWidth(spark, Some(8)) {
       val agg = spark.range(1000).toDF("n").groupBy(col("n") % 10).count()
       agg.collect()
       val finalPlan = agg.queryExecution.executedPlan.toString
@@ -397,15 +397,16 @@ class PlanSpec extends AnyFunSuite {
     // RETURNS initialPartitionNum under AQE coalescing, so a scope that
     // reads it would set the conf to its own current value — a silent
     // no-op (caught by task-count probing: 1219 tasks vs 199). Pin that
-    // a plan EXECUTED inside the scope launches exchanges at the base
-    // shuffle.partitions, not the global ×8 fan-out.
+    // a plan EXECUTED inside a default-width Graft.withShuffleWidth scope
+    // launches exchanges at the base shuffle.partitions, not the global
+    // ×8 fan-out.
     import org.apache.spark.sql.functions.col
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val before = spark.conf.getOption(key)
     val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(before.exists(_.toInt > base),
       "precondition: the session must carry the global ×8 fan-out")
-    val widths = graft.operators.Mining.withStockFanout(spark) {
+    val widths = graft.core.Graft.withShuffleWidth(spark) {
       val agg = spark.range(1000).toDF("n").groupBy(col("n") % 10).count()
       agg.collect()
       val finalPlan = agg.queryExecution.executedPlan.toString
@@ -416,7 +417,7 @@ class PlanSpec extends AnyFunSuite {
     assert(widths.nonEmpty, "no hash-partitioned exchange found in the executed plan")
     assert(widths.forall(_ == base),
       s"exchanges planned at widths $widths, not the base $base — " +
-        "withStockFanout is inert")
+        "the base-width scope is inert")
     assert(spark.conf.getOption(key) == before, "conf not restored after the scope")
   }
 

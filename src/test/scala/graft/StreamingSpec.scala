@@ -354,7 +354,6 @@ class StreamingSpec extends AnyFunSuite {
     // and land on exactly the uninterrupted run's output.
     import java.nio.file.Files
     val dir = "/root/testdata/sf0.001"
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // stage the 4-part feed; reveal it in two halves around the "kill"
     val staged = Files.createTempDirectory("graft_restart_staged")
     spark.read.parquet(s"$dir/events.parquet").repartition(4)
@@ -365,27 +364,27 @@ class StreamingSpec extends AnyFunSuite {
     val feed = Files.createTempDirectory("graft_restart_feed")
     val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
     val state = Files.createTempDirectory("graft_restart_state")
+    def cdcPass(stateRoot: java.nio.file.Path, checkpoint: Option[String]) =
+      Events.runAvailableNow(spark, dir)(
+        Events.cdcPass(_, feed, stateRoot, checkpoint))
     parts.take(2).foreach(f => Files.copy(f.toPath, feed.resolve(f.getName)))
     // run 1 consumes the visible half, then the job "dies" (query gone;
     // checkpoint offsets and v* state snapshots survive on disk)
-    val run1 = graft.streaming.Events.cdcPass(
-      spark, schema, feed.toString, state, Some(ckpt))
+    val run1 = cdcPass(state, Some(ckpt))
     assert(run1 == Seq(0L, 1L), s"run1 processed $run1")
     // the rest of the feed lands while the job is down
     parts.drop(2).foreach(f => Files.copy(f.toPath, feed.resolve(f.getName)))
     // run 2 resumes from the SAME checkpoint: batch ids continue and
     // ONLY the two new files are consumed — committed input is never
     // re-read (exactly-once source consumption)
-    val run2 = graft.streaming.Events.cdcPass(
-      spark, schema, feed.toString, state, Some(ckpt))
+    val run2 = cdcPass(state, Some(ckpt))
     assert(run2 == Seq(2L, 3L), s"run2 processed $run2 — offsets did not resume")
     // the restarted pipeline's final state equals one uninterrupted
     // streaming run over the full feed (batch-split invariance of the
     // latest-wins fold); qStreamCdc's own spec ties that to the batch
     // E45 oracle, closing restart == batch transitively
     val soloState = Files.createTempDirectory("graft_restart_solo")
-    graft.streaming.Events.cdcPass(
-      spark, schema, feed.toString, soloState, None)
+    cdcPass(soloState, None)
     def finalState(root: java.nio.file.Path) = spark.read.parquet(
       root.resolve(s"v${graft.streaming.Events.latestStateVersion(root)}").toString)
     val a = finalState(state)
@@ -395,8 +394,7 @@ class StreamingSpec extends AnyFunSuite {
       "restarted state diverged from the uninterrupted run")
     // a further resume with nothing new must not touch committed ids
     // (an empty catch-up batch, if any, may fold v-latest over itself)
-    val run3 = graft.streaming.Events.cdcPass(
-      spark, schema, feed.toString, state, Some(ckpt))
+    val run3 = cdcPass(state, Some(ckpt))
     assert(run3.forall(_ >= 4L), s"run3 reprocessed $run3")
     val a2 = finalState(state)
     assert(a2.exceptAll(b).count() == 0 && b.exceptAll(a2).count() == 0,
@@ -524,5 +522,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.agg(sum("n_events")).head.getLong(0) ==
       ev.count() - dropped)
     streamed.unpersist()
+  }
+
+  test("runAvailableNow: a failing stream propagates and leaves no stream or width") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val dir = "/root/testdata/sf0.001"
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    val before = keys.map(spark.conf.getOption)
+    val err = intercept[StreamingQueryException] {
+      Events.runAvailableNow(spark, dir) { r =>
+        assert(keys.map(k => spark.conf.get(k)) == Seq("8", "8"), "runner did not scope the width")
+        val feed = java.nio.file.Files.createTempDirectory("graft_failing_feed")
+        java.nio.file.Files.copy(java.nio.file.Paths.get(r.path),
+          feed.resolve("events.parquet"))
+        r.drain(r.source(feed).writeStream.foreachBatch {
+          (_: DataFrame, batchId: Long) =>
+            throw new IllegalStateException(s"injected failure in batch $batchId")
+        })
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("injected failure"))),
+      s"the foreachBatch error was not propagated: $err")
+    assert(spark.streams.active.isEmpty, "the failed stream is still active")
+    assert(keys.map(spark.conf.getOption) == before, "width confs not restored")
+    // warm-up then timed run, as Bench and the benchmark harness call a
+    // face: the second run in the same session returns the same table
+    def hourly() = Events.qStreamHourly(spark, dir).collect().map(_.toString).sorted.toSeq
+    val warm = hourly()
+    assert(warm.nonEmpty)
+    assert(hourly() == warm)
   }
 }

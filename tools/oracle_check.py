@@ -43,8 +43,18 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 def main(outdir: str, sfdir: str, timeout: float = 0.0,
          scale_oracles: bool = False, stage_oracles: bool = False,
          only=None, skip=None) -> int:
+    import atexit
     import os
+    import shutil
+    import tempfile
     import threading
+
+    # One spill directory per checker process, removed at exit: DuckDB's
+    # temp block files carry no per-process namespace, so concurrent
+    # checkers sharing a directory delete each other's spill blocks
+    # (IOException in one, a silently wrong result in the other).
+    spill_dir = tempfile.mkdtemp(prefix=f"duckdb_spill_{os.getpid()}_")
+    atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
 
     def connect():
         c = duckdb.connect()
@@ -54,7 +64,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
         # dir turns that into disk-backed execution (or a per-query
         # OOM error recorded as FAIL) instead of a dead checker.
         c.execute(f"SET memory_limit='{os.environ.get('GRAFT_DUCKDB_MEM', '20GB')}'")
-        c.execute("SET temp_directory='/tmp/duckdb_spill'")
+        c.execute(f"SET temp_directory='{spill_dir}'")
         for t in TABLES:
             # driver testdata is one file per table; graft.tools.ScaleUp
             # writes Spark-style directories of part files — accept both
