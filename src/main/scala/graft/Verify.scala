@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,7 +32,7 @@ object Verify {
           val df = fn(spark, sfDir)
           (if (dumpParts) df else df.coalesce(1))
             .write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         } finally {
           // same block hygiene as Bench (r11): faces that eagerly

@@ -74,6 +74,28 @@ object Graft {
     // broadcast; SF-scaling tables flip to SMJ exactly when they should.
     .config("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     .config("spark.ui.enabled", "false")
+    // Fork-free `file:` I/O. Without the native libhadoop, Hadoop's local
+    // filesystem forks `chmod` on every create and mkdirs, and the
+    // FileContext API that Spark's default checkpoint manager uses forks
+    // `readlink` on every status lookup. On 4 vCPUs one `stream`
+    // benchmark run forked 1,488 `readlink` and 468 `chmod` (state-store
+    // commits took 2.31 s of a 3.1 s pass), and one `build` run 1,759
+    // `chmod`. The FileSystem-API manager renames without `readlink`,
+    // and the `fs.file.impl` below sets modes through NIO; `.crc` files
+    // and Spark's checkpoint checksums are unchanged, and HDFS/S3 paths
+    // are untouched.
+    //
+    // The state-store provider stays Spark's HDFS-backed default.
+    // RocksDB with changelog checkpointing, measured before this fix
+    // (one traced `stream` run, 4 vCPUs), was slower: pass 3.68 s vs
+    // 2.97 s, state commits 2.22 s vs 2.25 s — the forks were the floor,
+    // not the provider. StreamingSpec pins provider invariance, so a
+    // cluster with state beyond the heap can still switch by conf.
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.sources.ForkFreeLocalFileSystem].getName)
 
   /** Runs `body` with the shuffle WIDTH scoped to `width` — BOTH
     * `spark.sql.shuffle.partitions` AND

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Scratch.tempDir
 import graft.sources.Tables
 
 /** Source/sink interop beyond parquet — corpus pipelines exchange JSON
@@ -13,23 +14,6 @@ import graft.sources.Tables
   * numbers are sink+source cost, not query cost.
   */
 object Interop {
-
-  /** Fresh scratch dir, deleted recursively when the JVM exits — the
-    * faces land real files per invocation, and repeated bench/test runs
-    * must not leak disk across a long session.
-    */
-  private def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
 
   /** E32: JSONL sink + schema-first source round-trip. The documents
     * table is written as JSON Lines and read back with an EXPLICIT
@@ -44,7 +28,7 @@ object Interop {
     */
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    val out = tempDir("graft_jsonl") + "/documents"
+    val out = s"${tempDir("graft_jsonl")}/documents"
     docs.write.mode("overwrite").json(out)
     val back = spark.read.schema(docs.schema).json(out)
     back.groupBy(col("source"))
@@ -78,7 +62,7 @@ object Interop {
     val o = Tables(spark, dir).orders
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"), to_date(col("o_orderdate")).as("od"))
-    val out = tempDir("graft_csv") + "/orders"
+    val out = s"${tempDir("graft_csv")}/orders"
     o.write.mode("overwrite").option("header", "true").csv(out)
     val back = spark.read
       .schema("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
@@ -121,7 +105,7 @@ object Interop {
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"),
         nsToUs(col("ts")).as("t_us"), col("value"))
-    val out = tempDir("graft_orc") + "/events"
+    val out = s"${tempDir("graft_orc")}/events"
     ev.write.mode("overwrite").orc(out)
     spark.read.orc(out)
       .groupBy(col("event_type"))
@@ -157,7 +141,7 @@ object Interop {
     * either direction hash-mismatches the gate.
     */
   def shardRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = tempDir("graft_shards")
+    val out = tempDir("graft_shards").toString
     graft.sources.ShardWriter.write(
       Tables(spark, dir).documents
         .select(col("doc_id"), col("text").cast("binary").as("payload")),
@@ -183,7 +167,7 @@ object Interop {
     */
   def jsonlCorrupt(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Paths.get(tempDir("graft_badjsonl"))
+    val tmp = tempDir("graft_badjsonl")
     val lines = (1 to 8).map(i => s"""{"id":$i,"v":"ok$i"}""") ++
       Seq("""{"id":9,"v":unterminated""", """not json at all""")
     java.nio.file.Files.write(tmp.resolve("feed.jsonl"),
@@ -215,7 +199,7 @@ object Interop {
     * table, so layout + pruning must be lossless.
     */
   def partitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = tempDir("graft_part") + "/fact"
+    val out = s"${tempDir("graft_part")}/fact"
     val li = Tables(spark, dir).lineitem
       .withColumn("ship_month",
         date_format(col("l_shipdate"), "yyyy-MM"))
@@ -254,7 +238,7 @@ object Interop {
     * Interop face, the timing is a write+read round trip by design.
     */
   def zorderScan(spark: SparkSession, dir: String): DataFrame = {
-    val out = tempDir("graft_zorder") + "/orders"
+    val out = s"${tempDir("graft_zorder")}/orders"
     val o = Tables(spark, dir).orders
       .withColumn("ck_bucket", (col("o_custkey") % 256).cast("long"))
       .withColumn("day_bucket",
@@ -303,7 +287,7 @@ object Interop {
     val suffix = java.lang.Long.toHexString(System.nanoTime())
     val liT = s"graft_bkt_li_$suffix"
     val oT = s"graft_bkt_o_$suffix"
-    val base = tempDir("graft_bucket")
+    val base = tempDir("graft_bucket").toString
     t.lineitem.select(col("l_orderkey"), col("l_extendedprice"))
       .repartition(buckets, col("l_orderkey"))
       .write.bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
@@ -333,7 +317,7 @@ object Interop {
     */
   def bucketJoin(spark: SparkSession, dir: String): DataFrame = {
     val (joined, cleanup) = bucketedJoinPair(spark, dir)
-    val out = tempDir("graft_bucket_res") + "/result"
+    val out = s"${tempDir("graft_bucket_res")}/result"
     try joined.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"),
         graft.functions.Fns.decSum(col("l_extendedprice")).as("revenue"))

@@ -64,25 +64,18 @@ object ShardWriter {
     */
   private[sources] lazy val taskConf = new Configuration()
 
-  /** Resolve the FileSystem for `p`, with client-side checksumming off:
-    * the shard format carries fixed-length records (corruption surfaces
-    * as EOF/length errors) and stores that need integrity (HDFS, S3)
-    * enforce it below this API — while Hadoop's LocalFileSystem would
-    * otherwise shadow every shard with a .crc file and checksum every
-    * 512-byte chunk (a measured 5× slowdown on the round-trip face).
-    */
-  private[sources] def fsFor(p: Path, conf: Configuration): FileSystem = {
-    val fs = p.getFileSystem(conf)
-    fs.setWriteChecksum(false)
-    fs.setVerifyChecksum(false)
-    fs
-  }
-
-  /** Open a write stream through `fs` — with a `java.io` fast path for
-    * the local scheme: absent libhadoop, `RawLocalFileSystem.create`
-    * applies permissions by FORKING a chmod per file (~10 ms each, 4 s
-    * across one sf0.1 shard layout). Non-local schemes use the plain
-    * Hadoop stream.
+  /** Open a write stream through `fs`, with a `java.io` fast path for
+    * the local scheme. The shard format carries fixed-length records
+    * (corruption surfaces as EOF/length errors), and Hadoop's
+    * LocalFileSystem would shadow every shard with a .crc file and
+    * checksum every 512-byte chunk (a measured 5× slowdown on the
+    * round-trip face). Stores that need integrity (HDFS, S3) enforce it
+    * below this API, so non-local schemes use the plain Hadoop stream.
+    *
+    * Checksumming is NOT switched off on `fs` itself: `getFileSystem`
+    * returns the JVM-wide cached instance, so `setWriteChecksum(false)`
+    * there would silently drop the .crc files of every later local
+    * write in the JVM, streaming checkpoints included.
     */
   private[sources] def createStream(fs: FileSystem, p: Path): java.io.OutputStream =
     fs match {
@@ -112,8 +105,8 @@ object ShardWriter {
       .prefixSum(sized, Seq(col("doc_id")), "n_bytes", "start_byte")
       .withColumn("shard_id", call_function("div", col("start_byte"), lit(shardBytes)))
     val dirPath = new Path(dir)
-    fsFor(dirPath,
-      docs.sparkSession.sparkContext.hadoopConfiguration).mkdirs(dirPath)
+    dirPath.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
+      .mkdirs(dirPath)
     // repartition BY shard_id: each reducer owns complete shards, so
     // file creation is race-free by construction
     assigned
@@ -121,7 +114,7 @@ object ShardWriter {
       .sortWithinPartitions(col("shard_id"), col("start_byte"))
       .select(col("shard_id"), col("doc_id"), col("payload"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        lazy val fs = fsFor(new Path(dir), taskConf)
+        lazy val fs = new Path(dir).getFileSystem(taskConf)
         var out: DataOutputStream = null
         var current = -1L
         try {
@@ -186,8 +179,8 @@ private[sources] class ShardScan(path: String, required: StructType)
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     val p = new Path(path)
-    val fs = ShardWriter.fsFor(p, org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(
+      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Array.empty
     else fs.listStatus(p)
       .filter(st => st.isFile && st.getPath.getName.startsWith("shard-"))
@@ -215,7 +208,7 @@ private[sources] class ShardPartitionReader(file: String, fields: Array[String])
     extends PartitionReader[InternalRow] {
   private val (in: DataInputStream, fileLen: Long) = {
     val p = new Path(file)
-    val fs = ShardWriter.fsFor(p, ShardWriter.taskConf)
+    val fs = p.getFileSystem(ShardWriter.taskConf)
     (new DataInputStream(new BufferedInputStream(
       ShardWriter.openStream(fs, p), 1 << 16)),
       fs.getFileStatus(p).getLen)

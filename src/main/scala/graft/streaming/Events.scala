@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.types.StructType
 import graft.core.Graft
 import graft.functions.Fns._
+import graft.sources.Scratch.tempDir
 import graft.sources.Tables
 
 /** Event-time operators (SURVEY §2 D-block). The transforms are written
@@ -16,23 +17,6 @@ import graft.sources.Tables
   * incrementally-loaded feed.
   */
 object Events {
-
-  /** Fresh scratch dir, deleted recursively at JVM exit — streaming
-    * faces stage real feed files per invocation; repeated bench/test
-    * runs must not leak disk (same discipline as Interop.tempDir).
-    */
-  private def tempDir(prefix: String): java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-    p
-  }
 
   /** Stage the events feed into a fresh directory for FileStreamSource
     * consumption. The feed may be a single parquet FILE (the driver's
@@ -91,12 +75,15 @@ object Events {
     * Width 8: stateful streaming queries instantiate one state store PER
     * shuffle partition per stateful operator per micro-batch (a
     * stream-stream join keeps FOUR per partition), so the session's
-    * scan-sized width would spend seconds on store commits for kilobytes
-    * of state. The scope covers initialPartitionNum too: the streaming
-    * plan itself ignores AQE, but the batch work the faces run eagerly
-    * inside it (staging writes, sentinel and horizon aggregates,
-    * foreachBatch folds) would otherwise launch at the global ×8
-    * pre-coalesce fan-out.
+    * scan-sized width would schedule and commit that many stores, each
+    * commit writing its own delta and checksum files, for kilobytes of
+    * state. (The seconds per batch once put down to the store count were
+    * per-file `chmod`/`readlink` process forks, which
+    * [[graft.core.Graft.tune]] removes.) The scope covers
+    * initialPartitionNum too: the streaming plan itself ignores AQE, but
+    * the batch work the faces run eagerly inside it (staging writes,
+    * sentinel and horizon aggregates, foreachBatch folds) would otherwise
+    * launch at the global ×8 pre-coalesce fan-out.
     */
   private[graft] def runAvailableNow[A](spark: SparkSession, dir: String)(
       face: StreamRun => A): A =

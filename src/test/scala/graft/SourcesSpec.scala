@@ -146,4 +146,86 @@ class SourcesSpec extends AnyFunSuite {
     intercept[org.apache.spark.SparkException](
       back.select("doc_id").collect())
   }
+
+  test("ForkFreeLocalFileSystem: create and mkdirs give the stock POSIX modes") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import java.nio.file.attribute.PosixFilePermissions
+    val root = Files.createTempDirectory("fs_parity")
+    def modes(fs: RawLocalFileSystem, arm: String): Seq[String] = {
+      fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+      Seq("644", "600", "755", "700").flatMap { m =>
+        val perm = new FsPermission(m)
+        val file = new Path(s"$root/$arm-file-$m")
+        val subdir = new Path(s"$root/$arm-dir-$m")
+        fs.create(file, perm, true, 4096, 1.toShort, 1L << 20, null).close()
+        assert(fs.mkdirs(subdir, perm))
+        Seq(file, subdir).map(p => PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(fs.pathToFile(p).toPath)))
+      }
+    }
+    val stock = modes(new RawLocalFileSystem, "stock")
+    val forkFree = modes(new graft.sources.ForkFreeLocalFileSystem.Raw, "forkfree")
+    assert(forkFree == stock)
+    // none of the four modes is narrowed by the default 022 umask
+    assert(stock == Seq("rw-r--r--", "rw-r--r--", "rw-------", "rw-------",
+      "rwxr-xr-x", "rwxr-xr-x", "rwx------", "rwx------"))
+  }
+
+  test("ForkFreeLocalFileSystem: a sticky-bit mode takes the stock chmod path") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val sticky = Files.createTempDirectory("fs_sticky")
+    val fs = new graft.sources.ForkFreeLocalFileSystem.Raw
+    fs.initialize(java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    fs.setPermission(new Path(sticky.toString), new FsPermission("1755"))
+    // NIO cannot set the sticky bit; only the stock `chmod` path does
+    val mode = Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] & 0x3ff
+    assert(mode == Integer.parseInt("1755", 8), f"mode $mode%o")
+  }
+
+  test("session file: scheme is the fork-free filesystem and keeps .crc files after a shard write") {
+    val out = Files.createTempDirectory("crc_after_shards")
+    val docs = Tables(spark, dir).documents
+      .select(col("doc_id"), col("text").cast("binary").as("payload"))
+    graft.sources.ShardWriter.write(docs, out.resolve("shards").toString)
+    val fs = new org.apache.hadoop.fs.Path(out.toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[graft.sources.ForkFreeLocalFileSystem], fs.getClass.getName)
+    // the shard writer must not switch checksums off on the JVM-wide
+    // cached instance: later parquet writes still get their .crc files
+    docs.select(col("doc_id")).write.parquet(out.resolve("ids").toString)
+    val names = new java.io.File(out.resolve("ids").toString).list().toSeq
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.nonEmpty)
+    parts.foreach(n => assert(names.contains(s".$n.crc"), s"no .crc for $n in $names"))
+  }
+
+  test("fork guard: a stateful stream and a parquet write fork no chmod or readlink") {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = Files.createTempFile("forks", ".jfr")
+    val commands =
+      try {
+        rec.start()
+        // a known fork proves the recording sees process starts at all
+        new ProcessBuilder("true").start().waitFor()
+        assert(graft.streaming.Events.qStreamHourly(spark, dir).count() > 0)
+        val out = Files.createTempDirectory("fork_guard").resolve("orders")
+        Tables(spark, dir).orders.write.parquet(out.toString)
+        rec.stop()
+        rec.dump(dump)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+          .map(_.getString("command"))
+      } finally {
+        rec.close()
+        Files.deleteIfExists(dump)
+      }
+    val programs = commands.map(_.trim.split("\\s+").head.split('/').last)
+    assert(programs.contains("true"), s"recording saw no process start: $commands")
+    val forks = programs.filter(Set("chmod", "readlink"))
+      .groupBy(identity).map { case (p, ps) => p -> ps.size }
+    assert(forks.isEmpty)
+  }
 }

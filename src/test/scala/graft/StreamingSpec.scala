@@ -555,4 +555,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(warm.nonEmpty)
     assert(hourly() == warm)
   }
+
+  test("state deltas under an explicit checkpointLocation keep .crc and Spark checksum files") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    implicit val sqlCtx = spark.sqlContext
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt_checksums")
+    val mem = MemoryStream[(Timestamp, String, Double)]
+    val q = Events.hourlyAgg(mem.toDF().toDF("event_ts", "event_type", "value")
+        .withWatermark("event_ts", "10 minutes"))
+      .writeStream.outputMode("complete").format("memory").queryName("ckpt_checksums_out")
+      .option("checkpointLocation", ckpt.toString).start()
+    try {
+      mem.addData((ts(0), "click", 1.0), (ts(30), "view", 2.0))
+      q.processAllAvailable()
+      mem.addData((ts(90), "click", 3.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val walk = java.nio.file.Files.walk(ckpt.resolve("state"))
+    val files = try walk.iterator().asScala.toList finally walk.close()
+    val deltas = files.filter(_.getFileName.toString.endsWith(".delta"))
+    assert(deltas.nonEmpty, s"no state deltas under $ckpt")
+    deltas.foreach { d =>
+      val name = d.getFileName.toString
+      assert(java.nio.file.Files.exists(d.resolveSibling(s".$name.crc")),
+        s"no Hadoop .crc for $d")
+      assert(java.nio.file.Files.exists(d.resolveSibling(s"$name.crc")),
+        s"no Spark checksum file for $d")
+    }
+  }
 }
