@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +14,7 @@ object AsOfBench {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
     val users = args.drop(1).headOption.map(_.toLong).getOrElse(16L)
-    val spark = core.Graft.tune(
-      SparkSession.builder().master("local[32]"), 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Graft.localSession()
 
     // realistic asymmetry: 90% clicks, 10% purchases; purchases carry a
     // wide payload the composed union must drag through its window sort

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: measured shuffle accounting — the empirical check on
   * SURVEY §5's bytes-per-row table. Runs each query at sf0.1 and
@@ -32,9 +31,7 @@ object ShuffleAudit {
       "q_dedup_exact", "q_span_dedup", "q_contamination_bloom",
       "q_reservoir_sample", "q_corpus_shuffle", "q_asof_native",
       "q_unigram_logprob", "q_ann_topk")
-    val spark = core.Graft.tune(
-      SparkSession.builder().master("local[32]"), 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Graft.localSession()
     val audit = new Audit
     spark.sparkContext.addSparkListener(audit)
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Session factory with graft's tuned defaults.
   *
@@ -57,8 +57,8 @@ object Graft {
     // bypass writer) regresses q_fact_join 3× (29.5 s vs 9.5) — 256
     // tiny unsorted per-map streams lose to one sorted spill file at
     // scale, so the stock 200 stays. Small-frame queries that would pay
-    // the ×8 fan-out on tiny iterative exchanges scope it away via
-    // [[withShuffleWidth]].
+    // the ×8 fan-out on tiny iterative exchanges run in a narrower
+    // [[scoped]] clone of the session.
     .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       (shufflePartitions * 8).toString)
     // Spark's stock 10 MB, deliberately NOT raised: the planner's size
@@ -74,6 +74,15 @@ object Graft {
     // broadcast; SF-scaling tables flip to SMJ exactly when they should.
     .config("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     .config("spark.ui.enabled", "false")
+    // One executor-side session for every session of the context. With
+    // Spark's per-session artifact isolation on, the first job of each
+    // new session (every [[scoped]] clone, and the clone Spark makes for
+    // every stream) first builds an isolated executor session with its
+    // own classloader: an aggregate over the 15,000 sf0.01 orders took
+    // 281 ms in a fresh clone vs 205 ms in the caller (local[4]), and 222
+    // vs 215 ms with isolation off. Isolation separates only per-session
+    // jars and files, and graft adds none.
+    .config("spark.sql.artifact.isolation.enabled", "false")
     // Fork-free `file:` I/O. Without the native libhadoop, Hadoop's local
     // filesystem forks `chmod` on every create and mkdirs, and the
     // FileContext API that Spark's default checkpoint manager uses forks
@@ -97,42 +106,50 @@ object Graft {
     .config("spark.hadoop.fs.file.impl",
       classOf[graft.sources.ForkFreeLocalFileSystem].getName)
 
-  /** Runs `body` with the shuffle WIDTH scoped to `width` — BOTH
-    * `spark.sql.shuffle.partitions` AND
+  /** Runs `face` on a clone of `spark` whose shuffle WIDTH is `width` —
+    * BOTH `spark.sql.shuffle.partitions` AND
     * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` — and
-    * restores both afterwards. With no `width`, the scope narrows
-    * [[tune]]'s ×8 pre-coalesce fan-out back to ×1 of the session's base
-    * `shuffle.partitions`.
-    *
-    * Scoping only `shuffle.partitions` is silently inert when AQE
-    * coalescing is on: Spark sizes the pre-coalesce map output by
-    * initialPartitionNum when that conf is set, so the global ×8 fan-out
-    * (256 on local[32]) would make every tiny fixpoint round launch
-    * 256-way shuffles that AQE then coalesces (measured as a 2×
-    * q_components regression). The base width is read from the conf
-    * itself, NOT `sessionState.conf.numShufflePartitions`: under AQE
-    * coalescing that getter RETURNS initialPartitionNum, which would make
-    * the ×1 scope a silent no-op.
+    * returns its frame to the caller, materialized inside the scope by
+    * one eager `localCheckpoint` unless its plan is already a leaf. With
+    * no `width`, the scope narrows [[tune]]'s ×8 pre-coalesce fan-out
+    * back to ×1 of the session's base `shuffle.partitions`.
     *
     * The ×8 fan-out wins on corpus-sized sorts (q14 5×, fact 2× at 64×)
     * but taxes exchanges of domain-bounded frames (graph fixed points,
     * post-rollup |users|/|days|/|deciles| frames, streaming state stores)
-    * 2-3× in pure task scheduling. Confs are read at EXECUTION time, so
-    * this narrows only plans actually run inside the scope (actions,
-    * eager `localCheckpoint`s, streams run to completion) — a lazy frame
-    * returned outward plans at the caller's width.
+    * 2-3× in pure task scheduling. Scoping only `shuffle.partitions` is
+    * inert under AQE coalescing, which sizes the pre-coalesce map output
+    * by initialPartitionNum when that conf is set (a 2× q_components
+    * regression). The base width is read from the conf itself, NOT
+    * `sessionState.conf.numShufflePartitions`: under AQE coalescing that
+    * getter RETURNS initialPartitionNum, which would make the ×1 scope a
+    * silent no-op.
+    *
+    * The clone (`cloneSession`, not `newSession`, which drops runtime
+    * confs such as an AQE or broadcast override) carries its own SQLConf,
+    * so the caller's confs never change and faces on other threads of
+    * the same session keep their widths. `face` must build its frame on
+    * the session it is given: confs are read at execution time, and a
+    * frame of the outer session would run at the outer width, so it is
+    * refused. The checkpoint is what makes the scope apply to everything
+    * the face plans; the caller gets the materialized rows as a plan of
+    * its own session.
     */
-  private[graft] def withShuffleWidth[A](spark: SparkSession, width: Option[Int] = None)(
-      body: => A): A = {
+  private[graft] def scoped(spark: SparkSession, width: Option[Int] = None)(
+      face: SparkSession => DataFrame): DataFrame = {
     val n = width.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val keys = Seq("spark.sql.shuffle.partitions",
+    val inner = GraftBridge.cloneSession(spark)
+    Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    val olds = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, n.toString))
-    try body
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+      .foreach(inner.conf.set(_, n.toString))
+    val df = face(inner)
+    require(df.sparkSession eq inner,
+      "Graft.scoped: the face returned a frame of another session; build it " +
+        "on the session the scope passes in, or it runs outside the scope")
+    // a leaf plan (a memory sink's rows, a checkpoint) has no exchange
+    // for the width to apply to, so it goes back without a copy
+    val done = if (df.queryExecution.optimizedPlan.children.isEmpty) df
+      else df.localCheckpoint()
+    GraftBridge.ofRows(spark, done.queryExecution.analyzed)
   }
 }

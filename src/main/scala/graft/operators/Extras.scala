@@ -1001,7 +1001,7 @@ object Extras {
     * (driver-side assembly, same as E13's set counts).
     */
   def funnel(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r9 VERDICT #4): v/c/p are |users|-bounded and
     // the three counts execute HERE, inside the scope — the global ×8
     // pre-coalesce width taxed the chained tiny exchanges 2× (judge
@@ -1345,13 +1345,12 @@ object Extras {
     * 2·cum ≥ tot — no float boundary, no interpolation.
     */
   def weightedMedian(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the first rollup is (flag × price-cents)
     // domain-bounded and the two windows key on 3 flags, so the global
-    // ×8 fan-out ran them as 256 near-empty tasks. The 3-row result
-    // checkpoints eagerly so the face executes inside the scope;
-    // partitioning-only, values unchanged.
+    // ×8 fan-out ran them as 256 near-empty tasks. Partitioning-only,
+    // values unchanged.
     val cells = Tables(spark, dir).lineitem
       .groupBy(col("l_returnflag").as("flag"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("price_c"))
@@ -1371,7 +1370,6 @@ object Extras {
         round(col("median_price_c").cast("double") / 100.0, 2)
           .as("median_price"),
         col("total_qty"))
-      .localCheckpoint()
   }
 
   val weightedMedianSql: String =
@@ -1473,14 +1471,13 @@ object Extras {
     * is exact integer cents end to end.
     */
   def winsorize(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the first rollup is (year × price-cents)
     // domain-bounded — the checkpointed cells, the two windows, the
     // broadcast bounds join — so the global ×8 fan-out ran them as 256
-    // near-empty tasks (and pinned 256 checkpoint blocks). The 7-row
-    // result checkpoints eagerly so the face executes inside the scope;
-    // partitioning-only, values unchanged.
+    // near-empty tasks (and pinned 256 checkpoint blocks).
+    // Partitioning-only, values unchanged.
     import org.apache.spark.sql.expressions.Window
     val cells = Tables(spark, dir).lineitem
       .groupBy(year(col("l_shipdate")).as("yr"),
@@ -1514,7 +1511,6 @@ object Extras {
         round(col("p95_c").cast("double") / 100.0, 2).as("p95"),
         (floor(col("clip_sum_c").cast("double") / 100.0 / col("n_rows") * 1e4
           + lit(0.5)) / 1e4).as("winsorized_mean"))
-      .localCheckpoint()
   }
 
   val winsorizeSql: String =

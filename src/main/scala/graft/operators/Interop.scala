@@ -409,14 +409,13 @@ object Interop {
     * rule trades for parallelism.
     */
   def compactionPlan(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r10 VERDICT #4): every frame past the first
     // partial aggregate is |fragments|-bounded (~10³ here, ~10⁶ at
     // 100 TB), so the global ×8 pre-coalesce width only taxed the
     // prefixSum's range exchange and the bin rollup in task scheduling
     // (judge solo 1.43 s; the prefix discipline itself costs ~3 fixed
-    // stages and stays). prefixSum runs its offset actions inside the
-    // scope; the tail is localCheckpoint'ed so it executes here too.
+    // stages and stays).
     val frags = Tables(spark, dir).orders
       .groupBy(concat(date_format(col("o_orderdate"), "yyyy-MM"), lit("|"),
         col("o_orderpriority")).as("file_key"))
@@ -442,7 +441,6 @@ object Interop {
         col("first_file"), col("last_file"), col("target_bytes"),
         call_function("div", col("bin_bytes") * 1000000L, col("target_bytes"))
           .as("fill_ppm"))
-      .localCheckpoint()
   }
 
   val compactionPlanSql: String =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Graft
@@ -1032,14 +1032,13 @@ object Mining {
     * checksum dodged for the same reason).
     */
   def gini(spark: SparkSession, dir: String): DataFrame =
-      Graft.withShuffleWidth(spark) {
+      Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // every frame past the first rollup is |customers|-bounded, and
     // `rangeParts` reads initialPartitionNum under AQE — so the global
     // ×8 fan-out ran the globalIndex range exchange and its offset
-    // passes as 256 near-empty tasks of pure scheduling. The 1-row
-    // result checkpoints eagerly so the face executes inside the
-    // scope; partitioning-only, values unchanged.
+    // passes as 256 near-empty tasks of pure scheduling.
+    // Partitioning-only, values unchanged.
     val x = Tables(spark, dir).orders
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice"), 0).cast("long")).as("x"))
@@ -1054,7 +1053,6 @@ object Mining {
             / (col("n_customers").cast("double") * col("s").cast("double"))
             - (col("n_customers") + 1).cast("double") / col("n_customers"),
           6).as("gini"))
-      .localCheckpoint()
   }
 
   val giniSql: String =
@@ -1403,13 +1401,11 @@ object Mining {
     * corpus-sized exchange is the per-user aggregate; both prefix
     * passes run on ≤|distinct hours| rows.
     */
-  def kaplanMeier(spark: SparkSession, dir: String): DataFrame = Graft.withShuffleWidth(spark) {
+  def kaplanMeier(spark: SparkSession, dir: String): DataFrame = Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r9 VERDICT #4): every exchange past the per-user
     // aggregate is |distinct hours|-bounded; the global ×8 pre-coalesce
     // width taxed the face 2-3× in task scheduling (judge solo 2.48 s,
-    // ×1 A/B 1.29 s). Both prefixSum passes run their actions inside
-    // the scope; the result is localCheckpoint'ed so the tail executes
-    // here too.
+    // ×1 A/B 1.29 s).
     val ev = Tables(spark, dir).events
       .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"))
     val mx = ev.agg(max(col("t")).as("tmax"))
@@ -1439,7 +1435,6 @@ object Mining {
         when(col("n_risk") === col("d"), lit(0.0))
           .otherwise(round(exp((col("cumt") + col("term")).cast("double") / 1e6), 4))
           .as("s"))
-      .localCheckpoint()
   }
 
   /** E66: connected components of the co-purchase graph — min-label
@@ -1476,14 +1471,16 @@ object Mining {
   def componentsOn(edges: DataFrame): DataFrame = {
     // The loop's frames are |V|-bounded — orders of magnitude smaller
     // than the corpus that produced the edges — so the fixed point
-    // runs at a narrow shuffle width; each round executes eagerly
-    // (checkpoint + count) inside the scope. Width follows the cluster
-    // (defaultParallelism/4, floor 4 — skyline's idiom): 8 on local[32],
-    // proportionally wider on a real cluster so the label frame is not
-    // pinned to 8 reducers at any deployment size.
+    // runs at a narrow shuffle width, with the edge plan re-homed into
+    // the scoped session. Width follows the cluster (defaultParallelism/4,
+    // floor 4 — skyline's idiom): 8 on local[32], proportionally wider
+    // on a real cluster so the label frame is not pinned to 8 reducers
+    // at any deployment size.
     val spark = edges.sparkSession
     val width = math.max(4, spark.sparkContext.defaultParallelism / 4)
-    Graft.withShuffleWidth(spark, Some(width))(componentsLoop(edges))
+    Graft.scoped(spark, Some(width)) { spark =>
+      componentsLoop(GraftBridge.ofRows(spark, edges.queryExecution.analyzed))
+    }
   }
 
   /** The RDD a `localCheckpoint`ed Dataset is served from (the
@@ -1550,13 +1547,14 @@ object Mining {
         // scalastyle:on println
     }
     require(changed == 0, s"components did not converge in $iter super-rounds")
-    // Exit: the converged labels are served straight from the FINAL
+    // Exit: the converged labels come straight from the FINAL
     // super-round's in-memory checkpoint — no disk round-trip (the
     // round-5 temp-parquet spill bought lineage hygiene with a write +
     // re-read of the result on the slowest query). Everything older is
     // already released round-by-round above; `und` (the only other
-    // frame this loop pinned) goes here. The one block that remains
-    // cached is the |V|-bounded result the caller is holding.
+    // frame this loop pinned) goes here. The scope's checkpoint copies
+    // the |V|-bounded result the caller holds; the final round's block
+    // is unreachable after it and goes with the ContextCleaner.
     und.unpersist(blocking = false)
     labels.select(col("n").as("node"), col("comp"))
   }
@@ -1886,7 +1884,7 @@ object Mining {
     * division (identical bits in both engines); S and ranks are
     * integers; τ rounds by the §8(d) floor idiom.
     */
-  def trendRobust(spark: SparkSession, dir: String): DataFrame = Graft.withShuffleWidth(spark) {
+  def trendRobust(spark: SparkSession, dir: String): DataFrame = Graft.scoped(spark) { spark =>
     // r11 (guide §2.4): `monthly` feeds FOUR plan branches (both pair
     // sides + the intercept candidates) and `pairs` three (MK sums +
     // the slope median's cells/total arms) — without cutting lineage
@@ -1922,8 +1920,6 @@ object Mining {
         (floor(col("mk_s").cast("double") / col("n_pairs").cast("double")
           * 1e6 + 0.5) / 1e6).as("mk_tau"),
         col("ts_slope_c"), col("ts_intercept_c"))
-      // eager 1-row tail: the whole face executes inside the ×1 scope
-      .localCheckpoint(true)
   }
 
   val trendRobustSql: String =

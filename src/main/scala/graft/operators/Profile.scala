@@ -256,12 +256,11 @@ object Profile {
     * aren't required.
     */
   def histogramDepth(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r9 VERDICT #4): globalIndex's range exchange is
     // explicitly sized (rangeParts), so the only AQE-planned exchange is
     // the 9-group decile aggregate — which the global ×8 width taxed
-    // 2× in scheduling (judge solo 1.45 s, ×1 A/B 0.98 s). The result
-    // is localCheckpoint'ed so that tail executes inside the scope.
+    // 2× in scheduling (judge solo 1.45 s, ×1 A/B 0.98 s).
     //
     // A GLOBAL ntile window would funnel the table through one reducer —
     // instead the total order comes from the distributed prefix
@@ -285,7 +284,6 @@ object Profile {
       .agg(count(lit(1)).as("n_rows"),
         min(col("v")).cast("double").as("min_v"),
         max(col("v")).cast("double").as("max_v"))
-      .localCheckpoint()
   }
 
   val histogramDepthSql: String =
@@ -361,7 +359,7 @@ object Profile {
     * the end.
     */
   def ksDrift(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // r12 (r11 VERDICT #7, the ks bimodality diagnosis): event-log
     // capture of 8 solo reps localized the run-to-run spread to the
     // 256-task stages — the global ×8 pre-coalesce fan-out reaches this
@@ -371,9 +369,7 @@ object Profile {
     // pure scheduling per timed pass, which contention stretches 2–4×.
     // Every exchange here is bounded by the price DOMAIN (the cells
     // frame), so the ×1 fan-out scope (histogramDepth precedent) is the
-    // right width; the final 1-row result checkpoints eagerly so the
-    // whole face executes inside the scope. Partitioning-only: values
-    // unchanged.
+    // right width. Partitioning-only: values unchanged.
     val cut = lit("1995-06-01").cast("date")
     val c = Tables(spark, dir).lineitem
       .select(col("l_extendedprice").as("v"),
@@ -396,7 +392,6 @@ object Profile {
       .groupBy(col("na"), col("nb"))
       .agg(round(max(col("d")), 6).as("ks_stat"))
       .select(col("na").as("n_base"), col("nb").as("n_target"), col("ks_stat"))
-      .localCheckpoint()
   }
 
   val ksDriftSql: String =
@@ -578,13 +573,12 @@ object Profile {
     * grain.
     */
   def cusumDrift(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the daily rollup is |days|-bounded (~2.5 k rows),
     // and `rangeParts` reads initialPartitionNum under AQE — the global
     // ×8 fan-out ran the prefix-sum range exchange as 256 near-empty
-    // tasks. The |days|-bounded result checkpoints eagerly so the face
-    // executes inside the scope; partitioning-only, values unchanged.
+    // tasks. Partitioning-only, values unchanged.
     val daily = Tables(spark, dir).lineitem
       .groupBy(col("l_shipdate").as("day"))
       .agg(sum(round(col("l_extendedprice") * 100, 0).cast("long")).as("rc"))
@@ -599,7 +593,6 @@ object Profile {
         round((col("nd") * (col("crev0") + col("rc"))
             - (col("cidx0") + lit(1L)) * col("tt")).cast("double")
           / col("nd").cast("double") / 100.0, 2).as("cusum"))
-      .localCheckpoint()
   }
 
   val cusumDriftSql: String =

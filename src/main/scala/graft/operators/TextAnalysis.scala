@@ -923,14 +923,13 @@ object TextAnalysis {
     * arithmetic. Engine-identical at every scale by construction.
     */
   def curriculum(spark: SparkSession, dir: String): DataFrame =
-      graft.core.Graft.withShuffleWidth(spark) {
+      graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // every exchange here is documents-bounded (the scored frame and
     // the 10-decile rollup), and `rangeParts` reads initialPartitionNum
     // under AQE — the global ×8 fan-out ran the globalIndex range
-    // exchange and the decile aggregate as 256 near-empty tasks. The
-    // ≤10-row result checkpoints eagerly so the face executes inside
-    // the scope; partitioning-only, values unchanged.
+    // exchange and the decile aggregate as 256 near-empty tasks.
+    // Partitioning-only, values unchanged.
     val scored = Tables(spark, dir).documents
       .select(col("doc_id"), round(compositeScore, 6).as("q"),
         (substrCount(col("text"), " ") + 1).cast("long").as("n_tokens"))
@@ -944,7 +943,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),
         min(col("q")).as("q_min"), max(col("q")).as("q_max"))
-      .localCheckpoint()
   }
 
   val curriculumSql: String =

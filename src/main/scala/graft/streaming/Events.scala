@@ -70,7 +70,11 @@ object Events {
   }
 
   /** The driver every streaming face runs through: `face` runs with a
-    * [[StreamRun]] over `dir`'s events feed, inside a width-8 scope.
+    * width-8 [[graft.core.Graft.scoped]] session and a [[StreamRun]] over
+    * `dir`'s events feed in it. The streams, their memory-sink views and
+    * the face's batch staging all live in that session. A session's
+    * streaming listeners hear only the streams started from it, so the
+    * caller's listeners are attached to the scoped session for the run.
     *
     * Width 8: stateful streaming queries instantiate one state store PER
     * shuffle partition per stateful operator per micro-batch (a
@@ -81,17 +85,24 @@ object Events {
     * per-file `chmod`/`readlink` process forks, which
     * [[graft.core.Graft.tune]] removes.) The scope covers
     * initialPartitionNum too: the streaming plan itself ignores AQE, but
-    * the batch work the faces run eagerly inside it (staging writes,
-    * sentinel and horizon aggregates, foreachBatch folds) would otherwise
-    * launch at the global ×8 pre-coalesce fan-out.
+    * the batch work the faces run inside it (staging writes, sentinel and
+    * horizon aggregates, foreachBatch folds, the result's checkpoint)
+    * would otherwise launch at the global ×8 pre-coalesce fan-out.
     */
-  private[graft] def runAvailableNow[A](spark: SparkSession, dir: String)(
-      face: StreamRun => A): A =
-    Graft.withShuffleWidth(spark, Some(8))(face(new StreamRun(spark, dir)))
+  private[graft] def runAvailableNow(spark: SparkSession, dir: String)(
+      face: (SparkSession, StreamRun) => DataFrame): DataFrame = {
+    val listeners = spark.streams.listListeners()
+    Graft.scoped(spark, Some(8)) { inner =>
+      listeners.foreach(inner.streams.addListener)
+      try face(inner, new StreamRun(inner, dir))
+      finally listeners.foreach(inner.streams.removeListener)
+    }
+  }
 
-  /** What a streaming face gets from [[runAvailableNow]]: the events
-    * feed's path and raw schema, file-stream sources over a staged copy
-    * of the feed, and [[drain]], which runs one query to completion.
+  /** What a streaming face gets from [[runAvailableNow]] beside its
+    * session: the events feed's path and raw schema, file-stream sources
+    * over a staged copy of the feed, and [[drain]], which runs one query
+    * to completion.
     */
   private[graft] final class StreamRun(spark: SparkSession, dir: String) {
     val path = s"$dir/events.parquet"
@@ -341,7 +352,7 @@ object Events {
     * the incremental-arrival and self-termination properties.
     */
   def qStreamHourly(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (_, r) =>
       val stream = r.events(stageFeed(r.path, "graft_feed"))
         .withWatermark("event_ts", "1 hour")
       r.toMemory(hourlyAgg(stream), "complete", "q_stream_hourly_sink")
@@ -358,7 +369,7 @@ object Events {
     * at scale is bounded by the horizon, not the stream length.
     */
   def qStreamDedup(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (_, r) =>
       val deduped = dedupWithinWatermark(
         r.events(stageFeed(r.path, "graft_feed_dedup")),
         Seq("user_id", "event_type"), delay = "3650 days")
@@ -378,7 +389,7 @@ object Events {
     * is arrival-invariant, so the batch join's SQL is the exact oracle.
     */
   def qStreamEnrich(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val stream = r.source(stageFeed(r.path, "graft_feed_enrich"))
         .select(col("user_id"), col("value"))
       val dim = Tables(spark, dir).customer
@@ -408,7 +419,7 @@ object Events {
     * round recovers it bit-for-bit.
     */
   def qStreamSessionize(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       // ev = the normalized view (ts as ns long) for high-water-mark math
       val ev = Tables.normalizeEventTs(spark.read.parquet(r.path))
       val feedDir = stageFeed(r.path, "graft_feed_sess")
@@ -474,7 +485,7 @@ object Events {
     * join's SQL is the exact oracle.
     */
   def qStreamJoin(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (_, r) =>
       val feedDir = stageFeed(r.path, "graft_feed_join")
       def feed() = r.events(feedDir).withWatermark("event_ts", "2 hours")
       val purchases = feed().filter(col("event_type") === "purchase")
@@ -619,7 +630,7 @@ object Events {
   }
 
   def qStreamCdc(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val feedDir = stageFourFiles(spark, r.path, "graft_feed_cdc")
       val stateRoot = tempDir("graft_cdc_state")
       val ran = cdcPass(r, feedDir, stateRoot, None)
@@ -643,7 +654,7 @@ object Events {
     * D12's: recovery is only correct if it is output-invisible).
     */
   def qStreamRestart(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val staged = stageFourFiles(spark, r.path, "graft_restartq_stage")
       val parts = staged.toFile.listFiles()
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -673,7 +684,7 @@ object Events {
     * deterministic function of this feed, oracle-checked at every scale.
     */
   def qStreamUniques(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val stream = r.source(stageFeed(r.path, "graft_feed_uniques"))
         .select(col("event_type"), col("user_id"))
       val agg = stream.groupBy(col("event_type"))
@@ -714,7 +725,7 @@ object Events {
     * has a live streaming twin.
     */
   def qStreamSliding(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (_, r) =>
       val stream = r.events(stageFeed(r.path, "graft_feed_sliding"))
         .withWatermark("event_ts", "1 hour")
       r.toMemory(slidingAgg(stream), "complete", "q_stream_sliding_sink")
@@ -745,7 +756,7 @@ object Events {
     * same horizon states the result exactly.
     */
   def qStreamLeftJoin(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val feedDir = stageFeed(r.path, "graft_feed_left_join")
       def feed() = r.events(feedDir).withWatermark("event_ts", "2 hours")
       val purchases = feed().filter(col("event_type") === "purchase")
@@ -815,7 +826,7 @@ object Events {
     * cousin: both quantify arrival lag against a declared tolerance.)
     */
   def qStreamLate(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val raw = spark.read.parquet(r.path)
       val feedDir = tempDir("graft_feed_late")
       def stageWave(df: DataFrame, n: Int, mtimeMs: Long): Unit = {
@@ -910,7 +921,7 @@ object Events {
     * checkpoint restarts).
     */
   def qStreamBackpressure(spark: SparkSession, dir: String): DataFrame =
-    runAvailableNow(spark, dir) { r =>
+    runAvailableNow(spark, dir) { (spark, r) =>
       val feedDir = stageFourFiles(spark, r.path, "graft_feed_bp")
       val stream = r.events(feedDir, oneFilePerBatch = true)
         .withWatermark("event_ts", "1 hour")

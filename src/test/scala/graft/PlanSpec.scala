@@ -313,8 +313,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_winsorize: executes inside the ×1 fan-out scope, serves a bounded checkpoint") {
-    // The face runs entirely inside a base-width withShuffleWidth scope
-    // and eagerly checkpoints its 7-row result, so the returned plan is the
+    // The face runs entirely inside a base-width Graft.scoped session,
+    // which eagerly checkpoints its 7-row result, so the returned plan is the
     // materialized RDD (the window-over-cells shape executed behind it
     // is value-pinned by the oracle and by the r11 history). Pin the
     // scope instead: the served RDD's partition count must not exceed
@@ -366,30 +366,42 @@ class PlanSpec extends AnyFunSuite {
     } finally cleanup()
   }
 
+  private val widthKeys = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+
+  /** Runs a 10-group aggregate inside `Graft.scoped(spark, width)` and
+    * returns the hash-partitioning widths of its executed plan.
+    */
+  private def scopedWidths(width: Option[Int]): Seq[Int] = {
+    import org.apache.spark.sql.functions.col
+    var widths = Seq.empty[Int]
+    graft.core.Graft.scoped(spark, width) { spark =>
+      val agg = spark.range(1000).toDF("n").groupBy(col("n") % 10).count()
+      agg.collect()
+      val finalPlan = agg.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      widths = "hashpartitioning\\(.*, (\\d+)\\)".r
+        .findAllMatchIn(finalPlan).map(_.group(1).toInt).toSeq
+      agg
+    }
+    widths
+  }
+
   test("withShufflePartitions scopes BOTH width confs — initialPartitionNum is not inert") {
     // r8's q_components 2x regression: Graft.tune sets a global 8x
     // initialPartitionNum, and when that conf is set Spark ignores
     // shuffle.partitions for the pre-coalesce width — so scoping only
     // shuffle.partitions is silently inert. Pin that a plan EXECUTED
-    // inside an explicit-width Graft.withShuffleWidth scope launches its
-    // exchanges at the scoped width, and that both confs restore afterwards.
-    import org.apache.spark.sql.functions.col
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-    val before = keys.map(spark.conf.getOption)
-    val widths = graft.core.Graft.withShuffleWidth(spark, Some(8)) {
-      val agg = spark.range(1000).toDF("n").groupBy(col("n") % 10).count()
-      agg.collect()
-      val finalPlan = agg.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      "hashpartitioning\\(.*, (\\d+)\\)".r
-        .findAllMatchIn(finalPlan).map(_.group(1).toInt).toSeq
-    }
+    // inside an explicit-width Graft.scoped session launches its
+    // exchanges at the scoped width, and that the caller's confs never
+    // change.
+    val before = widthKeys.map(spark.conf.getOption)
+    val widths = scopedWidths(Some(8))
     assert(widths.nonEmpty, "no hash-partitioned exchange found in the executed plan")
     assert(widths.forall(_ == 8),
       s"exchanges planned at widths $widths, not the scoped 8 — " +
         "the global initialPartitionNum leaked into the scope")
-    assert(keys.map(spark.conf.getOption) == before, "confs not restored after the scope")
+    assert(widthKeys.map(spark.conf.getOption) == before, "the caller's confs changed")
   }
 
   test("withStockFanout pins initialPartitionNum to the BASE shuffle width") {
@@ -397,28 +409,60 @@ class PlanSpec extends AnyFunSuite {
     // RETURNS initialPartitionNum under AQE coalescing, so a scope that
     // reads it would set the conf to its own current value — a silent
     // no-op (caught by task-count probing: 1219 tasks vs 199). Pin that
-    // a plan EXECUTED inside a default-width Graft.withShuffleWidth scope
+    // a plan EXECUTED inside a default-width Graft.scoped session
     // launches exchanges at the base shuffle.partitions, not the global
     // ×8 fan-out.
-    import org.apache.spark.sql.functions.col
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     val before = spark.conf.getOption(key)
     val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(before.exists(_.toInt > base),
       "precondition: the session must carry the global ×8 fan-out")
-    val widths = graft.core.Graft.withShuffleWidth(spark) {
-      val agg = spark.range(1000).toDF("n").groupBy(col("n") % 10).count()
-      agg.collect()
-      val finalPlan = agg.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      "hashpartitioning\\(.*, (\\d+)\\)".r
-        .findAllMatchIn(finalPlan).map(_.group(1).toInt).toSeq
-    }
+    val widths = scopedWidths(None)
     assert(widths.nonEmpty, "no hash-partitioned exchange found in the executed plan")
     assert(widths.forall(_ == base),
       s"exchanges planned at widths $widths, not the base $base — " +
         "the base-width scope is inert")
-    assert(spark.conf.getOption(key) == before, "conf not restored after the scope")
+    assert(spark.conf.getOption(key) == before, "the caller's conf changed")
+  }
+
+  test("scoped: inside the body the caller's initialPartitionNum still reads ×8") {
+    // The scope narrows a clone, never the shared session: a face on
+    // another thread of the same session keeps the ×8 fan-out.
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val outer = spark.conf.get(key)
+    var inBody = ""
+    var inScope = ""
+    graft.core.Graft.scoped(spark) { s =>
+      inBody = spark.conf.get(key)
+      inScope = s.conf.get(key)
+      s.range(1).toDF()
+    }
+    assert(inBody == outer, s"the caller's $key read $inBody inside the scope, not $outer")
+    assert(inScope == spark.conf.get("spark.sql.shuffle.partitions"),
+      s"the scoped session's $key is $inScope, not the base width")
+  }
+
+  test("scoped: the body sees the caller's runtime-set confs") {
+    // newSession() would start from the builder's confs and lose this;
+    // AqeOffSpec's AQE-off arm relies on the scoped faces keeping it.
+    val key = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      var seen = ""
+      graft.core.Graft.scoped(spark) { s =>
+        seen = s.conf.get(key)
+        s.range(1).toDF()
+      }
+      assert(seen == "false", s"the scoped session read $key = $seen")
+    } finally spark.conf.set(key, old)
+  }
+
+  test("scoped: a body that returns a frame of the outer session throws") {
+    val err = intercept[IllegalArgumentException] {
+      graft.core.Graft.scoped(spark)(_ => spark.range(3).toDF())
+    }
+    assert(err.getMessage.contains("another session"), err.getMessage)
   }
 
   test("q_bloom_join: the bloom prune sits BELOW the join, on the probe scan side") {

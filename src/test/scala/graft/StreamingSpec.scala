@@ -364,9 +364,11 @@ class StreamingSpec extends AnyFunSuite {
     val feed = Files.createTempDirectory("graft_restart_feed")
     val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
     val state = Files.createTempDirectory("graft_restart_state")
-    def cdcPass(stateRoot: java.nio.file.Path, checkpoint: Option[String]) =
-      Events.runAvailableNow(spark, dir)(
-        Events.cdcPass(_, feed, stateRoot, checkpoint))
+    def cdcPass(stateRoot: java.nio.file.Path, checkpoint: Option[String]): Seq[Long] =
+      Events.runAvailableNow(spark, dir) { (spark, r) =>
+        import spark.implicits._
+        Events.cdcPass(r, feed, stateRoot, checkpoint).toDF("batch_id")
+      }.collect().map(_.getLong(0)).toSeq.sorted
     parts.take(2).foreach(f => Files.copy(f.toPath, feed.resolve(f.getName)))
     // run 1 consumes the visible half, then the job "dies" (query gone;
     // checkpoint offsets and v* state snapshots survive on disk)
@@ -531,9 +533,11 @@ class StreamingSpec extends AnyFunSuite {
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
     val before = keys.map(spark.conf.getOption)
+    var runner: Option[SparkSession] = None
     val err = intercept[StreamingQueryException] {
-      Events.runAvailableNow(spark, dir) { r =>
-        assert(keys.map(k => spark.conf.get(k)) == Seq("8", "8"), "runner did not scope the width")
+      Events.runAvailableNow(spark, dir) { (scoped, r) =>
+        runner = Some(scoped)
+        assert(keys.map(k => scoped.conf.get(k)) == Seq("8", "8"), "runner did not scope the width")
         val feed = java.nio.file.Files.createTempDirectory("graft_failing_feed")
         java.nio.file.Files.copy(java.nio.file.Paths.get(r.path),
           feed.resolve("events.parquet"))
@@ -541,19 +545,40 @@ class StreamingSpec extends AnyFunSuite {
           (_: DataFrame, batchId: Long) =>
             throw new IllegalStateException(s"injected failure in batch $batchId")
         })
+        scoped.emptyDataFrame
       }
     }
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .exists(e => Option(e.getMessage).exists(_.contains("injected failure"))),
       s"the foreachBatch error was not propagated: $err")
-    assert(spark.streams.active.isEmpty, "the failed stream is still active")
-    assert(keys.map(spark.conf.getOption) == before, "width confs not restored")
+    assert(runner.exists(_.streams.active.isEmpty), "the failed stream is still active")
+    assert(spark.streams.active.isEmpty, "a stream is active in the caller's session")
+    assert(keys.map(spark.conf.getOption) == before, "the caller's width confs changed")
     // warm-up then timed run, as Bench and the benchmark harness call a
     // face: the second run in the same session returns the same table
     def hourly() = Events.qStreamHourly(spark, dir).collect().map(_.toString).sorted.toSeq
     val warm = hourly()
     assert(warm.nonEmpty)
     assert(hourly() == warm)
+  }
+
+  test("runAvailableNow: the caller's streaming listeners hear the face's streams") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet(): Unit
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      assert(Events.qStreamHourly(spark, "/root/testdata/sf0.001").count() > 0)
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the caller's listener heard no stream terminate")
+      assert(started.get() == 1, s"the caller's listener heard ${started.get()} starts")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("state deltas under an explicit checkpointLocation keep .crc and Spark checksum files") {

@@ -58,23 +58,19 @@ case "${1:?arm}" in
   distinct)    run_distinct_arm target/distinct64  target/verify_distinct64 ;;
   distinct128) run_distinct_arm target/distinct128 target/verify_distinct128 ;;
   verbatim)
-    # Inventory = every face in the newest correctness board minus the
-    # similarity family above (adjudicated on the distinct axis). Split
-    # into 3 chunks (sorted-order modulus for balance), one Verify JVM
-    # per chunk run CONCURRENTLY: a JVM's shuffle/spill dirs are
-    # reclaimed at exit, so no chunk inherits another's disk debt, and
-    # the per-face System.gc() inside dump-mode Verify lets the
-    # ContextCleaner reclaim shuffle files within a chunk. zstd shuffle
-    # compression bounds spill for the token-position-sized exchanges.
-    CORR=$(ls CORRECTNESS_r*.json | sort -V | tail -1)
-    python3 - "$CORR" "$DISTINCT_FACES" <<'EOF' > target/verbatim_chunks.txt
-import json, sys
-names = sorted(json.load(open(sys.argv[1])))
-excl = set(sys.argv[2].split(","))
-keep = [n for n in names if n not in excl]
-for i in range(3):
-    print(",".join(keep[i::3]))
-EOF
+    # Inventory = the registry (the oracle_sql.json keys of a full
+    # Verify dump over the in-tree sf0.01 input) minus the similarity
+    # family above (adjudicated on the distinct axis); gate_inventory.py
+    # refuses an exclusion that names no registered face. Split into 3
+    # chunks (sorted-order modulus for balance), one Verify JVM per chunk
+    # run CONCURRENTLY: a JVM's shuffle/spill dirs are reclaimed at exit,
+    # so no chunk inherits another's disk debt, and the per-face
+    # System.gc() inside dump-mode Verify lets the ContextCleaner reclaim
+    # shuffle files within a chunk. zstd shuffle compression bounds spill
+    # for the token-position-sized exchanges.
+    tools/runjvm.sh graft.Verify perfbench/data/sf0.01 target/verify_registry
+    python3 tools/gate_inventory.py target/verify_registry "$DISTINCT_FACES" \
+      > target/verbatim_chunks.txt
     i=0
     pids=()
     while read -r chunk; do
