@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Graft
 
 import scala.util.control.NonFatal
@@ -8,157 +11,109 @@ import scala.util.control.NonFatal
 /** Benchmark main: times every SparkEntry query at the given scale
   * factor and prints the driver's one-line JSON. Queries are forced
   * end-to-end with a `noop` sink (a bare `.count()` would let Catalyst
-  * prune projections and under-report the real work).
+  * prune projections and under-report the real work). Each timed pass
+  * is also recorded ([[FaceRecorder]]): one JSON line per face goes to
+  * `bench_faces.jsonl` beside `bench.json`.
+  *
+  * `SPARK_GRAFT_ONLY=q_a,q_b` times just those faces, and
+  * `SPARK_GRAFT_SF_DIR` picks the data, so one face's executed plan,
+  * shuffle bytes or stream progress at any scale is one run away.
   */
 object Bench {
+  private def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
+
+  /** Drops every persisted RDD. A face's checkpoints stay registered in
+    * the block manager until the ContextCleaner gets to them, and the
+    * leftovers of earlier faces inflated later ones (q_copurchase read
+    * 15.7 s in a sweep, right after checkpoint-heavy q_components, vs
+    * 2.6 s solo). No persisted frame outlives one face call: every
+    * checkpoint is made inside the call, so dropping them all between
+    * faces changes only what a face pays for. The drop that opens a
+    * timing window blocks, so no unpersist still runs inside it.
+    */
+  private def dropPersisted(spark: SparkSession, blocking: Boolean = false): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = blocking))
+
+  /** One face: an untimed warm-up pass (planning, codegen, JIT), then a
+    * gc-fenced, recorded timed pass. None when the warm-up fails; the
+    * error is named on stderr. NonFatal only: a dying JVM is not a
+    * per-face failure.
+    */
+  private[graft] def timeFace(spark: SparkSession, sfDir: String, recorder: FaceRecorder,
+      name: String, fn: (SparkSession, String) => DataFrame): Option[FaceRecord] = {
+    try noop(fn(spark, sfDir)) catch {
+      case NonFatal(e) =>
+        System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
+        dropPersisted(spark)
+        return None
+    }
+    // collect earlier faces' garbage outside the timing window
+    dropPersisted(spark, blocking = true)
+    System.gc()
+    val rec = recorder.record(name)(noop(fn(spark, sfDir)))
+    dropPersisted(spark)
+    Some(rec)
+  }
+
   def main(args: Array[String]): Unit = {
-    // The driver parses ONE JSON line from stdout. Anything else that
-    // lands there (JVM flags chatter, Spark banners, stray library
-    // printlns) can push the line past the driver's capture window. So:
-    // reroute everything written to System.out during the run to stderr,
-    // and emit the JSON at the end through the real stdout — making the
-    // JSON line the ONLY stdout content this process produces.
+    // Consumers parse JSON lines from stdout, so everything else written
+    // to System.out (JVM chatter, Spark banners, stray printlns) goes to
+    // stderr, and the JSON goes out through the real stdout.
     val realOut = System.out
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Graft.localSession()
-
-    // r11 measurement-hygiene fix (guide §1.1/§5, declared in
-    // OPTIMIZATION_r11.md): queries that eagerly localCheckpoint
-    // bounded frames leave their blocks registered in the block manager
-    // until the ContextCleaner gets around to them; across a 244-query
-    // sweep the leaked blocks of query N-1's warmup+timed passes raised
-    // memory pressure DURING query N's window (the r11 sweep recorded
-    // q_copurchase at 15.7 s — alphabetically right after iterative,
-    // checkpoint-heavy q_components — vs 2.6 s solo). Dropping every
-    // persistent RDD OUTSIDE the timing window is the same class of
-    // fence as the existing System.gc(): it changes what a query PAYS
-    // FOR, never what it computes — each invocation still rebuilds its
-    // own checkpoints from the parquet inputs inside the timed pass.
-    // INVARIANT (r11 ADVICE): no persisted frame may outlive one query
-    // invocation — every localCheckpoint/persist in the operators is
-    // created inside the per-invocation query function, so dropping ALL
-    // persistent RDDs here can never remove state a later query needs
-    // (a cross-query cache of a lineage-truncated checkpoint would fail
-    // with 'checkpoint block not found' rather than recompute).
-    // `blocking` is true for the drop that OPENS a timing window (an
-    // async unpersist could still be freeing blocks inside the timed
-    // region — r11 ADVICE #1); the post-timing and error-path drops
-    // stay async, the gc fence of the NEXT query absorbs them.
-    def dropPersisted(blocking: Boolean = false): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = blocking))
-
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      def once(): Unit =
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      // warm-up pass absorbs one-time planning/codegen/JIT; the timed
-      // pass measures steady-state engine throughput. NonFatal only:
-      // swallowing OOM/fatal errors would mislabel a dying JVM as a
-      // per-query -1, and a silently-broken query must be named loudly
-      // (r8 ADVICE) — a no-op warmup would quietly reintroduce the 3×
-      // cold-start artifact the warmup exists to remove.
-      try { once() } catch {
-        case NonFatal(e) =>
-          System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-          dropPersisted()
-          return -1.0
-      }
-      // 100 query executions share this JVM: collect the previous
-      // queries' garbage OUTSIDE the timing window, so query N's number
-      // doesn't pay for query N-1's allocations
-      dropPersisted(blocking = true)
-      System.gc()
-      val t0 = System.nanoTime()
-      once()
-      val dt = (System.nanoTime() - t0) / 1e9
-      dropPersisted()
-      dt
-    }
-
-    // dev loop: SPARK_GRAFT_ONLY=q_a,q_b times just those queries
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
 
-    // Cold-JVM warmup (r7 judge finding): the sweep runs alphabetically,
-    // so the first queries in — the B-block headliners — paid the whole
-    // JVM's cold costs (classloading, parquet reader init, codegen
-    // compiler warmup, JIT) and showed ~3× their solo times in every
-    // driver artifact (q1_pricing 4.61 s sweep vs 1.21 s solo in r7).
-    // The per-query warmup pass below can't absorb process-global
-    // warmth, so run one untimed throwaway sweep of the headliners
-    // before ANY timing starts. ~5 s once, removes a 3× artifact.
+    // Process-wide cold costs (classloading, parquet reader init, codegen
+    // compiler, JIT) land on whichever faces run first, ~3× their solo
+    // times; the per-face warm-up cannot absorb them, so one untimed pass
+    // over the headliners comes before any timing.
     Seq("q1_pricing", "q3_topk", "q5_join5", "q14_promo", "q18_big_orders")
       .foreach { name =>
-        try SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
+        try noop(SparkEntry.queries(name)(spark, sfDir))
         catch {
           case NonFatal(e) => System.err.println(
             s"BENCH WARMUP FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
         }
       }
-    // Box-speed calibration probe (r10 VERDICT #2): the build VM's
-    // Spark speed varies ~2× between rounds, so raw cross-round deltas
-    // conflate machine and code. Time ONE warm, gc-fenced q1_pricing
-    // pass right after the cold-JVM warmup — before the sweep piles up
-    // heap debris — and emit it as `calibration` in bench.json.
-    // tools/bench_compare.py divides cross-generation ratios by the
-    // calibration ratio before thresholding, so a uniformly slower box
-    // no longer flags untouched queries.
-    val calibration: Double = {
-      def once(): Unit = SparkEntry.queries("q1_pricing")(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    // Box-speed calibration: one warm, gc-fenced q1_pricing pass before
+    // the sweep piles up heap debris. tools/bench_compare.py divides
+    // cross-run ratios by it, so a uniformly slower machine does not
+    // flag untouched faces.
+    val calibration: Double =
       try {
         System.gc()
         val t0 = System.nanoTime()
-        once()
+        noop(SparkEntry.queries("q1_pricing")(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       } catch { case NonFatal(_) => -1.0 }
-    }
-    // Scale-up arm (r7 item #1): if a ScaleUp replica dir exists (built
-    // once by `runMain graft.tools.ScaleUp /root/testdata/sf0.1
-    // target/scaleup64 64`, persisted under target/), time the
-    // SF-scaling headline joins at 64× sf0.1 — the scale point where
-    // the unhinted orders-side joins flip to SortMergeJoin (see
-    // PLANS_SCALE.md). Runs right after the headliner warmup, BEFORE
-    // the 233-query sweep piles up heap debris; one gc-fenced timed
-    // pass per query (the r8 probes measured the same fact build at
-    // 25 s gc-fenced vs 88–208 s riding another query's garbage).
-    // Skipped silently when the dir is absent so a clean checkout
-    // still produces the contract JSON.
+    // Scale-up arm: when a ScaleUp replica exists (`runMain
+    // graft.tools.ScaleUp <sf0.1 dir> target/scaleup64 64`),
+    // time the SF-scaling headline joins at 64× sf0.1, where the
+    // unhinted orders-side joins flip to SortMergeJoin (run Bench with
+    // SPARK_GRAFT_SF_DIR at the replica to record those plans). It runs
+    // before the sweep's heap debris. The first read of a replica pays
+    // cold page-cache I/O (one cold pass read 200 s against ~2 s
+    // steady), so each face gets an untimed pass, then the min of two
+    // gc-fenced passes: one pass cannot tell box contention from a real
+    // cliff. Skipped when the dir is absent.
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scaleup64")
     val scaleResults: Seq[(String, Double)] =
       if (only.isEmpty && new java.io.File(s"$scaleDir/lineitem.parquet").isDirectory) {
         Seq("q1_pricing", "q3_topk", "q5_join5", "q14_promo",
           "q18_big_orders", "q_fact_join").map { name =>
-          def once(): Unit = SparkEntry.queries(name)(spark, scaleDir)
-            .write.mode("overwrite").format("noop").save()
-          // One untimed pass first (r8 judge finding #2): the first read
-          // of a 64× replica pays cold page-cache I/O + footer parsing,
-          // and a single cold-timed pass recorded 200 s where
-          // steady-state is ~2 s — a 25–94× artifact on exactly the
-          // rows a reader checks for the scale story. Warm first, THEN
-          // gc-fence and time the steady-state pass (the r8 probes
-          // measured the same fact build at 25 s gc-fenced vs 88–208 s
-          // riding another query's garbage).
-          // r12 measurement fix (declared in OPTIMIZATION_r12.md,
-          // VERDICT #3): the driver's r11 32-core run recorded this arm
-          // at 93.9 s (q1_pricing 56.8 s) while the SAME tree measured
-          // 27.2 s locally and 64.0 s on EIGHT cores — a transient
-          // box-contention artifact on a single timed pass, not code. A
-          // one-shot cold number can't distinguish contention from a
-          // real cliff, so time TWO gc-fenced passes and keep the min;
-          // both passes run the full computation from parquet.
+          def once(): Unit = noop(SparkEntry.queries(name)(spark, scaleDir))
           val s = try {
             once()
             val reps = for (_ <- 1 to 2) yield {
-              dropPersisted(blocking = true)
+              dropPersisted(spark, blocking = true)
               System.gc()
               val t0 = System.nanoTime()
               once()
               val dt = (System.nanoTime() - t0) / 1e9
-              dropPersisted()
+              dropPersisted(spark)
               dt
             }
             reps.min
@@ -179,12 +134,13 @@ object Bench {
         System.err.println(
           s"WARNING: SPARK_GRAFT_ONLY names match no registered query: ${unknown.mkString(", ")}")
     }
+    val recorder = new FaceRecorder(spark)
     // stable order for readable output
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val timed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        name -> time(name, fn)
-      }
+      .map { case (name, fn) => name -> timeFace(spark, sfDir, recorder, name, fn) }
+    recorder.close()
+    val results = timed.map { case (name, rec) => name -> rec.map(_.sec).getOrElse(-1.0) }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -200,17 +156,13 @@ object Bench {
       s""","calibration":{"probe":"q1_pricing","sec":${f"$calibration%.3f"}}"""
     val json =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,"sf":"$sfDir"$calJson$scaleJson}"""
-    // The driver parses one JSON line from stdout; sbt's logger can
-    // prefix it ([info]) depending on invocation, so ALSO write the line
-    // to bench.json in the working directory as the durable contract.
+    // The full map, also written to bench.json as the durable contract
+    // (sbt's logger can prefix a stdout line).
     realOut.println(json)
-    // The full line above is >2 KB at 211 queries and has NEVER fit the
-    // driver's stdout capture window (BENCH_r01–r06 all record
-    // "parsed": null on a truncated tail). Emit a compact, complete
-    // headline object as the LAST stdout line — small enough that any
-    // tail window contains one parseable JSON object: total, count, and
-    // the worst-5 queries (the ones a grader acts on). bench.json keeps
-    // the full per-query map.
+    // Consumers parse the LAST stdout line from a 2000-char tail, and
+    // the 244 names alone take 3259 bytes, so the last line is a compact
+    // headline: total, count, the worst 5, and as many of the most
+    // expensive faces as fit a 1900-byte budget. Keys are additions only.
     val worst = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -218,17 +170,6 @@ object Bench {
       val st = scaleResults.map(_._2).filter(_ >= 0).sum
       s""","scaleup64_total":${f"$st%.3f"}"""
     }
-    // r12 (r11 VERDICT #1, per-query driver contract): the driver
-    // demonstrably parses from a bounded stdout TAIL — BENCH_r06's last
-    // line was the COMPLETE full-map JSON and still recorded
-    // "parsed": null, and every BENCH_r* stores exactly 2000 tail chars
-    // — while the 244 registered names alone total 3259 bytes, so a
-    // full per-query map can NEVER fit a parseable headline. Best
-    // feasible: carry the MOST EXPENSIVE queries' times in the headline
-    // under a strict byte budget that keeps the whole line inside a
-    // 2000-char window. These are exactly the rows regression
-    // adjudication acts on; the full map stays in the first stdout line
-    // and in bench.json. Additions-only: no key removed or renamed.
     val headlinePrefix =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"queries":"""
     val headlineSuffix =
@@ -247,10 +188,12 @@ object Bench {
       topEntries.mkString("{", ",", "}") + headlineSuffix
     realOut.println(headline)
     realOut.flush()
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench.json"),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // stdout remains authoritative
+    // stdout remains authoritative if a file cannot be written
+    def write(path: String, text: String): Unit =
+      try Files.write(Paths.get(path), text.getBytes(UTF_8))
+      catch { case NonFatal(e) => System.err.println(s"BENCH could not write $path: $e") }
+    write("bench.json", json + "\n")
+    write("bench_faces.jsonl", timed.flatMap(_._2).map(_.json + "\n").mkString)
     spark.stop()
   }
 }

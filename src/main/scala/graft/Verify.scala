@@ -67,21 +67,9 @@ object Verify {
             .parquet(s"$outDir/${name}_probe")
         }
       })
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Scale-gate oracles (r9 VERDICT #1): independent SUB-QUADRATIC
     // DuckDB restatements for faces whose registered oracles cannot
@@ -90,7 +78,7 @@ object Verify {
     // value-identical to the registered oracle at the driver SFs, and
     // tools/oracle_check.py --scale-oracles uses them at 64×).
     val scaleJson = ScaleOracles.sql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/scale_oracle_sql.json"), scaleJson)
     // Distinct-axis stage adjudication (r10 VERDICT #1): under
     // SPARK_GRAFT_DUMP_STAGES=1 (dev scale-gate runs only) materialize
@@ -98,7 +86,7 @@ object Verify {
     // face dumps that tools/oracle_check.py --stage-oracles pins via
     // {OUT}. The JSON is written unconditionally (driver ignores it).
     val stageJson = StageOracles.sql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/stage_oracle_sql.json"), stageJson)
     // runs after the face loop: the sample dumps re-read face outputs
     // (q_dedup_simhash/q_knn_join/q_dedup_fuzzy must be in the dump set

@@ -46,8 +46,10 @@ object Graft {
     // AQE coalesces DOWN from this, so start fine-grained: at small SF
     // it collapses to a handful of reducers anyway; at 64–128× sf0.1 it
     // keeps sorts/aggs under the per-task memory budget instead of
-    // forcing 32 half-GB partition sorts into spill (observed r8,
-    // PLANS_SCALE.md). On a 1000-executor cluster the same ratio holds.
+    // forcing 32 half-GB partition sorts into spill (observed r8 in the
+    // executed 64× plans; the generated plan dump is in git history, and
+    // Bench records any face's executed plan). On a 1000-executor
+    // cluster the same ratio holds.
     // r9 re-falsified two alternatives at 64× sf0.1 (solo, gc-fenced,
     // same machine): ×1 (initial = shuffle.partitions) costs q14_promo
     // 5× (18.3 s vs 3.4) and q_fact_join 2× (58.5 s vs 29.5) to sort
@@ -69,9 +71,10 @@ object Graft {
     // the threshold admitted the 19 M-row orders side of q5_join5 /
     // q_fact_join as broadcasts (33 MB estimate, GB-scale relation),
     // and the pinned relations + GC debt degraded not just those joins
-    // but every query sharing the session (PLANS_SCALE.md). Dims that
-    // are genuinely small (region/nation, filtered customer arms) still
-    // broadcast; SF-scaling tables flip to SMJ exactly when they should.
+    // but every query sharing the session (the r8 executed plans, in git
+    // history). Dims that are genuinely small (region/nation, filtered
+    // customer arms) still broadcast; SF-scaling tables flip to SMJ
+    // exactly when they should.
     .config("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     .config("spark.ui.enabled", "false")
     // One executor-side session for every session of the context. With

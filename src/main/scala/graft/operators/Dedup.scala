@@ -702,67 +702,18 @@ object Dedup {
 
   /** C23: dedup clustering — connected components over the verified
     * MinHash near-dup pairs (C2), turning pairwise matches into
-    * keep-one-per-cluster groups. Algorithm: iterative min-label
-    * propagation (the standard large-graph CC — O(diameter) rounds,
-    * each one join + one groupBy keyed on doc_id; state per round is
-    * (doc_id, label) pairs only). `localCheckpoint` cuts the growing
-    * lineage each round — on a cluster this would be `checkpoint` to
-    * durable storage. Driver sees only the per-round change count
-    * (a scalar), never data. Output: one row per cluster with its
-    * canonical (min) doc and size. Oracle: the portable-minhash
-    * pipeline (C2's SQL restatement) feeds a recursive-CTE reachability
-    * closure — quadratic in component size, fine at oracle scale.
+    * keep-one-per-cluster groups: [[Mining.componentsOn]]'s min-label
+    * propagation over the pairs, then one row per component with its
+    * canonical (min) doc and size. Oracle: the portable-minhash pipeline
+    * (C2's SQL restatement) feeds a recursive-CTE reachability closure —
+    * quadratic in component size, fine at oracle scale.
     */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir).filter(col("is_dup"))
-      .select(col("doc_a"), col("doc_b"))
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint(true)
-    var labels = edges.select(col("doc_a").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .localCheckpoint(true)
-    // componentsLoop's release discipline (Mining.scala): each round's
-    // eager checkpoint makes the previous round's frame dead — release
-    // it after the changed-count (which still reads the old labels)
-    // instead of pinning every round's |V| frame until JVM exit
-    var prevCkpt = Mining.checkpointRdd(labels)
-    var converged = false
-    var rounds = 0
-    val maxRounds = 50 // propagation needs diameter(graph) rounds
-    while (!converged && rounds < maxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc_id").as("doc_b"), col("label").as("nbr_label")), "doc_b")
-        .groupBy(col("doc_a").as("doc_id"))
-        .agg(min(col("nbr_label")).as("nbr_min"))
-      val updated = labels.join(nbrMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        .localCheckpoint(true)
-      val changed = updated
-        .join(labels.withColumnRenamed("label", "old_label"), "doc_id")
-        .filter(col("label") =!= col("old_label")).count()
-      labels = updated
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = Mining.checkpointRdd(updated)
-      converged = changed == 0
-      rounds += 1
-    }
-    // a silent partial result would mis-assign canonical docs; a
-    // component of diameter > maxRounds must fail loudly instead
-    if (!converged) throw new IllegalStateException(
-      s"dedupClusters: label propagation did not converge in $maxRounds rounds " +
-        "(dup-pair graph has a component with larger diameter)")
-    // the converged labels serve the result; the edge checkpoint is
-    // dead once the (eager, cluster-bounded) census below materializes
-    val out = labels.groupBy(col("label").as("cluster_id"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_doc_id"),
-        max(col("doc_id")).as("max_doc_id"))
-      .localCheckpoint(true)
-    Mining.checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    prevCkpt.foreach(_.unpersist(blocking = false))
-    out
-  }
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    Mining.componentsOn(minhashLsh(spark, dir).filter(col("is_dup"))
+        .select(col("doc_a").as("p1"), col("doc_b").as("p2")))
+      .groupBy(col("comp").as("cluster_id"))
+      .agg(count(lit(1)).as("n_docs"), min(col("node")).as("keep_doc_id"),
+        max(col("node")).as("max_doc_id"))
 
   /** Oracle restatement of C23: C2's portable pipeline down to the
     * verified is_dup pairs, then connected components as a recursive

@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.LongType
   * O(|L|+|R|), holding ONE buffered right row. At 100 TB: two key
   * shuffles, zero candidate blow-up, state = one row.
   *
-  * Measured trade-off (`graft.AsOfBench`, 8M rows / 16 hot keys,
-  * local[32]): the union+window face runs ~1.4× faster single-node —
+  * Measured trade-off (a synthetic hot-key microbenchmark of both
+  * forms, 8M rows / 16 hot keys, local[32]; its main is in git
+  * history, and AsOfSpec pins that the forms agree): the union+window face runs ~1.4× faster single-node —
   * WindowExec sits inside whole-stage codegen while this exec's merge
   * loop is an interpreted iterator (the single-long-key fast path with
   * primitive accessors and a reused copy buffer recovers ~20%). The

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -88,14 +88,25 @@ object Events {
     * the batch work the faces run inside it (staging writes, sentinel and
     * horizon aggregates, foreachBatch folds, the result's checkpoint)
     * would otherwise launch at the global ×8 pre-coalesce fan-out.
+    *
+    * On the way out the scoped session's streaming listener bus, and the
+    * bus of each stream's own session clone, come off the context's
+    * listener bus, which would otherwise keep them for the life of the
+    * context. The scoped bus goes only after it has delivered its
+    * streams' terminate events to the caller's listeners.
     */
   private[graft] def runAvailableNow(spark: SparkSession, dir: String)(
       face: (SparkSession, StreamRun) => DataFrame): DataFrame = {
     val listeners = spark.streams.listListeners()
     Graft.scoped(spark, Some(8)) { inner =>
       listeners.foreach(inner.streams.addListener)
-      try face(inner, new StreamRun(inner, dir))
-      finally listeners.foreach(inner.streams.removeListener)
+      val run = new StreamRun(inner, dir)
+      try face(inner, run)
+      finally {
+        GraftBridge.releaseStreamingBus(inner, timeoutMs = 60000)
+        run.drained.foreach(q =>
+          GraftBridge.releaseStreamingBus(GraftBridge.streamSession(q), timeoutMs = 0))
+      }
     }
   }
 
@@ -106,6 +117,7 @@ object Events {
     */
   private[graft] final class StreamRun(spark: SparkSession, dir: String) {
     val path = s"$dir/events.parquet"
+    private[streaming] val drained = scala.collection.mutable.ArrayBuffer[StreamingQuery]()
 
     /** The feed's RAW schema: every staged part file carries it, so it
       * is the schema a file-stream source over a staged copy declares.
@@ -139,6 +151,7 @@ object Events {
       */
     def drain(writer: DataStreamWriter[_]): StreamingQuery = {
       val q = writer.trigger(Trigger.AvailableNow()).start()
+      drained += q
       try require(q.awaitTermination(300000),
         "AvailableNow run did not self-terminate")
       finally if (q.isActive) q.stop()

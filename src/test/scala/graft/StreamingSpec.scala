@@ -581,6 +581,18 @@ class StreamingSpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("runAvailableNow: stream runs leave no streaming listener bus on the context") {
+    val sc = spark.sparkContext
+    spark.streams.active // the caller's own stream manager and bus, built once
+    val before = org.apache.spark.ListenerBuses.streaming(sc)
+    (1 to 3).foreach { _ =>
+      assert(Events.qStreamHourly(spark, "perfbench/data/sf0.01").count() > 0)
+    }
+    // both the scoped session's bus and Spark's per-stream clone's bus go
+    val after = org.apache.spark.ListenerBuses.streaming(sc)
+    assert(after == before, s"3 stream runs left ${after - before} streaming listener buses")
+  }
+
   test("state deltas under an explicit checkpointLocation keep .crc and Spark checksum files") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
