@@ -34,11 +34,6 @@ object Graft {
     // native functions + the SimplifySelfCosine / RangeJoinAsBucketJoin
     // optimizer rules (both semantics-preserving, both spec-pinned).
     .config("spark.sql.extensions", "graft.core.GraftExtensions")
-    // The events feed carries nanosecond parquet timestamps, which
-    // Spark's µs TimestampType cannot hold; read them as raw ns longs
-    // (session-wide, declared at construction — NOT flipped inside a
-    // table getter, so no read-order-dependent behavior).
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -142,9 +137,8 @@ object Graft {
       face: SparkSession => DataFrame): DataFrame = {
     val n = width.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val inner = GraftBridge.cloneSession(spark)
-    Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
-      .foreach(inner.conf.set(_, n.toString))
+    inner.conf.set("spark.sql.shuffle.partitions", n.toString)
+    inner.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n.toString)
     val df = face(inner)
     require(df.sparkSession eq inner,
       "Graft.scoped: the face returned a frame of another session; build it " +

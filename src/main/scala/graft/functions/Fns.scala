@@ -118,18 +118,6 @@ object Fns {
   def fixedToDouble(s: Column, pow: Long): Column =
     (s.cast(DecimalType(38, 0)) / lit(pow)).cast(DecimalType(38, 6)).cast("double")
 
-  // -------------------------------------------------------------- time
-
-  /** Nanosecond-long → microsecond-long, by exact integer division
-    * (epochs are positive, so DIV floors — matching ns→µs narrowing on
-    * read elsewhere). Double division would corrupt ~1e18 ns values
-    * (> 2^53), hence the SQL `DIV`.
-    */
-  def nsToUs(c: Column): Column = call_function("div", c, lit(1000L))
-
-  /** Nanosecond-long → TimestampType (µs precision). */
-  def nsToTimestamp(c: Column): Column = timestamp_micros(nsToUs(c))
-
   // ----------------------------------------------------- reference-derived
 
   /** Surrogate key: md5 over '-'-joined, null-coalesced string casts.

@@ -90,7 +90,7 @@ object Extras {
     val ev = Tables(spark, dir).events
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
-        nsToUs(col("ts")).as("ts_us"), col("value"))
+        unix_micros(col("ts")).as("ts_us"), col("value"))
     val tagged = ev.withColumn("is_click", (col("event_type") === "click").cast("int"))
     // clicks sort before purchases at equal ts so a same-instant click
     // is visible to the purchase (ASOF >= includes equality)
@@ -115,7 +115,7 @@ object Extras {
   def asofNative(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("user_id"), col("event_id"), col("event_type"),
-        nsToUs(col("ts")).as("ts_us"))
+        unix_micros(col("ts")).as("ts_us"))
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_event_id"),
         col("ts_us").as("purchase_ts_us"))
@@ -384,7 +384,7 @@ object Extras {
     val ev = Tables(spark, dir).events
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
-        nsToUs(col("ts")).as("ts_us"))
+        unix_micros(col("ts")).as("ts_us"))
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts_us").as("click_us"),
         hourBucket(col("ts_us")).as("bucket"))
@@ -587,7 +587,7 @@ object Extras {
     */
   def firstLastPerUser(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_id"), nsToUs(col("ts")).as("ts_us"),
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         dec(col("value")).as("v"))
     val tagged = struct(col("ts_us"), col("event_id"), col("v"))
     ev.groupBy(col("user_id"))
@@ -659,7 +659,7 @@ object Extras {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
       .rangeBetween(-3600000000L, 0L)
     Tables(spark, dir).events
-      .select(col("user_id"), col("event_id"), nsToUs(col("ts")).as("ts_us"),
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"),
         dec(col("value")).as("v"))
       .select(col("user_id"), col("event_id"), col("ts_us"),
         count(lit(1)).over(w).as("n_win"),
@@ -708,9 +708,8 @@ object Extras {
     * Decimal-exact value sums; one partial-agg'd shuffle to a 7×24 grid.
     */
   def weekdayProfile(spark: SparkSession, dir: String): DataFrame = {
-    val ts = timestamp_micros(nsToUs(col("ts")))
     Tables(spark, dir).events
-      .select((dayofweek(ts) - 1).as("dow"), hour(ts).as("hh"),
+      .select((dayofweek(col("ts")) - 1).as("dow"), hour(col("ts")).as("hh"),
         dec(col("value")).as("v"))
       .groupBy(col("dow"), col("hh"))
       .agg(count(lit(1)).as("n_events"),
@@ -822,7 +821,7 @@ object Extras {
     */
   def sourceFreshness(spark: SparkSession, dir: String): DataFrame = {
     val per = Tables(spark, dir).events
-      .select(col("event_type"), nsToUs(col("ts")).as("ts_us"))
+      .select(col("event_type"), unix_micros(col("ts")).as("ts_us"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), max(col("ts_us")).as("max_ts_us"))
     val global = per.agg(max(col("max_ts_us")).as("as_of_us"))
@@ -899,7 +898,7 @@ object Extras {
   /** The raw sketch-union estimate, for the error-bound spec. */
   def hllUnionRaw(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events.select(col("event_type"),
-      date_trunc("day", timestamp_micros(nsToUs(col("ts")))).as("day"),
+      date_trunc("day", col("ts")).as("day"),
       col("user_id"))
     val daily = ev.groupBy(col("event_type"), col("day"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
@@ -1007,7 +1006,7 @@ object Extras {
     // pre-coalesce width taxed the chained tiny exchanges 2× (judge
     // solo 1.63 s, ×1 A/B 1.18 s).
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"))
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"))
     val v = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(col("t")).as("tv"))
     val c = ev.filter(col("event_type") === "click")
@@ -1053,7 +1052,7 @@ object Extras {
     */
   def funnelWindowed(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"))
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"))
     val v = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(col("t")).as("tv"))
     val c = ev.filter(col("event_type") === "click")
@@ -1093,7 +1092,7 @@ object Extras {
   def retention(spark: SparkSession, dir: String): DataFrame = {
     val um = Tables(spark, dir).events
       .select(col("user_id"),
-        date_trunc("month", nsToTimestamp(col("ts"))).as("m"))
+        date_trunc("month", col("ts")).as("m"))
       .distinct()
     val firstM = um.groupBy("user_id").agg(min(col("m")).as("m0"))
     um.join(firstM, "user_id")
@@ -1171,7 +1170,7 @@ object Extras {
   def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val t = Tables(spark, dir)
     val changes = t.events
-      .select(col("user_id").as("key"), nsToUs(col("ts")).as("seq"),
+      .select(col("user_id").as("key"), unix_micros(col("ts")).as("seq"),
         col("event_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
         dec(col("value"), 18, 2).as("new_bal"))

@@ -95,16 +95,15 @@ object Interop {
     * read back format-native, and fingerprinted per event type with
     * content-sensitive aggregates; the oracle states the same
     * aggregate over the ORIGINAL parquet table, so any type coercion
-    * or value loss crossing the format hash-mismatches. (The ns
+    * or value loss crossing the format hash-mismatches. (The
     * timestamp is carried as explicit unix-micros — ORC's own
     * timestamp type would silently re-zone, which is exactly the class
     * of boundary bug this face pins.)
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Fns.nsToUs
     val ev = Tables(spark, dir).events
       .select(col("event_id"), col("user_id"), col("event_type"),
-        nsToUs(col("ts")).as("t_us"), col("value"))
+        unix_micros(col("ts")).as("t_us"), col("value"))
     val out = s"${tempDir("graft_orc")}/events"
     ev.write.mode("overwrite").orc(out)
     spark.read.orc(out)

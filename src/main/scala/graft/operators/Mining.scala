@@ -31,7 +31,7 @@ object Mining {
     */
   def transitionMatrix(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"),
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"),
         col("event_id"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
     val pairs = ev
@@ -285,7 +285,7 @@ object Mining {
     */
   def userPaths(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"),
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"),
         col("event_id"))
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
     val first5 = ev.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
@@ -335,7 +335,7 @@ object Mining {
     */
   def interarrival(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"),
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"),
         col("event_id"))
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("t"), col("event_id"))
@@ -400,7 +400,7 @@ object Mining {
     */
   def decayScore(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("value"), nsToUs(col("ts")).as("t"))
+      .select(col("user_id"), col("value"), unix_micros(col("ts")).as("t"))
     val hwm = ev.agg(max(col("t")).as("max_t"))
     val weekUs = 7L * 86400L * 1000000L
     ev.crossJoin(broadcast(hwm))
@@ -740,7 +740,7 @@ object Mining {
     */
   def activeUsers(spark: SparkSession, dir: String): DataFrame = {
     val du = Tables(spark, dir).events
-      .select(to_date(nsToTimestamp(col("ts"))).as("day"), col("user_id"))
+      .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
     val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = du
@@ -966,7 +966,7 @@ object Mining {
     // ledger would collapse to one row; the operator is grain-generic)
     val am = Tables(spark, dir).events
       .select(col("user_id"),
-        call_function("div", nsToUs(col("ts")), lit(604800000000L)).as("m"))
+        call_function("div", unix_micros(col("ts")), lit(604800000000L)).as("m"))
       .distinct()
     val w = Window.partitionBy(col("user_id")).orderBy(col("m"))
     val tagged = am
@@ -1080,7 +1080,7 @@ object Mining {
     */
   def burstiness(spark: SparkSession, dir: String): DataFrame = {
     val daily = Tables(spark, dir).events
-      .groupBy(col("event_type"), to_date(nsToTimestamp(col("ts"))).as("day"))
+      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("c"))
     daily.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"),
@@ -1230,7 +1230,7 @@ object Mining {
     */
   def cumUniques(spark: SparkSession, dir: String): DataFrame = {
     val first = Tables(spark, dir).events
-      .select(col("user_id"), to_date(nsToTimestamp(col("ts"))).as("day"))
+      .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy(col("user_id")).agg(min(col("day")).as("day"))
     val daily = first.groupBy(col("day")).agg(count(lit(1)).as("new_users"))
     Corpus.prefixSum(daily, Seq(col("day")), "new_users", "cum0")
@@ -1288,7 +1288,7 @@ object Mining {
   def attribution(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
       .select(col("user_id"), col("event_type"), col("event_id"),
-        nsToUs(col("ts")).as("t"),
+        unix_micros(col("ts")).as("t"),
         round(col("value") * 100, 0).cast("long").as("vc"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("t"), col("event_id"))
@@ -1335,7 +1335,7 @@ object Mining {
     */
   def abTest(spark: SparkSession, dir: String): DataFrame = {
     val u = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"))
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"))
       .groupBy(col("user_id")).agg(
         min(col("t")).as("t0"),
         min(when(col("event_type") === "purchase", col("t"))).as("tp"))
@@ -1407,7 +1407,7 @@ object Mining {
     // width taxed the face 2-3× in task scheduling (judge solo 2.48 s,
     // ×1 A/B 1.29 s).
     val ev = Tables(spark, dir).events
-      .select(col("user_id"), col("event_type"), nsToUs(col("ts")).as("t"))
+      .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"))
     val mx = ev.agg(max(col("t")).as("tmax"))
     val life = ev.groupBy(col("user_id")).agg(
         min(col("t")).as("t0"),

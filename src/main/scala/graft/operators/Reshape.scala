@@ -129,7 +129,7 @@ object Reshape {
   def gapsIslands(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val days = Tables(spark, dir).events
-      .select(col("user_id"), to_date(nsToTimestamp(col("ts"))).as("d"))
+      .select(col("user_id"), to_date(col("ts")).as("d"))
       .distinct()
     val w = Window.partitionBy(col("user_id")).orderBy(col("d"))
     val islands = days
@@ -745,7 +745,7 @@ object Reshape {
     */
   def hourlyAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables(spark, dir).events
-      .select(nsToTimestamp(col("ts")).as("t"))
+      .select(col("ts").as("t"))
     val hourly = ev.groupBy(
         to_date(col("t")).as("day"),
         (dayofweek(col("t")) - 1).as("dow"),

@@ -27,15 +27,15 @@ object Staging {
     * per-partition).
     */
   def windowDedup(spark: SparkSession, dir: String): DataFrame = {
-    // order by µs (not raw ns) so row choice matches engines that
-    // floor ns→µs on read; event_id breaks the remaining ties.
+    // event_id breaks ties between events at the same µs, as in the
+    // oracle's ORDER BY ts, event_id
     val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(nsToUs(col("ts")), col("event_id"))
+      .orderBy(col("ts"), col("event_id"))
     Tables(spark, dir).events
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), col("props"), nsToUs(col("ts")).as("ts_us"))
+        col("value"), col("props"), unix_micros(col("ts")).as("ts_us"))
   }
 
   val windowDedupSql: String =
@@ -83,13 +83,13 @@ object Staging {
     */
   def stgEvents(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(nsToUs(col("ts")), col("event_id"))
+      .orderBy(col("ts"), col("event_id"))
     Tables(spark, dir).events
       .filter(col("user_id").isNotNull)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(
-        surrogateKey(col("user_id"), nsToUs(col("ts"))).as("event_sk"),
+        surrogateKey(col("user_id"), unix_micros(col("ts"))).as("event_sk"),
         col("event_id").cast("long").as("event_id"),
         col("user_id").cast("int").as("user_id"),
         col("event_type"),
@@ -102,7 +102,7 @@ object Staging {
           Seq(1 -> "Click", 2 -> "View", 3 -> "Purchase", 4 -> "Signup", 5 -> "Error"))
           .as("event_description"),
         dec(col("value")).cast("double").as("value_amount"),
-        nsToUs(col("ts")).as("ts_us"),
+        unix_micros(col("ts")).as("ts_us"),
         lit(1).as("source_type"),
         lit(0.0).cast("double").as("adjustment_fee"))
   }

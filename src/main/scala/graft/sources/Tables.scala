@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, timestamp_micros, unix_micros}
-import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType, TimestampNTZType, TimestampType}
 
 /** Table loaders.
   *
@@ -25,51 +25,37 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame     = t("orders")
   def lineitem: DataFrame   = t("lineitem")
 
-  /** The events feed, with `ts` normalized to graft's internal event-time
-    * representation: a raw NANOSECOND epoch long. The feed's physical
-    * type has varied across data generations (int64 ns — readable only
-    * under `spark.sql.legacy.parquet.nanosAsLong`, which
-    * [[graft.core.Graft.tune]] still sets — and µs `timestamp`, which
-    * Spark surfaces as TIMESTAMP_NTZ), so the loader adapts to whatever
-    * the scan reports via [[Tables.normalizeEventTs]] rather than
-    * hard-wiring one physical type. Downstream operators uniformly
-    * derive µs/timestamps via [[graft.functions.Fns.nsToUs]].
+  /** The events feed, with `ts` as a µs `TimestampType` instant
+    * ([[Tables.eventTime]]).
     */
-  def events: DataFrame = Tables.normalizeEventTs(t("events"))
+  def events: DataFrame = Tables.eventTime(t("events"))
   def documents: DataFrame  = t("documents")
   def embeddings: DataFrame = t("embeddings")
 }
 
 object Tables {
 
-  /** Normalize an events frame's `ts` column to a raw nanosecond epoch
-    * long, whatever logical type the scan produced:
+  /** An events frame with `ts` as a µs `TimestampType` instant, whatever
+    * timestamp type the scan produced. The feed writes parquet
+    * `timestamp[us]` with no zone, which Spark reads as `TIMESTAMP_NTZ`;
+    * by the feed's contract that wall clock is a UTC instant, so it is
+    * cast once here, under the UTC session zone [[graft.core.Graft.tune]]
+    * sets. This matches how the DuckDB oracle reads the same file
+    * (`epoch_us(ts)` on a naive TIMESTAMP treats it as UTC). A
+    * `TimestampType` column passes through. Any other type is refused:
+    * a feed of int64-ns timestamps is refused on read already.
     *
-    *  - `LongType` — already ns (the legacy int64-ns feed read under
-    *    `nanosAsLong`): pass through untouched.
-    *  - `TIMESTAMP_NTZ` (the current µs feed; parquet `timestamp[us]`
-    *    with no tz) — the naive wall-clock is, by the feed's contract,
-    *    a UTC instant; graft sessions pin `spark.sql.session.timeZone`
-    *    to UTC ([[graft.core.Graft.tune]]), so the NTZ→LTZ cast is
-    *    wall-clock-preserving and `unix_micros · 1000` recovers the
-    *    exact ns value the old feed carried. This matches how the
-    *    driver's DuckDB oracle reads the same file (`epoch_us(ts)` on
-    *    a naive TIMESTAMP treats it as UTC).
-    *  - `TimestampType` — already an instant; `unix_micros · 1000`.
-    *
-    * Works on batch AND streaming frames (it branches on the schema,
-    * never the data), so every `readStream` intake applies the same
-    * normalization. Column order is preserved (`withColumn` replaces
-    * in place).
+    * It branches on the schema, never the data, so the batch
+    * [[Tables.events]] and every `readStream` intake share it. Column
+    * order is preserved (`withColumn` replaces in place).
     */
-  def normalizeEventTs(df: DataFrame): DataFrame =
+  def eventTime(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
-      case LongType => df
+      case TimestampType => df
       case TimestampNTZType =>
-        // The NTZ→LTZ cast below is wall-clock-preserving ONLY under a
-        // UTC session timezone; anything else would silently shift every
-        // instant by the zone offset. Fail loudly instead (mirrors the
-        // old feed's hard dependency on Graft.tune's nanosAsLong).
+        // The NTZ→LTZ cast is wall-clock-preserving ONLY under a UTC
+        // session zone; anything else would silently shift every
+        // instant by the zone offset, so fail loudly instead.
         val tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
         // accept any zone whose rules ARE UTC ("UTC", "Etc/UTC", "GMT",
         // "Z", "+00:00"): the cast is wall-clock-correct under all of
@@ -86,30 +72,12 @@ object Tables {
           s"events.ts is TIMESTAMP_NTZ and spark.sql.session.timeZone is '$tz'; " +
             "graft requires UTC (set via graft.core.Graft.tune) so the " +
             "NTZ->instant cast preserves the feed's UTC wall-clock")
-        df.withColumn("ts",
-          unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
-      case TimestampType =>
-        df.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
+        df.withColumn("ts", col("ts").cast(TimestampType))
       case other =>
         throw new IllegalStateException(
           s"events.ts: unsupported physical type $other — expected " +
-            "int64 ns, timestamp, or timestamp_ntz")
+            "timestamp or timestamp_ntz")
     }
-
-  /** Inverse direction for writers that must emit a row matching the
-    * feed's RAW schema (e.g. the streaming sentinel file): render a ns
-    * epoch-long column as `dt`, the raw feed's `ts` type.
-    */
-  def tsLiteralAs(ns: Column, dt: DataType): Column = dt match {
-    case LongType => ns
-    case TimestampNTZType | TimestampType =>
-      // Exact integer division (Fns.nsToUs): `/` on longs is DOUBLE
-      // division in Spark, and at epoch-ns magnitude (~1.7e18 > 2^53)
-      // the rounded quotient can come back 1µs low after the cast.
-      timestamp_micros(graft.functions.Fns.nsToUs(ns)).cast(dt)
-    case other =>
-      throw new IllegalStateException(s"events.ts: unsupported type $other")
-  }
 
   /** CSV seed loader — the analog of dbt's seed with
     * `+column_types: {locationid: numeric}` (dbt_project.yml:43-47):

@@ -125,24 +125,23 @@ object Events {
     lazy val schema: StructType = spark.read.parquet(path).schema
 
     /** A fresh file-stream source over `feedDir` (FileStreamSource
-      * consumes a DIRECTORY: files land and are processed once). Each
+      * consumes a DIRECTORY: files land and are processed once), with
+      * `ts` as the loader's µs timestamp ([[Tables.eventTime]]). Each
       * call is a separate source, so a stream-stream join calls it per
       * side. `oneFilePerBatch` rate-limits it to one file per batch.
       */
     def source(feedDir: java.nio.file.Path,
         oneFilePerBatch: Boolean = false): DataFrame = {
       val reader = spark.readStream.schema(schema)
-      (if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1") else reader)
-        .parquet(feedDir.toString)
+      Tables.eventTime(
+        (if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1") else reader)
+          .parquet(feedDir.toString))
     }
 
-    /** [[source]] with `ts` normalized to ns and `event_ts` as its
-      * event-time timestamp.
-      */
+    /** [[source]] with `event_ts` as its event-time timestamp. */
     def events(feedDir: java.nio.file.Path,
         oneFilePerBatch: Boolean = false): DataFrame =
-      Tables.normalizeEventTs(source(feedDir, oneFilePerBatch))
-        .withColumn("event_ts", nsToTimestamp(col("ts")))
+      source(feedDir, oneFilePerBatch).withColumn("event_ts", col("ts"))
 
     /** Start `writer` under `Trigger.AvailableNow` (the scheduled
       * catch-up shape: process everything present, then stop) and wait
@@ -181,7 +180,7 @@ object Events {
   /** D1: hourly tumbling-window aggregate over the events feed. */
   def qHourlyEvents(spark: SparkSession, dir: String): DataFrame =
     hourlyAgg(Tables(spark, dir).events
-      .withColumn("event_ts", nsToTimestamp(col("ts"))))
+      .withColumn("event_ts", col("ts")))
 
   val qHourlyEventsSql: String =
     """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
@@ -212,7 +211,7 @@ object Events {
     */
   def qSlidingWindow(spark: SparkSession, dir: String): DataFrame =
     slidingAgg(Tables(spark, dir).events
-      .withColumn("event_ts", nsToTimestamp(col("ts"))))
+      .withColumn("event_ts", col("ts")))
 
   val qSlidingWindowSql: String =
     """SELECT (epoch_us(ts) // 900000000 - k) * 900000000 AS win_start_us,
@@ -230,10 +229,9 @@ object Events {
     */
   def qSessionize(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir).events
-      .withColumn("event_ts", nsToTimestamp(col("ts")))
-      .groupBy(session_window(col("event_ts"), "30 minutes"), col("user_id"))
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(
-        min(unix_micros(col("event_ts"))).as("session_start_us"),
+        min(unix_micros(col("ts"))).as("session_start_us"),
         count(lit(1)).as("n_events"),
         decSum(col("value")).as("total_value"))
       .select(col("user_id"), col("session_start_us"), col("n_events"),
@@ -433,11 +431,10 @@ object Events {
     */
   def qStreamSessionize(spark: SparkSession, dir: String): DataFrame =
     runAvailableNow(spark, dir) { (spark, r) =>
-      // ev = the normalized view (ts as ns long) for high-water-mark math
-      val ev = Tables.normalizeEventTs(spark.read.parquet(r.path))
+      val ev = Tables(spark, dir).events
       val feedDir = stageFeed(r.path, "graft_feed_sess")
       val gapUs = 30L * 60 * 1000000
-      val maxUs = ev.agg(max(nsToUs(col("ts")))).collect()(0).getLong(0)
+      val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
       val sentinelUs = maxUs + 2 * gapUs
       // sentinel feed, same schema as the real one (unused columns null);
       // ts is rendered in the RAW feed's physical type so the sentinel
@@ -448,7 +445,7 @@ object Events {
       val scratch = tempDir("graft_sentinel")
       ev.select(col("user_id")).distinct()
         .withColumn("ts",
-          Tables.tsLiteralAs(lit(sentinelUs * 1000L), schema("ts").dataType))
+          timestamp_micros(lit(sentinelUs)).cast(schema("ts").dataType))
         .withColumn("value", lit(0.0))
         .select(schema.fieldNames.map(f =>
           if (Seq("user_id", "ts", "value").contains(f)) col(f)
@@ -457,8 +454,8 @@ object Events {
       val part = java.nio.file.Files.list(scratch).filter(p =>
         p.getFileName.toString.endsWith(".parquet")).findFirst().get()
       java.nio.file.Files.move(part, feedDir.resolve("zz_sentinel.parquet"))
-      val stream = Tables.normalizeEventTs(r.source(feedDir))
-        .select(col("user_id"), nsToUs(col("ts")).as("ts_us"),
+      val stream = r.source(feedDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("value").cast("double").as("value"))
         .as(Encoders.product[Ev])
       val sessions = sessionizeStateful(stream, gapUs)(
@@ -593,8 +590,8 @@ object Events {
       stateRoot: java.nio.file.Path,
       checkpoint: Option[String]): Seq[Long] = {
     val processed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val changes = Tables.normalizeEventTs(r.source(feedDir, oneFilePerBatch = true))
-      .select(col("user_id").as("key"), nsToUs(col("ts")).as("seq"),
+    val changes = r.source(feedDir, oneFilePerBatch = true)
+      .select(col("user_id").as("key"), unix_micros(col("ts")).as("seq"),
         col("event_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
         dec(col("value"), 18, 2).as("new_bal"))
@@ -787,8 +784,8 @@ object Events {
       // closed horizon from the static table (1-row aggregate): the MIN
       // of the two sides' max event times − (watermark delay + margin)
       val mx = Tables(spark, dir).events.agg(
-        max(when(col("event_type") === "purchase", nsToUs(col("ts")))).as("mp"),
-        max(when(col("event_type") === "click", nsToUs(col("ts")))).as("mc")).head
+        max(when(col("event_type") === "purchase", unix_micros(col("ts")))).as("mp"),
+        max(when(col("event_type") === "click", unix_micros(col("ts")))).as("mc")).head
       val horizonUs =
         math.min(mx.getLong(0), mx.getLong(1)) - (2L + 1L) * 3600L * 1000000L
       sink
@@ -866,12 +863,13 @@ object Events {
       val now = System.currentTimeMillis()
       stageWave(raw.filter(col("event_id") % 7 =!= 0), 0, now - 60000)
       // 1-row aggregate: the filler must outrun every real event time
-      val maxNs = Tables.normalizeEventTs(raw)
-        .agg(max(col("ts"))).head.getLong(0)
+      val maxUs = Tables(spark, dir).events
+        .agg(max(unix_micros(col("ts")))).head.getLong(0)
       val filler = spark.range(1).select(r.schema.fields.map { f =>
         (f.name match {
           case "ts" =>
-            Tables.tsLiteralAs(lit(maxNs + 8640000000000000L), f.dataType)
+            // 100 days past the last real event
+            timestamp_micros(lit(maxUs + 8640000000000L)).cast(f.dataType)
           case "event_id" | "user_id" => lit(-1L).cast(f.dataType)
           case "event_type" => lit("__filler").cast(f.dataType)
           case "value" => lit(0.0).cast(f.dataType)

@@ -69,12 +69,11 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("q_cdc_apply: deletes vanish, inserts appear, unchanged keys keep base balance") {
-    import graft.functions.Fns.nsToUs
     val out = run("q_cdc_apply").cache()
     val ev = graft.sources.Tables(spark, dir).events
     val cust = graft.sources.Tables(spark, dir).customer
     // keys whose LATEST change is a delete must be absent
-    val latest = ev.select(col("user_id"), nsToUs(col("ts")).as("s"),
+    val latest = ev.select(col("user_id"), unix_micros(col("ts")).as("s"),
         col("event_id"), col("event_type"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("user_id")
@@ -225,10 +224,9 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("q_orc_roundtrip: ORC boundary is lossless vs the parquet-direct plan") {
-    import graft.functions.Fns.nsToUs
     val rt = run("q_orc_roundtrip")
     val direct = graft.sources.Tables(spark, dir).events
-      .select(col("event_id"), col("event_type"), nsToUs(col("ts")).as("t_us"),
+      .select(col("event_id"), col("event_type"), unix_micros(col("ts")).as("t_us"),
         col("value"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -563,11 +561,10 @@ class MiningSpec extends AnyFunSuite {
   }
 
   test("q_stream_join: streaming interval join equals the batch pair set") {
-    import graft.functions.Fns.nsToUs
     val stream = run("q_stream_join")
     val ev = graft.sources.Tables(spark, dir).events
       .select(col("user_id"), col("event_id"), col("event_type"),
-        nsToUs(col("ts")).as("t"))
+        unix_micros(col("ts")).as("t"))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_event_id"),
         col("t").as("pt"))

@@ -259,11 +259,10 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q_range_join: bucketed range join equals the naive inequality join") {
-    import graft.functions.Fns.nsToUs
     val got = run("q_range_join")
     val ev = graft.sources.Tables(spark, dir).events
       .select(col("user_id"), col("event_id"), col("event_type"),
-        nsToUs(col("ts")).as("ts_us"))
+        unix_micros(col("ts")).as("ts_us"))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("purchase_event_id"),
         col("ts_us").as("purchase_us"))
@@ -339,14 +338,13 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q_first_last: one row per user; equals min/max-ts lookups") {
-    import graft.functions.Fns.nsToUs
     val d = run("q_first_last").cache()
     assert(d.count() == d.select("user_id").distinct().count())
     // spot-check one user end-to-end
     val u = d.select("user_id").head.getLong(0)
     val ev = graft.sources.Tables(spark, dir).events
       .filter(col("user_id") === u)
-      .select(nsToUs(col("ts")).as("t"), col("event_id"), col("value"))
+      .select(unix_micros(col("ts")).as("t"), col("event_id"), col("value"))
       .orderBy("t", "event_id").collect()
     val row = d.filter(col("user_id") === u).head
     assert(row.getDouble(1) == ev.head.getDouble(2))

@@ -110,7 +110,7 @@ class ReshapeSpec extends AnyFunSuite {
 
   test("q_gaps_islands: streaks equal a naive driver-side recomputation") {
     val days = graft.sources.Tables(spark, dir).events
-      .select(col("user_id"), to_date(graft.functions.Fns.nsToTimestamp(col("ts"))).as("d"))
+      .select(col("user_id"), to_date(col("ts")).as("d"))
       .distinct().collect().map(r => (r.getLong(0), r.getDate(1).toLocalDate))
     val expected = days.groupBy(_._1).map { case (u, rows) =>
       val ds = rows.map(_._2).sortBy(_.toEpochDay)
@@ -352,7 +352,7 @@ class ReshapeSpec extends AnyFunSuite {
     // recompute the top cell's z from the raw hourly counts
     val t = graft.sources.Tables(spark, dir)
     val hourly = t.events
-      .select(graft.functions.Fns.nsToTimestamp(col("ts")).as("tt"))
+      .select(col("ts").as("tt"))
       .groupBy(to_date(col("tt")).as("day"),
         (dayofweek(col("tt")) - 1).as("dow"), hour(col("tt")).as("hh"))
       .agg(count(lit(1)).as("cnt"))

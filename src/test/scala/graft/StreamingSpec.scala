@@ -230,16 +230,15 @@ class StreamingSpec extends AnyFunSuite {
 
   test("file-source streaming: readStream over events parquet equals batch hourly agg") {
     val dir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file streaming sources watch a directory
     val streamDir = java.nio.file.Files.createTempDirectory("evstream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = graft.sources.Tables.normalizeEventTs(
+    val stream = graft.sources.Tables.eventTime(
         spark.readStream.schema(schema).parquet(streamDir.toString))
-      .withColumn("event_ts", graft.functions.Fns.nsToTimestamp(col("ts")))
+      .withColumn("event_ts", col("ts"))
       .withWatermark("event_ts", "1 hour")
     val q = Events.hourlyAgg(stream).writeStream
       .outputMode("complete").format("memory").queryName("file_hourly").start()
@@ -255,15 +254,14 @@ class StreamingSpec extends AnyFunSuite {
   test("Trigger.AvailableNow: bounded catch-up run terminates and equals batch") {
     import org.apache.spark.sql.streaming.Trigger
     val dir = "/root/testdata/sf0.001"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val streamDir = java.nio.file.Files.createTempDirectory("evcatchup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = graft.sources.Tables.normalizeEventTs(
+    val stream = graft.sources.Tables.eventTime(
         spark.readStream.schema(schema).parquet(streamDir.toString))
-      .withColumn("event_ts", graft.functions.Fns.nsToTimestamp(col("ts")))
+      .withColumn("event_ts", col("ts"))
       .withWatermark("event_ts", "1 hour")
     // AvailableNow = the incremental-batch trigger: process everything
     // present, then STOP — the shape a scheduled catch-up job runs
@@ -308,7 +306,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val evs = graft.sources.Tables(spark, dir).events
       .select(col("user_id").cast("long").as("user_id"),
-        graft.functions.Fns.nsToUs(col("ts")).as("ts_us"),
+        unix_micros(col("ts")).as("ts_us"),
         col("value"))
       .as[Events.Ev]
     val stateful = Events.sessionizeStateful(evs).collect()
@@ -479,7 +477,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch restatement: LEFT join at the same closed horizon
     val ev = graft.sources.Tables(spark, dir).events
       .select(col("user_id"), col("event_id"), col("event_type"),
-        graft.functions.Fns.nsToUs(col("ts")).as("t"))
+        unix_micros(col("ts")).as("t"))
     val mx = ev.agg(
       max(when(col("event_type") === "purchase", col("t"))),
       max(when(col("event_type") === "click", col("t")))).head
@@ -505,7 +503,7 @@ class StreamingSpec extends AnyFunSuite {
     // hour-window END strictly clears that watermark
     val ev = graft.sources.Tables(spark, dir).events
       .select(col("event_id"), col("event_type"), col("value"),
-        graft.functions.Fns.nsToUs(col("ts")).as("t_us"))
+        unix_micros(col("ts")).as("t_us"))
     val wmMs = ev.filter(col("event_id") % 7 =!= 0)
       .agg(max(expr("t_us div 1000"))).head.getLong(0) - 7200000L
     val kept = ev.filter(col("event_id") % 7 =!= 0 ||

@@ -5,14 +5,10 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Data-feed canary: asserts the logical types `Tables` hands every
-  * operator, per table, at each test scale factor.
-  *
-  * Exists because the round-4 test data regeneration silently changed
-  * `events.ts` from int64-nanoseconds to a µs timestamp and 82 tests
-  * across 9 suites failed with an analyzer stack instead of one
-  * readable message. If the driver regenerates the feed again, THIS
-  * suite fails first, and its message says which table and column
-  * moved.
+  * operator, per table, at each test scale factor. If the feed's
+  * physical types change, THIS suite fails first, with a message that
+  * names the table and column that moved, instead of analyzer stacks
+  * across every suite that reads it.
   */
 class TablesCanarySpec extends AnyFunSuite {
 
@@ -24,24 +20,45 @@ class TablesCanarySpec extends AnyFunSuite {
   private def typesOf(df: org.apache.spark.sql.DataFrame): Map[String, DataType] =
     df.schema.fields.map(f => f.name -> f.dataType).toMap
 
-  test("events: ts is normalized to a nanosecond epoch long (any physical type)") {
+  test("events: ts is a µs timestamp instant in [2000, 2100)") {
     dirs.foreach { dir =>
       val t = graft.sources.Tables(spark, dir)
       val ts = typesOf(t.events).getOrElse("ts",
         fail(s"$dir/events has no ts column"))
-      assert(ts == LongType,
-        s"$dir: Tables.events must surface ts as a ns-long; got $ts — " +
-          "if the feed's physical type changed again, extend " +
-          "Tables.normalizeEventTs")
-      // and the value must be plausible epoch-nanos (year 2000–2100),
-      // catching a unit slip (µs passed through as "ns" would land in 1970)
+      assert(ts == TimestampType,
+        s"$dir: Tables.events must surface ts as TimestampType; got $ts — " +
+          "if the feed's physical type changed, extend Tables.eventTime")
+      // and the value must be plausible epoch-µs (year 2000–2100),
+      // catching a unit slip (ms or ns read as µs lands far outside)
+      val us = org.apache.spark.sql.functions.unix_micros(
+        org.apache.spark.sql.functions.col("ts"))
       val bounds = t.events.agg(
-        org.apache.spark.sql.functions.min("ts"),
-        org.apache.spark.sql.functions.max("ts")).collect()(0)
+        org.apache.spark.sql.functions.min(us),
+        org.apache.spark.sql.functions.max(us)).collect()(0)
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      assert(lo > 946684800L * 1000000000L && hi < 4102444800L * 1000000000L,
-        s"$dir: events.ts range [$lo, $hi] is not epoch-nanoseconds")
+      assert(lo >= 946684800L * 1000000L && hi < 4102444800L * 1000000L,
+        s"$dir: events.ts range [$lo, $hi] is not epoch-microseconds in [2000, 2100)")
     }
+  }
+
+  test("events: a non-UTC session zone is refused, a UTC alias accepted") {
+    val dir = dirs.head
+    val zone = "spark.sql.session.timeZone"
+    val before = spark.conf.get(zone)
+    def inZone(tz: String): SparkSession = {
+      val clone = org.apache.spark.sql.GraftBridge.cloneSession(spark)
+      clone.conf.set(zone, tz)
+      clone
+    }
+    val err = intercept[IllegalArgumentException] {
+      graft.sources.Tables(inZone("America/New_York"), dir).events
+    }
+    assert(err.getMessage.contains(
+      "spark.sql.session.timeZone is 'America/New_York'; graft requires UTC"),
+      err.getMessage)
+    val utc = graft.sources.Tables(inZone("Etc/UTC"), dir).events
+    assert(typesOf(utc)("ts") == TimestampType)
+    assert(spark.conf.get(zone) == before, "the shared session's zone changed")
   }
 
   test("every table loads with its contracted column types") {
