@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{Checks, Facts, Staging}
+import graft.sources.Tables
 
 /** The engine's `dbt build` equivalent: materialize the model DAG in
   * dependency order with per-model materialization modes (reference
@@ -66,7 +67,7 @@ object Build {
     def table(name: String, df: DataFrame): DataFrame = {
       val path = s"$warehouseDir/$name"
       df.write.mode("overwrite").parquet(path)
-      val back = spark.read.parquet(path)
+      val back = Tables.parquet(spark, path)
       back.createOrReplaceTempView(name)
       back
     }
@@ -122,19 +123,12 @@ object Build {
       sinceMonth: Option[String]): String = {
     import org.apache.spark.sql.functions._
     val path = s"$warehouseDir/fact_lineitem_monthly"
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val fact = Facts.factLineitem(spark, sfDir)
-        .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
-      val slice = sinceMonth.fold(fact)(m => fact.filter(col("ship_month") >= m))
-      slice.write.mode("overwrite").partitionBy("ship_month").parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    val fact = Facts.factLineitem(spark, sfDir)
+      .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
+    val slice = sinceMonth.fold(fact)(m => fact.filter(col("ship_month") >= m))
+    // the write's own option: the session's overwrite mode is untouched
+    slice.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("ship_month").parquet(path)
     path
   }
 

@@ -548,7 +548,7 @@ object StageOracles {
             NativeExprs.cell_probe(col("embedding"), cs, 1)(0))
           .select(col("vec_id"), col("cell"))
         a.write.mode("overwrite").parquet(s"$out/$full")
-        val pinned = spark.read.parquet(s"$out/$full")
+        val pinned = Tables.parquet(spark, s"$out/$full")
         pinned.filter(col("vec_id") % VecMod === VecRes)
           .coalesce(1).write.mode("overwrite").parquet(s"$out/$sample")
         pinned
@@ -593,14 +593,14 @@ object StageOracles {
     // --- LSH-tuning pair frame + its sample ---
     Dedup.ngramJaccardAt(Tables(spark, dir).documents, 0.0)
       .write.mode("overwrite").parquet(s"$out/_lshtune_pairs")
-    spark.read.parquet(s"$out/_lshtune_pairs")
+    Tables.parquet(spark, s"$out/_lshtune_pairs")
       .filter(col("doc_a") % DocMod === DocRes)
       .coalesce(1).write.mode("overwrite").parquet(s"$out/_lshtune_pairs_s")
 
     // --- sample subsets of already-dumped face outputs ---
     def subset(face: String, sample: String, pred: org.apache.spark.sql.Column,
         cols: Seq[String] = Nil): Unit = {
-      val src = spark.read.parquet(s"$out/$face").filter(pred)
+      val src = Tables.parquet(spark, s"$out/$face").filter(pred)
       (if (cols.isEmpty) src else src.select(cols.map(col): _*))
         .coalesce(1).write.mode("overwrite").parquet(s"$out/$sample")
     }

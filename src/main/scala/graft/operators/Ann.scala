@@ -218,7 +218,7 @@ object Ann {
     * matrix (inverse of [[saveIvfIndex]]).
     */
   def loadIvfIndex(spark: SparkSession, path: String): Seq[Seq[Double]] =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map { case (_, rows) =>

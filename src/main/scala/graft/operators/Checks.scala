@@ -420,7 +420,7 @@ object Checks {
     acc.coalesce(1).write.mode("overwrite")
       .parquet(s"$root/accepted_values_o_orderstatus")
     def catalogRow(testName: String, keyCol: String): DataFrame =
-      spark.read.parquet(s"$root/$testName")
+      Tables.parquet(spark, s"$root/$testName")
         .agg(count(lit(1)).as("n_failures"),
           coalesce(sum(col(keyCol) % 1000000007L), lit(0L)).as("key_checksum"))
         .select(lit(testName).as("test_name"),

@@ -207,7 +207,7 @@ object Interop {
     // discipline every partitioned warehouse write needs
     li.repartition(col("ship_month"))
       .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .filter(col("ship_month") >= "1995-01" && col("ship_month") <= "1995-12")
       .groupBy(col("ship_month"))
       .agg(count(lit(1)).as("n_items"),
@@ -253,7 +253,7 @@ object Interop {
       .sortWithinPartitions(col("z"))
       .drop("z")
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .filter(col("ck_bucket") < 32 && col("day_bucket") < 32)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
@@ -322,7 +322,7 @@ object Interop {
         graft.functions.Fns.decSum(col("l_extendedprice")).as("revenue"))
       .coalesce(1).write.mode("overwrite").parquet(out)
     finally cleanup()
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
   }
 
   val bucketJoinSql: String =

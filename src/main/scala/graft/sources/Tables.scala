@@ -12,10 +12,13 @@ import org.apache.spark.sql.types.{DataType, StructType, TimestampNTZType, Times
   * (dbt_project.yml:43-47). Here sources are parquet directories and
   * seeds are CSVs; both come back as DataFrames whose scans Catalyst can
   * prune and push filters into.
+  *
+  * Every table is read through [[Tables.parquet]], so building a
+  * `Tables` and calling its loaders runs no Spark job.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -34,6 +37,27 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** `spark.read.parquet(path)` with its schema read from one parquet
+    * footer on the driver. Without a schema, Spark infers one in a job
+    * whose single task reads one footer: with schema merging off (the
+    * default) that is the file itself, or a directory's first data file
+    * by sorted path, skipping `_*` and `.*` names. That job is a
+    * scheduling round trip before the frame exists, one per table read
+    * (on a cluster, one to the executors). This reads the same footer
+    * with Spark's own footer-to-schema conversion under the session's
+    * converter confs, so the schema is the one inference would give, and
+    * hands it to the reader, which then infers nothing. Nothing is
+    * cached: each call reads the footer afresh. Where that one footer
+    * does not settle the schema (a missing path, a directory with no
+    * data file or with subdirectories such as `partitionBy` output,
+    * merging on), the read is plain `spark.read.parquet`, so Spark's own
+    * inference, or its own error, stands.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.execution.datasources.parquet.GraftFooter
+      .inferredSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** An events frame with `ts` as a µs `TimestampType` instant, whatever
     * timestamp type the scan produced. The feed writes parquet

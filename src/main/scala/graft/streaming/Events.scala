@@ -64,7 +64,7 @@ object Events {
   private def stageFourFiles(spark: SparkSession, path: String,
       prefix: String): java.nio.file.Path = {
     val feedDir = tempDir(prefix)
-    spark.read.parquet(path).repartition(4)
+    Tables.parquet(spark, path).repartition(4)
       .write.mode("overwrite").parquet(feedDir.toString)
     feedDir
   }
@@ -122,7 +122,7 @@ object Events {
     /** The feed's RAW schema: every staged part file carries it, so it
       * is the schema a file-stream source over a staged copy declares.
       */
-    lazy val schema: StructType = spark.read.parquet(path).schema
+    lazy val schema: StructType = Tables.parquet(spark, path).schema
 
     /** A fresh file-stream source over `feedDir` (FileStreamSource
       * consumes a DIRECTORY: files land and are processed once), with
@@ -602,7 +602,7 @@ object Events {
         val incoming =
           if (prev < 0) batch
           else batch.unionByName(
-            sp.read.parquet(stateRoot.resolve(s"v$prev").toString))
+            Tables.parquet(sp, stateRoot.resolve(s"v$prev").toString))
         incoming
           .groupBy(col("key"))
           .agg(max(struct(col("seq"), col("event_id"), col("op"),
@@ -625,8 +625,8 @@ object Events {
     */
   private def cdcFinal(spark: SparkSession, dir: String,
       stateRoot: java.nio.file.Path): DataFrame = {
-    val latest = spark.read
-      .parquet(stateRoot.resolve(s"v${latestStateVersion(stateRoot)}").toString)
+    val latest = Tables
+      .parquet(spark, stateRoot.resolve(s"v${latestStateVersion(stateRoot)}").toString)
       .select(col("key"), col("op"), col("new_bal"))
     val base = Tables(spark, dir).customer.select(col("c_custkey").as("key"),
       dec(col("c_acctbal"), 18, 2).as("base_bal"))
@@ -837,7 +837,7 @@ object Events {
     */
   def qStreamLate(spark: SparkSession, dir: String): DataFrame =
     runAvailableNow(spark, dir) { (spark, r) =>
-      val raw = spark.read.parquet(r.path)
+      val raw = Tables.parquet(spark, r.path)
       val feedDir = tempDir("graft_feed_late")
       def stageWave(df: DataFrame, n: Int, mtimeMs: Long): Unit = {
         val tmp = tempDir(s"graft_late_wave$n")

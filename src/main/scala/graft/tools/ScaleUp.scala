@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Dev harness: synthesize an N×-replicated copy of a testdata scale
   * directory with FK-consistent key offsets, for scale-up validation
@@ -40,7 +41,7 @@ object ScaleUp {
     val distinctMode = args.length > 3 && args(3) == "distinct"
     val spark = graft.core.Graft.localSession()
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
+    def read(t: String): DataFrame = Tables.parquet(spark, s"$srcDir/$t.parquet")
 
     // max(key)+1 per offsettable key, collected once (scalar per table)
     def span(df: DataFrame, key: String): Long =

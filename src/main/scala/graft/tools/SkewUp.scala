@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Builds the skewed sibling of a ScaleUp directory: every table is
   * carried over unchanged except lineitem, whose l_orderkey is pointed
@@ -51,7 +52,7 @@ object SkewUp {
       System.err.println(s"[skewup] copied $t")
     }
 
-    val li = spark.read.parquet(s"$srcDir/lineitem.parquet")
+    val li = Tables.parquet(spark, s"$srcDir/lineitem.parquet")
     val hotKey = li.agg(min(col("l_orderkey"))).head.getLong(0)
     li.select(li.columns.map {
         case "l_orderkey" =>

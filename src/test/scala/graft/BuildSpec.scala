@@ -151,7 +151,11 @@ class BuildSpec extends AnyFunSuite {
     val before = mtimes
     val since = "1997-06"
     Thread.sleep(1100) // mtime granularity
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
     Build.buildFactIncremental(spark, dir, wh, Some(since))
+    // dynamic overwrite is the write's own option, not the session's
+    assert(spark.conf.getOption(mode) == modeBefore)
     val after = mtimes
 
     // identical content to a full rebuild

@@ -34,9 +34,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "spark.ui.enabled",
     "spark.sql.artifact.isolation.enabled",
     "spark.sql.streaming.checkpointFileManagerClass",
-    "spark.hadoop.fs.file.impl",
-    // Build.buildFactIncremental: dynamic partition overwrite
-    "spark.sql.sources.partitionOverwriteMode")
+    "spark.hadoop.fs.file.impl")
 
   /** (file:line, trimmed code) for every non-comment line under src/main. */
   private lazy val codeLines: List[(String, String)] = {
