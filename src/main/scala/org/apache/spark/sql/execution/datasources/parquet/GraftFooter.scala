@@ -1,8 +1,9 @@
 package org.apache.spark.sql.execution.datasources.parquet
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 
-import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.sql.{classic, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -17,42 +18,34 @@ object GraftFooter {
     * a file, else the directory's first data file by sorted path, with
     * `_*` and `.*` names skipped as Spark's file index skips them. None
     * where that rule does not settle the answer (schema merging on, a
-    * missing or glob path, a directory with no data file, a nested or
-    * partitioned directory, parquet summary files, an unreadable footer);
-    * the caller then lets Spark infer, so Spark's own result or error
-    * stands.
+    * missing path, a directory with no data file or with subdirectories,
+    * an unreadable footer); the caller then lets Spark infer, so Spark's
+    * own result or error stands.
     */
   def inferredSchema(spark: SparkSession, path: String): Option[StructType] = {
     val state = spark.asInstanceOf[classic.SparkSession].sessionState
     val hadoopConf = state.newHadoopConf()
-    val p = new Path(path)
-    def hidden(name: String): Boolean =
-      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
-        name.endsWith("._COPYING_")
-    def summary(name: String): Boolean =
-      name == "_metadata" || name == "_common_metadata"
-    try {
-      if (state.conf.isParquetSchemaMergingEnabled || SparkHadoopUtil.get.isGlobPath(p)) None
-      else {
-        val fs = p.getFileSystem(hadoopConf)
-        val status = fs.getFileStatus(p)
-        val file: Option[FileStatus] =
-          if (!status.isDirectory) Some(status)
-          else {
-            val children = fs.listStatus(p).toSeq
-            val visible = children.filterNot(c => hidden(c.getPath.getName))
-            if (children.exists(c => summary(c.getPath.getName)) ||
-                visible.exists(_.isDirectory)) None
-            else visible.sortBy(_.getPath.toString).headOption
-          }
-        file.map { f =>
-          val footer = ParquetFileFormat
-            .readParquetFootersInParallel(hadoopConf, Seq(f), ignoreCorruptFiles = false)
-            .head
-          ParquetFileFormat.readSchemaFromFooter(
-            footer, new ParquetToSparkSchemaConverter(state.conf))
+    def hidden(f: FileStatus): Boolean =
+      f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith(".")
+    if (state.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      val status = fs.getFileStatus(p)
+      val file =
+        if (!status.isDirectory) Some(status)
+        else {
+          val visible = fs.listStatus(p).toSeq.filterNot(hidden)
+          if (visible.exists(_.isDirectory)) None
+          else visible.sortBy(_.getPath.toString).headOption
         }
+      file.map { f =>
+        val footer = ParquetFileFormat
+          .readParquetFootersInParallel(hadoopConf, Seq(f), ignoreCorruptFiles = false)
+          .head
+        ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(state.conf))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case NonFatal(_) => None }
   }
 }
