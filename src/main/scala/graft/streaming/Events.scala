@@ -625,8 +625,8 @@ object Events {
     */
   private def cdcFinal(spark: SparkSession, dir: String,
       stateRoot: java.nio.file.Path): DataFrame = {
-    val latest = Tables
-      .parquet(spark, stateRoot.resolve(s"v${latestStateVersion(stateRoot)}").toString)
+    val latest = Tables.parquet(spark,
+        stateRoot.resolve(s"v${latestStateVersion(stateRoot)}").toString)
       .select(col("key"), col("op"), col("new_bal"))
     val base = Tables(spark, dir).customer.select(col("c_custkey").as("key"),
       dec(col("c_acctbal"), 18, 2).as("base_bal"))

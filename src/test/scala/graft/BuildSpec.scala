@@ -139,6 +139,8 @@ class BuildSpec extends AnyFunSuite {
   test("incremental fact build: only the refreshed months rewrite, result equals full") {
     import org.apache.spark.sql.functions._
     val wh = Files.createTempDirectory("graft_inc").toString
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
     val path = Build.buildFactIncremental(spark, dir, wh, None)
     val full = spark.read.parquet(path)
     val total = full.count()
@@ -151,8 +153,6 @@ class BuildSpec extends AnyFunSuite {
     val before = mtimes
     val since = "1997-06"
     Thread.sleep(1100) // mtime granularity
-    val mode = "spark.sql.sources.partitionOverwriteMode"
-    val modeBefore = spark.conf.getOption(mode)
     Build.buildFactIncremental(spark, dir, wh, Some(since))
     // dynamic overwrite is the write's own option, not the session's
     assert(spark.conf.getOption(mode) == modeBefore)

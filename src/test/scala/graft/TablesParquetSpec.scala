@@ -42,9 +42,8 @@ class TablesParquetSpec extends AnyFunSuite {
   private def assertSameSchema(path: String): Unit = {
     val inferred = spark.read.parquet(path).schema
     val read = Tables.parquet(spark, path).schema
+    // StructType equality covers names, types, nullability and metadata
     assert(read == inferred, s"$path: ${read.treeString} vs ${inferred.treeString}")
-    // StructType equality covers nullability; say so where it differs
-    assert(read.map(_.nullable) == inferred.map(_.nullable), path)
   }
 
   private def jobsDuring(body: => Unit): Int = {
