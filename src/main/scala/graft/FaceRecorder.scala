@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -10,12 +11,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** What one face's timed pass did: its seconds, the jobs and completed
   * stages it ran, its scan input, shuffle write and spill (shuffle kept
-  * on its own line), the final post-AQE executed plan of its `noop`
-  * write, and the progress JSON of each streaming micro-batch it ran.
+  * on its own line), the classes Spark's code generator compiled (cache
+  * misses, on the driver and in tasks alike), the final post-AQE
+  * executed plan of its `noop` write, and the progress JSON of each
+  * streaming micro-batch it ran.
   */
 private[graft] final case class FaceRecord(face: String, sec: Double, jobs: Int, stages: Int,
     inputBytes: Long, shuffleWriteBytes: Long, shuffleWriteRecords: Long,
-    spillBytes: Long, plan: String, batches: Seq[String]) {
+    spillBytes: Long, codegenCompiles: Long, plan: String, batches: Seq[String]) {
 
   def joins: Seq[String] = plan.linesIterator.map(_.trim)
     .filter(l => FaceRecord.JoinOperators.exists(l.contains))
@@ -30,7 +33,8 @@ private[graft] final case class FaceRecord(face: String, sec: Double, jobs: Int,
     "stages" -> stages.toString, "input_bytes" -> inputBytes.toString,
     "shuffle_write_bytes" -> shuffleWriteBytes.toString,
     "shuffle_write_records" -> shuffleWriteRecords.toString,
-    "spill_bytes" -> spillBytes.toString, "skew_split" -> skewSplit.toString,
+    "spill_bytes" -> spillBytes.toString, "codegen_compiles" -> codegenCompiles.toString,
+    "skew_split" -> skewSplit.toString,
     "joins" -> joins.map(Json.str).mkString("[", ",", "]"), "plan" -> Json.str(plan),
     "batches" -> batches.mkString("[", ",", "]"))
     .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -108,6 +112,8 @@ private[graft] final class FaceRecorder(spark: SparkSession) {
 
   /** Runs `pass` as `face`'s timed pass and returns its record. The
     * listener bus is drained before and after, outside the timed window.
+    * The compile count is the JVM's, so it covers this face only while no
+    * other thread runs a query.
     */
   def record(face: String)(pass: => Unit): FaceRecord = {
     val sc = spark.sparkContext
@@ -116,9 +122,11 @@ private[graft] final class FaceRecorder(spark: SparkSession) {
     lastQe = null
     recording = true
     sc.setLocalProperty(FaceRecorder.FaceKey, face)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     try pass finally sc.setLocalProperty(FaceRecorder.FaceKey, null)
     val sec = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     GraftBridge.drainListenerBus(sc)
     recording = false
     val plan = Option(lastQe).map(_.executedPlan.toString).getOrElse("")
@@ -126,7 +134,7 @@ private[graft] final class FaceRecorder(spark: SparkSession) {
     synchronized {
       val c = counts.getOrElse(face, new Counts)
       FaceRecord(face, sec, c.jobs, c.stages, c.input, c.shuffleBytes,
-        c.shuffleRecords, c.spill, plan,
+        c.shuffleRecords, c.spill, compiles, plan,
         progress.collect { case (run, json) if runFace.get(run).contains(face) => json }.toSeq)
     }
   }

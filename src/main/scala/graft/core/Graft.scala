@@ -103,6 +103,20 @@ object Graft {
         "FileSystemBasedCheckpointFileManager")
     .config("spark.hadoop.fs.file.impl",
       classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+    // Room for every generated class a long-lived session reuses. Spark's
+    // codegen cache is one LRU per JVM, keyed by (class loader, source),
+    // so a whole-stage source takes two entries: the driver's validation
+    // compile and the task's, under the executor's loader. At the stock
+    // 100 entries a warm pass over the 16 relational and iterative
+    // benchmark faces outgrows the cache, every entry is evicted before
+    // its reuse, and every stage compiles again on every run. A cold
+    // sweep of all 244 faces at sf0.01 fills 2,889 entries; the warm
+    // sweep after it compiled 3,912 classes in 50.7 s at 100 entries and
+    // 86 in 36.8 s at 4096 (local[4]). The driver and each executor JVM
+    // hold a cache of their own, so a cluster session that reruns the
+    // same faces thrashes in the same way at 100. A static conf, read once
+    // per JVM, when it first generates code: set it on the builder.
+    .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** Runs `face` on a clone of `spark` whose shuffle WIDTH is `width` —
     * BOTH `spark.sql.shuffle.partitions` AND

@@ -202,16 +202,26 @@ object Interop {
     val li = Tables(spark, dir).lineitem
       .withColumn("ship_month",
         date_format(col("l_shipdate"), "yyyy-MM"))
-    // repartition on the partition column first: one file per month
-    // directory instead of one per (task × month) — the small-files
-    // discipline every partitioned warehouse write needs
-    li.repartition(col("ship_month"))
-      .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-    Tables.parquet(spark, out)
+    partitionedRoundTrip(li, "ship_month", out)
       .filter(col("ship_month") >= "1995-01" && col("ship_month") <= "1995-12")
       .groupBy(col("ship_month"))
       .agg(count(lit(1)).as("n_items"),
         graft.functions.Fns.decSum(col("l_extendedprice")).as("revenue"))
+  }
+
+  /** `df` written `partitionBy(column)` to `out` and read back under
+    * `df`'s own schema: the data columns as written, and `column` as the
+    * partition column with its type in `df` (Spark puts it last). The
+    * reader then only lists the partition directories; it infers no
+    * schema, which for a partitioned directory is a Spark job.
+    */
+  private[graft] def partitionedRoundTrip(df: DataFrame, column: String, out: String): DataFrame = {
+    // repartition on the partition column first: one file per month
+    // directory instead of one per (task × month) — the small-files
+    // discipline every partitioned warehouse write needs
+    df.repartition(col(column))
+      .write.mode("overwrite").partitionBy(column).parquet(out)
+    df.sparkSession.read.schema(df.schema).parquet(out)
   }
 
   val partitionedScanSql: String =

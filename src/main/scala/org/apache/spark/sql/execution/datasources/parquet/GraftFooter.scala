@@ -3,13 +3,18 @@ package org.apache.spark.sql.execution.datasources.parquet
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{classic, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Package-placed bridge to Spark's `private[parquet]` footer-to-schema
   * code, the same code Spark's schema-inference task runs, called on the
-  * driver instead.
+  * driver instead. The footer is read as that task reads it (row groups
+  * skipped), on the calling thread: Spark's `readParquetFootersInParallel`
+  * would build and shut down a thread pool for the one file.
   */
 object GraftFooter {
 
@@ -40,11 +45,10 @@ object GraftFooter {
           else visible.sortBy(_.getPath.toString).headOption
         }
       file.map { f =>
-        val footer = ParquetFileFormat
-          .readParquetFootersInParallel(hadoopConf, Seq(f), ignoreCorruptFiles = false)
-          .head
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
         ParquetFileFormat.readSchemaFromFooter(
-          footer, new ParquetToSparkSchemaConverter(state.conf))
+          new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(state.conf))
       }
     } catch { case NonFatal(_) => None }
   }

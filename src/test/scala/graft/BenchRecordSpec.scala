@@ -50,6 +50,8 @@ class BenchRecordSpec extends AnyFunSuite {
       assert(q1.plan.contains("AdaptiveSparkPlan isFinalPlan=true"), q1.plan)
       assert(q1.plan.contains("Exchange"), q1.plan)
       assert(q1.batches.isEmpty && q1Again.batches.isEmpty)
+      // the session's codegen cache holds q1_pricing's classes by now
+      assert(q1Again.codegenCompiles == 0, q1Again.json)
       assert(stream.batches.nonEmpty, "q_stream_hourly recorded no micro-batch")
 
       val mapper = new ObjectMapper()
@@ -57,6 +59,7 @@ class BenchRecordSpec extends AnyFunSuite {
         val node = mapper.readTree(r.json)
         assert(node.get("face").asText == r.face)
         assert(node.get("shuffle_write_bytes").asLong == r.shuffleWriteBytes)
+        assert(node.get("codegen_compiles").asLong == r.codegenCompiles)
         assert(node.get("plan").asText == r.plan)
         assert(node.get("joins").size == r.joins.size)
       }

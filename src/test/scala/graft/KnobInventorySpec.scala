@@ -34,7 +34,8 @@ class KnobInventorySpec extends AnyFunSuite {
     "spark.ui.enabled",
     "spark.sql.artifact.isolation.enabled",
     "spark.sql.streaming.checkpointFileManagerClass",
-    "spark.hadoop.fs.file.impl")
+    "spark.hadoop.fs.file.impl",
+    "spark.sql.codegen.cache.maxEntries")
 
   /** (file:line, trimmed code) for every non-comment line under src/main. */
   private lazy val codeLines: List[(String, String)] = {

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
@@ -227,5 +231,44 @@ class SourcesSpec extends AnyFunSuite {
     val forks = programs.filter(Set("chmod", "readlink"))
       .groupBy(identity).map { case (p, ps) => p -> ps.size }
     assert(forks.isEmpty)
+  }
+
+  test("a partitionBy round trip reads back Spark's inferred schema without inferring it") {
+    val sc = spark.sparkContext
+    // each started job's description, or its SQL execution for a write
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        jobs.add(Option(p.getProperty("spark.sql.execution.id")).map(_ => "write")
+          .orElse(Option(p.getProperty("spark.job.description"))).getOrElse("?")): Unit
+      }
+    }
+    def started[A](body: => A): (A, Seq[String]) = {
+      GraftBridge.drainListenerBus(sc)
+      jobs.clear()
+      val a = body
+      GraftBridge.drainListenerBus(sc)
+      (a, jobs.asScala.toSeq)
+    }
+    val out = Files.createTempDirectory("graft_part_rt").toString + "/fact"
+    val li = Tables(spark, dir).lineitem
+      .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
+    sc.addSparkListener(probe)
+    try {
+      val (back, roundTrip) = started(
+        graft.operators.Interop.partitionedRoundTrip(li, "ship_month", out))
+      val (inferred, read) = started(spark.read.parquet(out))
+      assert(back.schema == inferred.schema,
+        s"${back.schema.treeString} vs ${inferred.schema.treeString}")
+      assert(back.columns.last == "ship_month" &&
+        back.schema("ship_month").dataType == org.apache.spark.sql.types.StringType)
+      // both reads list the month directories; only Spark's own infers
+      def inference(js: Seq[String]): Seq[String] =
+        js.filterNot(j => j == "write" || j.startsWith("Listing leaf files"))
+      assert(inference(read).size == 1, read.mkString("; "))
+      assert(roundTrip.contains("write") && inference(roundTrip).isEmpty,
+        roundTrip.mkString("; "))
+    } finally sc.removeSparkListener(probe)
   }
 }
