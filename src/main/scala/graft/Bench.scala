@@ -21,6 +21,13 @@ import scala.util.control.NonFatal
   */
 object Bench {
   private def noop(df: DataFrame): Unit = df.write.mode("overwrite").format("noop").save()
+  private def sec(v: Double): String = f"$v%.3f"
+  private def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+  private def entry(key: String, value: String): String = "\"" + key + "\":" + value
 
   /** Drops every persisted RDD. A face's checkpoints stay registered in
     * the block manager until the ContextCleaner gets to them, and the
@@ -31,7 +38,7 @@ object Bench {
     * faces changes only what a face pays for. The drop that opens a
     * timing window blocks, so no unpersist still runs inside it.
     */
-  private def dropPersisted(spark: SparkSession, blocking: Boolean = false): Unit =
+  private[graft] def dropPersisted(spark: SparkSession, blocking: Boolean = false): Unit =
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = blocking))
 
   /** One face: an untimed warm-up pass (planning, codegen, JIT), then a
@@ -55,6 +62,20 @@ object Bench {
     Some(rec)
   }
 
+  /** bench.json's `"scaleup"` member: per face, the min of its timed
+    * passes under `queries` (-1 for a failed face) and every pass under
+    * `reps_sec`, so a contended pass shows beside the one kept.
+    */
+  private[graft] def scaleupJson(dir: String, reps: Seq[(String, Seq[Double])]): String = {
+    def obj(f: Seq[Double] => String) =
+      reps.map { case (k, r) => entry(k, f(r)) }.mkString("{", ",", "}")
+    val m = obj(r => sec(r.minOption.getOrElse(-1.0)))
+    val all = obj(_.map(sec).mkString("[", ",", "]"))
+    val total = reps.flatMap(_._2.minOption).sum
+    s""""scaleup":{"dir":"$dir","factor_vs_sf01":64,"reps":2,"total":${sec(total)},""" +
+      s""""queries":$m,"reps_sec":$all}"""
+  }
+
   def main(args: Array[String]): Unit = {
     // Consumers parse JSON lines from stdout, so everything else written
     // to System.out (JVM chatter, Spark banners, stray printlns) goes to
@@ -63,8 +84,7 @@ object Bench {
     System.setOut(System.err)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Graft.localSession()
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = SparkEntry.only
 
     // Process-wide cold costs (classloading, parquet reader init, codegen
     // compiler, JIT) land on whichever faces run first, ~3× their solo
@@ -83,12 +103,8 @@ object Bench {
     // cross-run ratios by it, so a uniformly slower machine does not
     // flag untouched faces.
     val calibration: Double =
-      try {
-        System.gc()
-        val t0 = System.nanoTime()
-        noop(SparkEntry.queries("q1_pricing")(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
-      } catch { case NonFatal(_) => -1.0 }
+      try { System.gc(); seconds(noop(SparkEntry.queries("q1_pricing")(spark, sfDir))) }
+      catch { case NonFatal(_) => -1.0 }
     // Scale-up arm: when a ScaleUp replica exists (`runMain
     // graft.tools.ScaleUp <sf0.1 dir> target/scaleup64 64`),
     // time the SF-scaling headline joins at 64× sf0.1, where the
@@ -98,42 +114,32 @@ object Bench {
     // cold page-cache I/O (one cold pass read 200 s against ~2 s
     // steady), so each face gets an untimed pass, then the min of two
     // gc-fenced passes: one pass cannot tell box contention from a real
-    // cliff. Skipped when the dir is absent.
+    // cliff. bench.json keeps both passes. Skipped when the dir is absent.
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scaleup64")
-    val scaleResults: Seq[(String, Double)] =
+    val scaleReps: Seq[(String, Seq[Double])] =
       if (only.isEmpty && new java.io.File(s"$scaleDir/lineitem.parquet").isDirectory) {
         Seq("q1_pricing", "q3_topk", "q5_join5", "q14_promo",
           "q18_big_orders", "q_fact_join").map { name =>
           def once(): Unit = noop(SparkEntry.queries(name)(spark, scaleDir))
-          val s = try {
+          val reps = try {
             once()
-            val reps = for (_ <- 1 to 2) yield {
+            for (_ <- 1 to 2) yield {
               dropPersisted(spark, blocking = true)
               System.gc()
-              val t0 = System.nanoTime()
-              once()
-              val dt = (System.nanoTime() - t0) / 1e9
+              val dt = seconds(once())
               dropPersisted(spark)
               dt
             }
-            reps.min
           } catch {
             case NonFatal(e) =>
               System.err.println(
                 s"BENCH SCALEUP FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-              -1.0
+              Seq.empty
           }
-          name -> s
+          name -> reps
         }
       } else Seq.empty
 
-    // a misspelled name must not silently yield an empty bench
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"WARNING: SPARK_GRAFT_ONLY names match no registered query: ${unknown.mkString(", ")}")
-    }
     val recorder = new FaceRecorder(spark)
     // stable order for readable output
     val timed = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -141,19 +147,11 @@ object Bench {
       .map { case (name, fn) => name -> timeFace(spark, sfDir, recorder, name, fn) }
     recorder.close()
     val results = timed.map { case (name, rec) => name -> rec.map(_.sec).getOrElse(-1.0) }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val totalStr = f"$total%.3f"
-    val scaleJson = if (scaleResults.isEmpty) "" else {
-      val m = scaleResults.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val st = scaleResults.map(_._2).filter(_ >= 0).sum
-      s""","scaleup":{"dir":"$scaleDir","factor_vs_sf01":64,"reps":2,"total":${f"$st%.3f"},"queries":$m}"""
-    }
+    val qs = results.map { case (k, v) => entry(k, sec(v)) }.mkString("{", ",", "}")
+    val totalStr = sec(results.map(_._2).filter(_ >= 0).sum)
+    val scaleJson = if (scaleReps.isEmpty) "" else "," + scaleupJson(scaleDir, scaleReps)
 
-    val calJson =
-      s""","calibration":{"probe":"q1_pricing","sec":${f"$calibration%.3f"}}"""
+    val calJson = s""","calibration":{"probe":"q1_pricing","sec":${sec(calibration)}}"""
     val json =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,"sf":"$sfDir"$calJson$scaleJson}"""
     // The full map, also written to bench.json as the durable contract
@@ -163,13 +161,10 @@ object Bench {
     // the 244 names alone take 3259 bytes, so the last line is a compact
     // headline: total, count, the worst 5, and as many of the most
     // expensive faces as fit a 1900-byte budget. Keys are additions only.
-    val worst = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val scaleHeadline = if (scaleResults.isEmpty) "" else {
-      val st = scaleResults.map(_._2).filter(_ >= 0).sum
-      s""","scaleup64_total":${f"$st%.3f"}"""
-    }
+    val ranked = results.filter(_._2 >= 0).sortBy(-_._2).map { case (k, v) => entry(k, sec(v)) }
+    val worst = ranked.take(5).mkString("{", ",", "}")
+    val scaleHeadline = if (scaleReps.isEmpty) "" else
+      s""","scaleup64_total":${sec(scaleReps.flatMap(_._2.minOption).sum)}"""
     val headlinePrefix =
       s"""{"metric":"total","value":$totalStr,"unit":"sec","n":${results.size},"queries":"""
     val headlineSuffix =
@@ -178,10 +173,7 @@ object Bench {
     val topEntries = {
       val b = Seq.newBuilder[String]
       var used = 0
-      for ((k, v) <- results.filter(_._2 >= 0).sortBy(-_._2)) {
-        val e = "\"" + k + "\":" + f"$v%.3f"
-        if (used + e.length + 1 <= budget) { b += e; used += e.length + 1 }
-      }
+      for (e <- ranked if used + e.length + 1 <= budget) { b += e; used += e.length + 1 }
       b.result()
     }
     val headline = headlinePrefix +

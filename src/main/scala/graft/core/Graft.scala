@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Session factory with graft's tuned defaults.
   *
@@ -157,10 +159,79 @@ object Graft {
     require(df.sparkSession eq inner,
       "Graft.scoped: the face returned a frame of another session; build it " +
         "on the session the scope passes in, or it runs outside the scope")
-    // a leaf plan (a memory sink's rows, a checkpoint) has no exchange
-    // for the width to apply to, so it goes back without a copy
-    val done = if (df.queryExecution.optimizedPlan.children.isEmpty) df
-      else df.localCheckpoint()
-    GraftBridge.ofRows(spark, done.queryExecution.analyzed)
+    GraftBridge.ofRows(spark, materialize(df)._1.queryExecution.analyzed)
   }
+
+  /** Runs a fixed-point loop over `input` and returns its result as a
+    * frame of `input`'s session. The loop's lineage cutting is decided
+    * here, once:
+    *  - `input` is materialized in the caller's session before the
+    *    rounds start, so an expensive input plan runs once, at the
+    *    caller's width, and not inside the first round's jobs.
+    *  - The rounds run in a [[scoped]] clone of width
+    *    `max(4, defaultParallelism / 4)`. Loop frames are bounded by a
+    *    vertex set or a vocabulary, far smaller than the corpus that
+    *    produced them; the width follows the cluster so the loop is not
+    *    pinned to a few reducers at any deployment size.
+    *  - `start(input)` is the state before round 1. Round n's state is
+    *    `step(input, state)`, checkpointed eagerly: without the cut,
+    *    each round's plan chains through every earlier round and the
+    *    job graph grows quadratically. The state of round n−1 is then
+    *    released.
+    *  - `done(state, n)` sees round n's materialized state and returns
+    *    the loop's result, or None for another round. A loop that needs
+    *    more than `maxRounds` rounds fails.
+    *  - The result is copied out of the scope as [[scoped]] copies any
+    *    face. Then every checkpoint the loop made is released, except one
+    *    the result reads. Only the loop's own RDDs are released: other
+    *    queries on the same context keep theirs.
+    *
+    * Two driver loops do not use it. `pagerank` runs a fixed 3 rounds as
+    * one chained plan at scan width; eager per-round checkpoints at a
+    * narrow width were measured slower there (6.0 s vs 3.7 s at sf0.1).
+    * The IVF Lloyd loop keeps its state on the driver, as centroids, so
+    * it has no frame lineage to cut.
+    */
+  private[graft] def iterate(input: DataFrame, maxRounds: Int)(
+      start: DataFrame => DataFrame)(
+      step: (DataFrame, DataFrame) => DataFrame)(
+      done: (DataFrame, Int) => Option[DataFrame]): DataFrame = {
+    val spark = input.sparkSession
+    val (in, inputRdd) = materialize(input)
+    var roundRdd: Option[RDD[_]] = None
+    var result: Option[DataFrame] = None
+    try {
+      result = Some(scoped(spark, Some(math.max(4, spark.sparkContext.defaultParallelism / 4))) {
+        inner =>
+          val source = GraftBridge.ofRows(inner, in.queryExecution.analyzed)
+          def loop(state: DataFrame, round: Int): DataFrame = {
+            require(round < maxRounds, s"Graft.iterate: no fixed point in $maxRounds rounds")
+            val (next, rdd) = materialize(step(source, state))
+            // a leaf step result made no checkpoint, and may read the last one
+            if (rdd.nonEmpty) { roundRdd.foreach(_.unpersist(blocking = false)); roundRdd = rdd }
+            done(next, round + 1).getOrElse(loop(next, round + 1))
+          }
+          loop(start(source), 0)
+      })
+      result.get
+    } finally {
+      val read = result.toSeq.flatMap(rddsOf).map(_.id).toSet
+      (inputRdd ++ roundRdd).filterNot(r => read(r.id)).foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  /** `df` materialized by one eager `localCheckpoint`, with the RDD that
+    * now holds its rows. A leaf plan (a memory sink's rows, a checkpoint)
+    * has no exchange for a width to apply to, so it comes back as is.
+    */
+  private def materialize(df: DataFrame): (DataFrame, Option[RDD[_]]) =
+    if (df.queryExecution.optimizedPlan.children.isEmpty) (df, None)
+    else { val c = df.localCheckpoint(); (c, rddsOf(c).headOption) }
+
+  /** The RDDs a frame's plan reads directly. A checkpointed frame is a
+    * `LogicalRDD` over the persisted RDD, which `Dataset.unpersist`
+    * cannot reach: it lives in the RDD cache, not the cache manager.
+    */
+  private def rddsOf(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
 }

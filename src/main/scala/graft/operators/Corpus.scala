@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.core.Graft
 import graft.sources.Tables
 
 /** Corpus-assembly operators — the ordering / packing / sampling /
@@ -866,38 +869,38 @@ object Corpus {
     * rule (deterministic argmax: count desc, pair asc) comes back as a
     * 1-row TakeOrdered and the merge applies map-only as a left-to-right
     * non-overlapping fold over each word's symbols. Driver state is the
-    * rule list (= requested merges), never data; `localCheckpoint` cuts
-    * the growing lambda lineage each round.
+    * rule list (= requested merges), never data; the symbol table is a
+    * [[Graft.iterate]] state, so the growing lambda lineage is cut each
+    * round.
     *
     * Returns (iter, left, right, merged, pair_count) — the merge table a
     * tokenizer ships.
     */
   def bpeMerges(words: DataFrame, iters: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = words.sparkSession
-    var syms = words.select(col("word"), col("freq"),
-      concat(split(col("word"), ""), array(lit("</w>"))).as("syms"))
-      .localCheckpoint(true)
+    require(iters > 0, s"bpeMerges: iters must be positive, got $iters")
     val rules = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var it = 0
-    var exhausted = false
-    while (it < iters && !exhausted) {
-      // adjacent pairs; guard the fully-merged single-symbol case (a
-      // backwards sequence(1,0) would error, not return empty)
-      val pairs = when(size(col("syms")) < 2,
-        expr("cast(array() as array<struct<l:string,r:string>>)"))
-        .otherwise(expr(
-          "transform(sequence(1, size(syms)-1), i -> struct(syms[i-1] AS l, syms[i] AS r))"))
+    // adjacent pairs; guard the fully-merged single-symbol case (a
+    // backwards sequence(1,0) would error, not return empty)
+    val pairs = when(size(col("syms")) < 2,
+      expr("cast(array() as array<struct<l:string,r:string>>)"))
+      .otherwise(expr(
+        "transform(sequence(1, size(syms)-1), i -> struct(syms[i-1] AS l, syms[i] AS r))"))
+    var more = true
+    Graft.iterate(words.select(col("word"), col("freq"),
+        concat(split(col("word"), ""), array(lit("</w>"))).as("syms")), maxRounds = iters)(
+      identity
+    ) { (_, syms) =>
       val top = syms
         .select(col("freq"), explode(pairs).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("l"), col("r"))
         .limit(1).collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) { more = false; syms }
       else {
         val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rules += Row(it + 1, l, r, l + r, n)
+        rules += Row(rules.size + 1, l, r, l + r, n)
+        more = rules.size < iters
         val merged = aggregate(
           col("syms"),
           array().cast("array<string>"),
@@ -905,19 +908,15 @@ object Corpus {
             size(acc) > 0 && element_at(acc, -1) === lit(l) && x === lit(r),
             concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
             .otherwise(concat(acc, array(x))))
-        syms = syms.select(col("word"), col("freq"), merged.as("syms"))
-          .localCheckpoint(true)
-        it += 1
+        // the last rule needs no merge
+        if (more) syms.select(col("word"), col("freq"), merged.as("syms")) else syms
       }
+    } { (syms, _) =>
+      if (more) None
+      else Some(syms.sparkSession.createDataFrame(rules.asJava, StructType.fromDDL(
+        "iter INT NOT NULL, `left` STRING NOT NULL, `right` STRING NOT NULL, " +
+          "merged STRING NOT NULL, pair_count BIGINT NOT NULL")))
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rules.toSeq, 1),
-      StructType(Seq(
-        StructField("iter", IntegerType, false),
-        StructField("left", StringType, false),
-        StructField("right", StringType, false),
-        StructField("merged", StringType, false),
-        StructField("pair_count", LongType, false))))
   }
 
   /** C40: mixture rebalancing — the resampling step after C34's

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Graft
@@ -675,7 +675,7 @@ object Mining {
     // chained vs 6.0 s with 8-partition eager rounds) — the fixed
     // iteration count keeps the chain shallow enough that exchange
     // reuse beats materialization. Contrast componentsOn, whose
-    // unbounded iteration count forces eager rounds.
+    // unbounded iteration count needs Graft.iterate's eager rounds.
     val e0 = basketPairs(li).distinct().localCheckpoint(true)
     val und = e0.select(col("p1").as("src"), col("p2").as("dst"))
       .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst")))
@@ -1443,11 +1443,10 @@ object Mining {
     * pairs. Here the edge set is exact, so the whole component structure
     * ORACLE-CHECKS against a recursive-CTE reachability closure).
     *
-    * Iteration is the Spark-idiomatic fixed point: each round is one
-    * edge-keyed join + one min-aggregate (exact int64 labels — no
-    * float anywhere, so every round is engine-deterministic), frames
-    * persist round-to-round and unpersist behind themselves, and the
-    * loop exits when a round changes NOTHING (counted distributively).
+    * Each propagation step is one edge-keyed join + one min-aggregate
+    * (exact int64 labels — no float anywhere, so every round is
+    * engine-deterministic), and the loop exits when a round changes
+    * NOTHING (counted distributively).
     * Rounds needed = graph diameter (≤ log n with doubling variants;
     * plain propagation suffices at this density — the co-purchase
     * graph is forest-like sparse). The driver holds one long per
@@ -1458,106 +1457,47 @@ object Mining {
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))))
 
   /** Library face: components of any (p1, p2) undirected edge frame.
-    * Output: (node, comp) where comp = min node id reachable.
-    *
-    * Each round `localCheckpoint`s the label frame — the fixed-point
-    * idiom for UNBOUNDED iteration counts: without it every round's
-    * plan chains through all previous rounds and the job graph grows
-    * quadratically (PageRank's fixed 3 rounds can skip this; a
-    * convergence loop cannot). Checkpoint content is exact int64, so
-    * cutting lineage costs no determinism.
+    * Output: (node, comp) where comp = min node id reachable. A
+    * [[Graft.iterate]] loop: the input is the edge set in both
+    * directions, the state each node's label. Labels are exact int64, so
+    * the per-round checkpoint costs no determinism.
     */
   def componentsOn(edges: DataFrame): DataFrame = {
-    // The loop's frames are |V|-bounded — orders of magnitude smaller
-    // than the corpus that produced the edges — so the fixed point
-    // runs at a narrow shuffle width, with the edge plan re-homed into
-    // the scoped session. Width follows the cluster (defaultParallelism/4,
-    // floor 4 — skyline's idiom): 8 on local[32], proportionally wider
-    // on a real cluster so the label frame is not pinned to 8 reducers
-    // at any deployment size.
-    val spark = edges.sparkSession
-    val width = math.max(4, spark.sparkContext.defaultParallelism / 4)
-    Graft.scoped(spark, Some(width)) { spark =>
-      componentsLoop(GraftBridge.ofRows(spark, edges.queryExecution.analyzed))
-    }
-  }
-
-  /** The RDD a `localCheckpoint`ed Dataset is served from (the
-    * `LogicalRDD` the checkpoint rewrote the plan to). Holding the
-    * reference lets the loop release EXACTLY the checkpoints it
-    * created — `Dataset.unpersist` cannot reach them (they live in the
-    * RDD cache, not the cacheManager), and diffing the global
-    * `getPersistentRDDs` set would also sweep up caches pinned
-    * concurrently by OTHER queries on the shared context.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-
-  private def componentsLoop(edges: DataFrame): DataFrame = {
     // both directions from ONE pass over the edge plan: a union of two
-    // projections evaluates an unmaterialized edge plan (C23's MinHash
-    // pipeline) twice
+    // projections would evaluate it twice
     val und = edges
       .select(explode(array(struct(col("p1").as("a"), col("p2").as("b")),
         struct(col("p2").as("a"), col("p1").as("b")))).as("e"))
       .select(col("e.a"), col("e.b"))
-      .persist()
     // one neighbor-min propagation step; keeps its input label as `prev`
-    def propagate(l: DataFrame): DataFrame = {
-      val nbr = und.join(l.select(col("n").as("b"), col("comp")), "b")
+    def propagate(e: DataFrame, l: DataFrame): DataFrame = {
+      val nbr = e.join(l.select(col("n").as("b"), col("comp")), "b")
         .groupBy(col("a")).agg(min(col("comp")).as("nbr_min"))
       l.join(nbr.select(col("a").as("n"), col("nbr_min")), Seq("n"), "left")
         .select(col("n"),
           least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
           col("comp").as("prev"))
     }
-    var labels = und.select(col("a").as("n")).distinct()
-      .select(col("n"), col("n").as("comp"))
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    var changed = 1L
-    var iter = 0
-    // TWO propagation steps per checkpoint/convergence-check: the
-    // checkpoint job and the count job dominate a round's cost at any
-    // graph size (the joins are |V|/|E|-bounded), so batching halves
-    // the expensive jobs for one extra cheap join. A pointer-jumping
-    // variant (comp ← comp(comp)) was measured and did NOT cut rounds
-    // on these small-diameter co-occurrence graphs — the tail is
-    // label-arrival limited — so plain BFS propagation it is.
-    // r11 re-measured the batching factor: >2 steps per checkpoint is
-    // EXPONENTIALLY worse (propagate references its input twice, so an
-    // unmaterialized k-chain recomputes step i 2^(k−i) times — 3/4/6
-    // steps measured 6.8/12.1/61.2 s vs 5.3 s at sf0.1), and an eager
-    // per-step checkpoint (every step computed once, 3 jobs/round) is
-    // a wash (4.3/4.6 vs 4.4/4.8 s) — the per-job scheduling floor
-    // dominates either way. k=2 stands.
-    while (changed > 0 && iter < 32) {
-      val stepped = propagate(propagate(labels)).localCheckpoint(true)
+    Graft.iterate(und, maxRounds = 32)(
+      e => e.select(col("a").as("n")).distinct().select(col("n"), col("n").as("comp"))
+    )(
+      // TWO propagation steps per round: the checkpoint job and the count
+      // job dominate a round's cost at any graph size, so batching halves
+      // them for one extra cheap join. More steps per round are
+      // exponentially worse (propagate references its input twice, so an
+      // unmaterialized k-chain recomputes step i 2^(k−i) times: 3/4/6 steps
+      // measured 6.8/12.1/61.2 s vs 5.3 s at sf0.1), and a checkpoint per
+      // step was a wash (4.3/4.6 vs 4.4/4.8 s). Pointer jumping did not cut
+      // rounds on these small-diameter graphs.
+      (e, labels) => propagate(e, propagate(e, labels.select(col("n"), col("comp"))))
+    ) { (stepped, _) =>
       // rows the SECOND step changed: none means the first step's labels
       // were already the fixed point, so a graph that converges on a
-      // super-round's first step needs no confirming super-round (C23's
-      // shallow dup-pair graphs: 45 → 31 jobs at sf0.01, local[4])
-      changed = stepped.filter(col("comp") < col("prev")).count()
-      labels = stepped.select(col("n"), col("comp"))
-      // the new checkpoint is eager (materialized above), so the
-      // previous round's checkpoint is dead — release it now instead of
-      // pinning every round's |V| frame until convergence
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = checkpointRdd(stepped)
-      iter += 1
+      // round's first step needs no confirming round (C23's shallow
+      // dup-pair graphs: 45 → 31 jobs at sf0.01, local[4])
+      if (stepped.filter(col("comp") < col("prev")).count() > 0) None
+      else Some(stepped.select(col("n").as("node"), col("comp")))
     }
-    require(changed == 0, s"components did not converge in $iter super-rounds")
-    // Exit: the converged labels come straight from the FINAL
-    // super-round's in-memory checkpoint — no disk round-trip (the
-    // round-5 temp-parquet spill bought lineage hygiene with a write +
-    // re-read of the result on the slowest query). Everything older is
-    // already released round-by-round above; `und` (the only other
-    // frame this loop pinned) goes here. The scope's checkpoint copies
-    // the |V|-bounded result the caller holds; the final round's block
-    // is unreachable after it and goes with the ContextCleaner.
-    und.unpersist(blocking = false)
-    labels.select(col("n").as("node"), col("comp"))
   }
 
   val componentsSql: String =
@@ -1631,15 +1571,6 @@ object Mining {
       .localCheckpoint(true) // referenced by 5 plan branches (degree + 3 hops)
     val edges = e.select(col("p1").as("u"), col("p2").as("v"))
       .unionAll(e.select(col("p2").as("u"), col("p1").as("v")))
-    try bfsFrom(edges)
-    finally
-      // the census below is materialized before we return, so the |E|
-      // checkpoint must not outlive the call — repeated bench runs
-      // would otherwise pin one dead edge copy per invocation
-      checkpointRdd(e).foreach(_.unpersist(blocking = false))
-  }
-
-  private def bfsFrom(edges: DataFrame): DataFrame = {
     val src = edges.groupBy(col("u")).agg(count(lit(1)).as("d"))
       .orderBy(col("d").desc, col("u")).limit(1)
       .select(col("u").as("node"))
@@ -1654,9 +1585,6 @@ object Mining {
       .groupBy(col("dist"))
       .agg(count(lit(1)).as("n_parts"),
         min(col("node")).as("min_part"), max(col("node")).as("max_part"))
-      // eager, O(hops) rows: cuts the lineage so the caller's frame no
-      // longer references the edge checkpoint being released
-      .localCheckpoint(true)
   }
 
   val bfsSql: String =

@@ -71,4 +71,16 @@ class BenchRecordSpec extends AnyFunSuite {
       sc.removeSparkListener(probe)
     }
   }
+
+  test("Bench's 64x record keeps every timed pass of a face beside their min") {
+    val json = Bench.scaleupJson("target/scaleup64",
+      Seq("q1_pricing" -> Seq(2.5, 2.25), "q3_topk" -> Seq.empty))
+    val up = new ObjectMapper().readTree("{" + json + "}").get("scaleup")
+    assert(up.get("queries").get("q1_pricing").asDouble == 2.25)
+    assert(up.get("queries").get("q3_topk").asDouble == -1.0)
+    assert(up.get("total").asDouble == 2.25)
+    val reps = up.get("reps_sec")
+    assert(reps.get("q1_pricing").size == 2 && reps.get("q1_pricing").get(0).asDouble == 2.5)
+    assert(reps.get("q3_topk").size == 0)
+  }
 }

@@ -15,7 +15,7 @@ class KnobInventorySpec extends AnyFunSuite {
   private val PinnedEnv = Set(
     "SPARK_GRAFT_CPUS",        // Graft.localSession: local[N]
     "SPARK_GRAFT_SF_DIR",      // Bench: data dir
-    "SPARK_GRAFT_ONLY",        // Bench, Verify: face filter
+    "SPARK_GRAFT_ONLY",        // SparkEntry.only: Bench, Verify face filter
     "SPARK_GRAFT_SCALE_DIR",   // Bench: 64× replica dir
     "SPARK_GRAFT_DUMP_PARTS",  // Verify: per-partition dumps
     "SPARK_GRAFT_PROBE",       // Verify: per-row divergence dumps

@@ -400,8 +400,10 @@ class MiningSpec extends AnyFunSuite {
     // two components, min-labels 1 and 6
     val edges = Seq((1L,2L),(1L,3L),(1L,4L),(2L,3L),(2L,4L),(3L,4L),
       (4L,5L),(6L,7L),(6L,8L),(7L,8L)).toDF("p1", "p2")
-    val got = graft.operators.Mining.componentsOn(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (rows, left) = LeftPersisted(graft.operators.Mining.componentsOn(edges))
+    // the edge input and every round are released; the result is a copy
+    assert(left.isEmpty, s"componentsOn left persisted RDDs ${left.mkString(", ")}")
+    val got = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L->1L, 2L->1L, 3L->1L, 4L->1L, 5L->1L,
       6L->6L, 7L->6L, 8L->6L))
     // corpus face: component ids are always <= their members (min-label)

@@ -792,8 +792,10 @@ class OperatorSpec extends AnyFunSuite {
     // (e,we)=6 from n-e-we-s-t; then (ewe,s)=6.
     val words = Seq(("low", 5L), ("lower", 2L), ("newest", 6L))
       .toDF("word", "freq")
-    val m = graft.operators.Corpus.bpeMerges(words, 4)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4)))
+    val (rows, left) = LeftPersisted(graft.operators.Corpus.bpeMerges(words, 4))
+    // each round's symbol table is released, the last one included
+    assert(left.isEmpty, s"bpeMerges left persisted RDDs ${left.mkString(", ")}")
+    val m = rows.map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4)))
     assert(m(0) == ((1, "w", "e", 8L)))
     assert(m(1) == ((2, "l", "o", 7L)))
     assert(m(2) == ((3, "e", "we", 6L)))
