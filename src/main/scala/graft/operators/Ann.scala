@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Fns, NativeExprs}
 import graft.functions.Fns._
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (SURVEY §2 C6–C7).
@@ -274,21 +274,6 @@ object Ann {
     s"$dir|$len|$mtime"
   }
 
-  /** Recursively delete an index dir at JVM exit (File.deleteOnExit
-    * cannot remove non-empty directories).
-    */
-  private def deleteRecursivelyOnExit(root: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(root)) {
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-            case _: java.io.IOException => ()
-          })
-      }
-    }))
-
   /** C7b: IVF ANN — the learned-centroid variant of the LSH scale path
     * (SURVEY §5). Queries probe their `nprobe` nearest cells and score
     * only those cells' vectors. First call per corpus trains + persists
@@ -327,9 +312,7 @@ object Ann {
         val n = e.count() // bounded: one scalar, already paid by persist
         ivfCentroids(e, c = ivfCellCount(n), iters = 2)
       } finally e.unpersist(blocking = false)
-      val root = java.nio.file.Files.createTempDirectory("graft_ivf")
-      deleteRecursivelyOnExit(root)
-      val p = root.resolve("index").toString
+      val p = Scratch.tempDir("graft_ivf").resolve("index").toString
       saveIvfIndex(spark, centroids, p)
       p
     })
@@ -791,25 +774,25 @@ object Ann {
         .select((floor(col("max_nv").cast("double") / col("n_total") * 1e6
           + lit(0.5)) / 1e6).as("ms"))
     }
-    // r11 (guide §2.4): the exact brute-force arm used to be rebuilt
-    // inside EACH hits() call — two full annTopK passes per run (the
-    // one genuinely corpus×queries-quadratic step in this face, paid
-    // twice). The arm is |queries|×k bounded, so one eager checkpoint
-    // serves both recall sides.
-    val exact = annTopK(spark, dir).select(col("query_id"), col("vec_id"))
-      .localCheckpoint(true)
-    def hits(approx: DataFrame): DataFrame =
-      exact.join(approx.select(col("query_id").as("qi"), col("vec_id").as("vi")),
-          col("query_id") === col("qi") && col("vec_id") === col("vi"), "left")
-        .agg(count(lit(1)).as("k_total"), count(col("vi")).as("n_hit"))
-    val before = hits(annIvf(spark, dir))
-      .crossJoin(broadcast(maxShare(base)))
-      .select(col("k_total"), col("n_hit").as("hits_before"),
-        col("ms").as("max_share_before"))
-    val after = hits(annIvfServe(e, grown, nprobe = ivfNProbe(grown.size)))
-      .crossJoin(broadcast(maxShare(grown)))
-      .select(col("n_hit").as("hits_after"), col("ms").as("max_share_after"))
-    before.crossJoin(broadcast(after))
+    // recall of both arms in ONE side-tagged pass: the exact, before and
+    // after (query, vec) pairs fold into per-pair flags, so the
+    // brute-force arm — the one corpus×queries step — runs once, with
+    // no join against it
+    def tagged(df: DataFrame, side: String): DataFrame =
+      df.select(col("query_id"), col("vec_id"), lit(side).as("side"))
+    val recall = tagged(annTopK(spark, dir), "exact")
+      .unionByName(tagged(annIvf(spark, dir), "before"))
+      .unionByName(tagged(annIvfServe(e, grown, nprobe = ivfNProbe(grown.size)), "after"))
+      .groupBy(col("query_id"), col("vec_id"))
+      .agg(max(col("side") === "exact").as("x"),
+        max(col("side") === "before").as("b"), max(col("side") === "after").as("a"))
+      .filter(col("x"))
+      .agg(count(lit(1)).as("k_total"),
+        count(when(col("b"), 1)).as("hits_before"),
+        count(when(col("a"), 1)).as("hits_after"))
+    recall
+      .crossJoin(broadcast(maxShare(base).select(col("ms").as("max_share_before"))))
+      .crossJoin(broadcast(maxShare(grown).select(col("ms").as("max_share_after"))))
       .select(
         lit(base.size.toLong).as("cells_before"),
         lit(grown.size.toLong).as("cells_after"),

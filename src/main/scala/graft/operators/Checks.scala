@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Data-quality check operators (SURVEY §2 A11–A14) — the engine's
   * equivalents of the reference's dbt schema tests
@@ -405,16 +405,7 @@ object Checks {
       .select(col("event_id"), col("user_id"))
     val acc = t.orders.filter(!col("o_orderstatus").isin("O", "F"))
       .select(col("o_orderkey"), col("o_orderstatus"))
-    val root = java.nio.file.Files.createTempDirectory("graft_test_audit")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p) catch {
-            case _: java.io.IOException => ()
-          })
-    }))
+    val root = Scratch.tempDir("graft_test_audit")
     rel.coalesce(1).write.mode("overwrite")
       .parquet(s"$root/relationships_user_id")
     acc.coalesce(1).write.mode("overwrite")

@@ -56,14 +56,9 @@ object Corpus {
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("fp")).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
-    // r11 (guide §2.4): `scored` is the root of FOUR consumers (the
-    // threshold sketch, and — through splitDf — eval spans, train spans,
-    // the surviving-train projection); un-materialized, each consumer
-    // re-ran the scan + fingerprint window + scoring (4.1 s solo). One
-    // eager checkpoint of the deduped/scored corpus serves all four;
-    // everything below it is narrow (broadcast threshold join, filters,
-    // span explodes). `fp` is dead past the dedup window — dropped so
-    // the checkpoint doesn't hold 32 B/doc of spent fingerprint.
+    // Pinned: `scored` has four readers (the threshold sketch, eval
+    // spans, train spans, train rows). sf0.1 Bench medians, 4 vCPUs:
+    // 1.32 s with it, 1.89 s without. `fp` is dead past the dedup window.
     val scored = deduped.withColumn("quality_score", TextAnalysis.compositeScore)
       .drop("fp").localCheckpoint(true)
     val thresholds = scored.groupBy(col("lang"))
@@ -221,7 +216,15 @@ object Corpus {
     * (e.g. the per-side ECDF counts of a two-sample test) costs one
     * sort, not one per measure.
     */
-  def prefixSumN(df: DataFrame, order: Seq[Column], cols: Seq[(String, String)]): DataFrame = {
+  def prefixSumN(df: DataFrame, order: Seq[Column], cols: Seq[(String, String)]): DataFrame =
+    prefixSumTotals(df, order, cols)._1
+
+  /** [[prefixSumN]] plus each value column's grand total, which pass 1
+    * has already folded on the driver — a caller that needs the totals
+    * reads them here instead of re-aggregating the input.
+    */
+  def prefixSumTotals(df: DataFrame, order: Seq[Column],
+      cols: Seq[(String, String)]): (DataFrame, Array[Long]) = {
     val spark = df.sparkSession
     val sorted = df
       .repartitionByRange(rangeParts(spark), order: _*)
@@ -274,7 +277,7 @@ object Corpus {
         out
       }
     }
-    spark.createDataFrame(rdd, schema)
+    (spark.createDataFrame(rdd, schema), acc)
   }
 
   /** C28: deterministic corpus shuffle — a reproducible pseudorandom

@@ -271,14 +271,8 @@ object Dedup {
     // native single-pass signature; bands are 16-bit slices of it
     // (pigeonhole over 4 bands covers hamming ≤ 3)
     val sigExpr = simhash64e(array_distinct(split(col("text"), " ")))
-    // r11 (guide §2.4): `sig` feeds the group collapse AND the final
-    // doc-level join, `groups` the bucket explode AND the neighbor-mass
-    // join — un-materialized, every branch re-tokenized and re-hashed
-    // the corpus (6 documents scans in the before plan; the signature
-    // map is this face's heavy CPU). sig is 40 B/doc of metadata
-    // (exactly the "shuffle keys, not payloads" proxy §8 of the guide
-    // builds), groups is distinct-signature bounded — both are the
-    // right frames to pin once instead of recomputing.
+    // Pinned: `sig` (the signature map, this face's heavy CPU) has two
+    // readers. sf0.1 Bench medians, 4 vCPUs: 0.60 s with it, 0.79 s without.
     val sig = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col("doc_id") +: (0 until 4).map(k =>
@@ -286,7 +280,9 @@ object Dedup {
       .localCheckpoint(true)
 
     // collapse to distinct signatures; gid = the 64-bit signature
-    // itself (bands are its disjoint slices), m = duplicate-group size
+    // itself (bands are its disjoint slices), m = duplicate-group size.
+    // Pinned: read by the bucket explode and the neighbor-mass join
+    // (0.58 s with it, 0.60 s without).
     val groups = sig.groupBy(col("b0"), col("b1"), col("b2"), col("b3"))
       .agg(count(lit(1)).as("m"))
       .withColumn("gid",
@@ -321,10 +317,9 @@ object Dedup {
       .distinct()
 
     // per-group neighbor mass: partners inside the group (m - 1) plus
-    // every member of each neighboring group. r11 (guide §2.4): both
-    // directions come from ONE map-side explode — the unionByName of
-    // two selects re-ran the bucket self-join + hamming verify per
-    // branch.
+    // every member of each neighboring group. Both directions come from
+    // ONE map-side explode — a unionByName of two selects re-runs the
+    // bucket self-join + hamming verify per branch.
     val cross = gpairs.select(explode(array(
         struct(col("gid_a").as("gid"), col("m_b").as("mn")),
         struct(col("gid_b").as("gid"), col("m_a").as("mn")))).as("e"))
@@ -933,14 +928,9 @@ object Dedup {
     * text) frame, prefix-filtered candidates.
     */
   def setsimPrefix(docs: DataFrame): DataFrame = {
-    // r11 (guide §2.4): `tok` feeds THREE branches (the shingle explode,
-    // the size frame, the verify-side set lookup) and `pfx` TWO (both
-    // sides of the candidate self-join) — un-materialized, every branch
-    // re-tokenized the corpus and the self-join re-ran the rarity
-    // window twice (2.4 s solo). The tokenized frame is corpus-sized
-    // but computed once per run either way; the prefix frame is the
-    // ~40% rarity head by construction. Exact hash/int content, so the
-    // checkpoints change nothing downstream.
+    // Pinned: `tok` has three readers and `pfx` both sides of the
+    // candidate self-join. sf0.1 Bench medians, 4 vCPUs: 1.13 s with both,
+    // 1.20 s with neither; 1.06 s vs 1.12 s without `pfx` alone.
     val tok = tokenized(docs).localCheckpoint(true)
     val ex = tok.select(col("doc_id"), col("lang"), explode(col("sh")).as("s"))
     // document frequency of each shingle — the global rarity order

@@ -1466,42 +1466,34 @@ object Extras {
     * builtins). Scale shape is E69's: aggregate to (year, price-cents)
     * CELLS first — bounded by the price domain, not row count — then
     * window over the small cells frame for cumulative counts; the clip
-    * re-enters as a |years|-row broadcast join and the winsorized sum
-    * is exact integer cents end to end.
+    * bounds are per-year window minima over the same frame, so one
+    * groupBy(yr) folds the winsorized sum in exact integer cents with
+    * no bounds aggregate and no join back.
     */
   def winsorize(spark: SparkSession, dir: String): DataFrame =
       graft.core.Graft.scoped(spark) { spark =>
     // ×1 fan-out scope (r12, the q_ks_drift diagnosis generalized):
     // everything past the first rollup is (year × price-cents)
-    // domain-bounded — the checkpointed cells, the two windows, the
-    // broadcast bounds join — so the global ×8 fan-out ran them as 256
-    // near-empty tasks (and pinned 256 checkpoint blocks).
+    // domain-bounded — the cells, the windows, the per-year fold — so
+    // the global ×8 fan-out ran them as 256 near-empty tasks.
     // Partitioning-only, values unchanged.
     import org.apache.spark.sql.expressions.Window
     val cells = Tables(spark, dir).lineitem
       .groupBy(year(col("l_shipdate")).as("yr"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("price_c"))
       .agg(count(lit(1)).as("w"))
-      // r11 (guide §2.4): the cells frame feeds both the bounds window
-      // and the clip rollup — un-materialized, the second branch re-ran
-      // the full lineitem scan + (yr, price) exchange. Cells are bounded
-      // by the (year × price-cents) DOMAIN; exact integer weights, so
-      // one eager checkpoint serves both branches unchanged.
-      .localCheckpoint(true)
     val run = Window.partitionBy(col("yr")).orderBy(col("price_c"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = Window.partitionBy(col("yr"))
     val p = cells.select(col("yr"), col("price_c"), col("w"),
       sum(col("w")).over(run).as("cum"), sum(col("w")).over(tot).as("n"))
-    val bounds = p.groupBy(col("yr")).agg(
-      max(col("n")).as("n_rows"),
-      min(when(col("cum") >= expr("((n - 1) * 5) div 100 + 1"), col("price_c")))
-        .as("p05_c"),
-      min(when(col("cum") >= expr("((n - 1) * 95) div 100 + 1"), col("price_c")))
-        .as("p95_c"))
-    cells.join(broadcast(bounds), "yr")
+    p.select(col("yr"), col("price_c"), col("w"), col("n"),
+        min(when(col("cum") >= expr("((n - 1) * 5) div 100 + 1"), col("price_c")))
+          .over(tot).as("p05_c"),
+        min(when(col("cum") >= expr("((n - 1) * 95) div 100 + 1"), col("price_c")))
+          .over(tot).as("p95_c"))
       .groupBy(col("yr"))
-      .agg(max(col("n_rows")).as("n_rows"),
+      .agg(max(col("n")).as("n_rows"),
         max(col("p05_c")).as("p05_c"), max(col("p95_c")).as("p95_c"),
         sum(col("w") * least(greatest(col("price_c"), col("p05_c")), col("p95_c")))
           .as("clip_sum_c"))

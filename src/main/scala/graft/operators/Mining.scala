@@ -1632,19 +1632,15 @@ object Mining {
     * a (part, other) tiebreak.
     */
   def assocRules(spark: SparkSession, dir: String): DataFrame = {
-    // r11 (guide §2.4): the old shape ran `lineitem.distinct()` into
-    // THREE independent branches (pair counts, item counts, order
-    // total) — three full scans + three (ok, pk) exchanges per run
-    // (2.4 s solo). `collect_set` folds the distinct INTO the one
-    // basket exchange (set semantics = the old distinct-then-list),
-    // the basket frame checkpoints once, and the item/total branches
-    // become narrow re-reads: explode(parts) enumerates exactly the
-    // distinct (ok, pk) pairs, row count = distinct order count.
+    // `collect_set` folds the distinct (ok, pk) INTO the one basket
+    // exchange, which the pair and item counts share within one plan;
+    // explode(parts) enumerates exactly the distinct (ok, pk) pairs. Not
+    // pinned: sf0.1 Bench medians, 4 vCPUs, 1.33 s vs 1.30 s with a pin,
+    // inside the pinned runs' quartiles [1.25, 1.34].
     val baskets = Tables(spark, dir).lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .groupBy(col("ok"))
       .agg(sort_array(collect_set(col("pk"))).as("parts"))
-      .localCheckpoint(true)
     val counts = baskets
       .filter(size(col("parts")) >= 2)
       .select(explode(graft.functions.NativeExprs.pair_array(col("parts")))
@@ -1776,22 +1772,21 @@ object Mining {
   /** Rank-based median of `valueCol` over a BOUNDED frame, as a 1-row
     * (np, med) result — the cells + distributed-prefix discipline (E69)
     * with the standard both-middles average: cells = (value, weight),
-    * running weight via [[Corpus.prefixSum]] (never an unpartitioned
-    * window), med = (value at rank ⌈n/2⌉ + value at rank ⌊n/2⌋+1) / 2.
+    * running weight and the count n via [[Corpus.prefixSumTotals]]
+    * (never an unpartitioned window; `df` is read once),
+    * med = (value at rank ⌈n/2⌉ + value at rank ⌊n/2⌋+1) / 2.
     * Both middles are exact doubles and their mean is one IEEE add +
     * one halving — bit-identical across engines.
     */
   private def boundedMedian(df: DataFrame, valueCol: Column): DataFrame = {
     val cells = df.groupBy(valueCol.as("v")).agg(count(lit(1)).as("w"))
-    val cum = Corpus.prefixSum(cells, Seq(col("v")), "w", "cum0")
-      .select(col("v"), (col("cum0") + col("w")).as("cum"))
-    val tot = df.agg(count(lit(1)).as("np"))
-    cum.crossJoin(broadcast(tot))
+    val (cum, Array(np)) =
+      Corpus.prefixSumTotals(cells, Seq(col("v")), Seq("w" -> "cum0"))
+    cum.select(col("v"), (col("cum0") + col("w")).as("cum"))
       .agg(
-        max(col("np")).as("np"),
-        min(when(col("cum") >= expr("(np + 1) DIV 2"), col("v"))).as("m_lo"),
-        min(when(col("cum") >= expr("np DIV 2 + 1"), col("v"))).as("m_hi"))
-      .select(col("np"), ((col("m_lo") + col("m_hi")) / 2).as("med"))
+        min(when(col("cum") >= (np + 1) / 2, col("v"))).as("m_lo"),
+        min(when(col("cum") >= np / 2 + 1, col("v"))).as("m_hi"))
+      .select(lit(np).as("np"), ((col("m_lo") + col("m_hi")) / 2).as("med"))
   }
 
   /** E84 `q_trend_robust`: Theil–Sen slope + Mann–Kendall trend test
@@ -1814,15 +1809,10 @@ object Mining {
     * integers; τ rounds by the §8(d) floor idiom.
     */
   def trendRobust(spark: SparkSession, dir: String): DataFrame = Graft.scoped(spark) { spark =>
-    // r11 (guide §2.4): `monthly` feeds FOUR plan branches (both pair
-    // sides + the intercept candidates) and `pairs` three (MK sums +
-    // the slope median's cells/total arms) — without cutting lineage
-    // each branch re-ran the orders scan + month rollup (~5 scans/run,
-    // measured 4.8 s solo). Both frames are calendar-bounded (|T| and
-    // |T|² rows), so eager localCheckpoints materialize them once; the
-    // ×1 fan-out scope de-taxes the tiny exchanges the same way the
-    // other domain-bounded faces do. Values are exact integer cents —
-    // checkpointing changes nothing downstream.
+    // ×1 fan-out scope: every frame past the orders scan is calendar-
+    // bounded (|T| months, |T|² pairs). Pinned: `monthly` has three
+    // readers, two behind the medians' prefix-sum jobs. sf0.1 Bench
+    // medians, 4 vCPUs: 0.51 s with it, 0.66 s without.
     val monthly = Tables(spark, dir).orders
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
         .cast("long").as("m"))
@@ -1835,7 +1825,6 @@ object Mining {
           / (col("b.m") - col("a.m")).cast("double")).as("slope"),
         when(col("b.rev_c") > col("a.rev_c"), 1L)
           .when(col("b.rev_c") < col("a.rev_c"), -1L).otherwise(0L).as("sgn"))
-      .localCheckpoint(true)
     val mk = pairs.agg(count(lit(1)).as("n_pairs"), sum(col("sgn")).as("mk_s"))
     val slopeMed = boundedMedian(pairs, col("slope"))
       .select(col("med").as("ts_slope_c"))

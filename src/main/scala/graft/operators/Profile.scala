@@ -365,7 +365,7 @@ object Profile {
     // 256-task stages — the global ×8 pre-coalesce fan-out reaches this
     // face twice, through `rangeParts` (whose numShufflePartitions
     // getter returns initialPartitionNum under AQE) and through the
-    // checkpointed cells frame's exchange — 500+ near-empty tasks of
+    // cells frame's exchange — 500+ near-empty tasks of
     // pure scheduling per timed pass, which contention stretches 2–4×.
     // Every exchange here is bounded by the price DOMAIN (the cells
     // frame), so the ×1 fan-out scope (histogramDepth precedent) is the
@@ -376,22 +376,14 @@ object Profile {
         when(col("l_shipdate") < cut, 1L).otherwise(0L).as("a"))
       .groupBy(col("v"))
       .agg(sum(col("a")).as("ca"), sum(lit(1L) - col("a")).as("cb"))
-      // r11 (guide §2.4): `c` feeds both the prefix-sum and the side
-      // totals — un-materialized, the second branch re-ran the full
-      // lineitem scan + value exchange. The cells frame is bounded by
-      // the price DOMAIN (not row count), so one eager checkpoint
-      // serves both branches; exact integer counts, values unchanged.
-      .localCheckpoint(true)
-    val p2 = Corpus.prefixSumN(c, Seq(col("v")),
+    // the side totals come from the prefix-sum's own first pass, so `c`
+    // is read once and no totals aggregate re-enters the plan
+    val (p2, Array(na, nb)) = Corpus.prefixSumTotals(c, Seq(col("v")),
       Seq("ca" -> "cuma_x", "cb" -> "cumb_x"))
-    val t = c.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-    p2.crossJoin(broadcast(t))
-      .select(col("na"), col("nb"),
-        abs((col("cuma_x") + col("ca")).cast("double") / col("na")
-          - (col("cumb_x") + col("cb")).cast("double") / col("nb")).as("d"))
-      .groupBy(col("na"), col("nb"))
+    p2.select(abs((col("cuma_x") + col("ca")).cast("double") / lit(na)
+        - (col("cumb_x") + col("cb")).cast("double") / lit(nb)).as("d"))
       .agg(round(max(col("d")), 6).as("ks_stat"))
-      .select(col("na").as("n_base"), col("nb").as("n_target"), col("ks_stat"))
+      .select(lit(na).as("n_base"), lit(nb).as("n_target"), col("ks_stat"))
   }
 
   val ksDriftSql: String =

@@ -497,25 +497,20 @@ object Reshape {
 
   /** One skyline pass: within each `parts` group, keep exactly the
     * points not strictly dominated (∃ other point with higher price AND
-    * later day) by a groupmate. Grouping to per-price max-day first
-    * makes every preceding window row a STRICTLY higher price, so the
-    * running max over the preceding frame is "latest day among all
-    * strictly-pricier points" — a point survives iff that max doesn't
-    * exceed its own day. The window partitions by `parts`; the per-price
-    * frame is the only sorted state.
+    * later day) by a groupmate. Ordered by (price desc, day asc), every
+    * preceding row is strictly pricier or a same-price point no later
+    * than this one, so the running max day over the preceding frame
+    * exceeds this point's day iff some strictly-pricier point is later.
+    * One window over one reference to the input.
     */
   private def skylinePass(df: DataFrame, parts: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val perPrice = df.groupBy((parts :+ "price").map(col): _*)
-      .agg(max(col("day")).as("maxd"))
+    val order = Seq(col("price").desc, col("day").asc)
     val w0 =
-      if (parts.isEmpty) Window.orderBy(col("price").desc)
-      else Window.partitionBy(parts.map(col): _*).orderBy(col("price").desc)
-    val prev = perPrice
-      .withColumn("prev_max",
-        max(col("maxd")).over(w0.rowsBetween(Window.unboundedPreceding, -1)))
-      .drop("maxd")
-    df.join(prev, parts :+ "price")
+      if (parts.isEmpty) Window.orderBy(order: _*)
+      else Window.partitionBy(parts.map(col): _*).orderBy(order: _*)
+    df.withColumn("prev_max",
+        max(col("day")).over(w0.rowsBetween(Window.unboundedPreceding, -1)))
       .filter(col("prev_max").isNull || col("day") >= col("prev_max"))
       .drop("prev_max")
   }
@@ -545,16 +540,9 @@ object Reshape {
     // removes dominated points (dominance is transitive), so any
     // bucketing yields the same phase-2 answer
     val buckets = pts.sparkSession.sparkContext.defaultParallelism
-    // r11 (guide §2.4): skylinePass references its input twice (the
-    // per-price rollup AND the join-back), so the un-materialized
-    // phase-2 call re-ran the WHOLE phase-1 subtree per reference —
-    // 4 orders scans in the before plan. The phase-1 survivor sliver is
-    // skyline-superset sized (tiny by construction), so one eager
-    // checkpoint bounds phase 2 to memory reads: 4 scans → 1.
     val local = skylinePass(
       pts.withColumn("b", pmod(hash(col("o_orderkey")), lit(buckets))), Seq("b"))
       .drop("b")
-      .localCheckpoint(true)
     skylinePass(local, Nil)
       .select(col("o_orderkey"), col("price"), col("day"))
   }
@@ -573,9 +561,10 @@ object Reshape {
     * arithmetic end to end: weights 0.9^lag for lag 0..6 are finite
     * 6-dp decimals inlined as literals (no engine pow(), whose libm
     * ulp could differ), daily revenue is the decimal partial aggregate,
-    * and each day RECEIVES its 7-day history through an equi-join on
-    * the generated (day − lag) key — no range join, no global window;
-    * the only shuffles are the daily aggregate and the |days|×7 join.
+    * and each day SENDS its revenue forward to the 7 days it smooths
+    * (day + lag), folded by one groupBy on the target day — no join, no
+    * range join, no global window; the only shuffles are the daily
+    * aggregate and the |days|×7 target aggregate.
     * The final cast+divide are the only IEEE steps, via the split-cast
     * and floor-rounding idioms (see the kernel comment).
     */
@@ -588,17 +577,8 @@ object Reshape {
     val daily = Tables(spark, dir).lineitem
       .groupBy(to_date(col("l_shipdate")).as("day"))
       .agg(sum(dec(col("l_extendedprice"))).cast("decimal(19,2)").as("rev"))
-      // r11 (guide §2.4): `daily` feeds the target spine AND the lag
-      // join — un-materialized, each branch re-ran the full lineitem
-      // scan + (day) exchange. The frame is CALENDAR-bounded (|days|
-      // rows, exact decimals), so one eager checkpoint serves both;
-      // values unchanged.
-      .localCheckpoint(true)
     val weights = (0 to 6).map(l =>
       lit(BigDecimal("0.9").pow(l).setScale(6).bigDecimal))
-    val targets = daily.select(col("day").as("t_day"))
-      .withColumn("lag", explode(sequence(lit(0), lit(6))))
-      .withColumn("w", element_at(array(weights: _*), col("lag") + 1))
     // num is DECIMAL scale 8 whose scaled integer exceeds 2^53 at
     // realistic revenue — DuckDB's decimal→double cast double-rounds
     // there (int128→double, then ÷10^scale), one ulp off Spark's
@@ -616,13 +596,18 @@ object Reshape {
     // silently, if ever exceeded.
     val num = sum(col("w") * col("rev")).cast("decimal(26,8)")
     val numD = floor(num).cast("double") + (num - floor(num)).cast("double")
-    targets
-      .join(daily, date_sub(col("t_day"), col("lag")) === col("day"))
-      .groupBy(col("t_day").as("day"))
+    // a target day is smoothed only if it is a real day: its lag-0 row
+    daily
+      .withColumn("lag", explode(sequence(lit(0), lit(6))))
+      .withColumn("w", element_at(array(weights: _*), col("lag") + 1))
+      .groupBy(date_add(col("day"), col("lag")).as("day"))
       .agg(
+        min(col("lag")).as("lag0"),
         max(when(col("lag") === 0, col("rev"))).cast("double").as("rev"),
         (floor(numD / sum(col("w")).cast("double") * 10000 + lit(0.5)) / 10000)
           .as("ewma7"))
+      .filter(col("lag0") === 0)
+      .drop("lag0")
   }
 
   val ewmaSql: String = {

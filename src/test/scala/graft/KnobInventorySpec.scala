@@ -7,8 +7,9 @@ import scala.util.matching.Regex
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every environment variable the main tree reads, and every session conf
-  * it sets, pinned: a new knob has to be added here on purpose.
+/** Every environment variable the main tree reads, every session conf it
+  * sets, and every eager `localCheckpoint` it places, pinned: a new one
+  * has to be added here on purpose.
   */
 class KnobInventorySpec extends AnyFunSuite {
 
@@ -37,19 +38,51 @@ class KnobInventorySpec extends AnyFunSuite {
     "spark.hadoop.fs.file.impl",
     "spark.sql.codegen.cache.maxEntries")
 
-  /** (file:line, trimmed code) for every non-comment line under src/main. */
-  private lazy val codeLines: List[(String, String)] = {
+  /** Each `localCheckpoint(` call under src/main as file#enclosing member.
+    * A checkpoint runs a job inside the face call and hides the plan
+    * behind it from the record; the faces that keep one say why beside it.
+    */
+  private val PinnedCheckpoints = List(
+    "Corpus.scala#buildTrainingSet",
+    "Dedup.scala#lshRecall",
+    "Dedup.scala#setsimPrefix",
+    "Dedup.scala#setsimPrefix",
+    "Dedup.scala#simhash",
+    "Dedup.scala#simhash",
+    "Graft.scala#materialize",
+    "Mining.scala#bfs",
+    "Mining.scala#pagerank",
+    "Mining.scala#trendRobust",
+    "Mining.scala#trianglesOn")
+
+  /** Every .scala file under src/main with its lines. */
+  private lazy val sources: List[(Path, Vector[String])] = {
     val walk = Files.walk(Paths.get("src/main"))
-    val sources: List[Path] =
+    val files: List[Path] =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    assert(sources.nonEmpty, "no main sources under src/main")
+    assert(files.nonEmpty, "no main sources under src/main")
+    files.map(f => f -> Files.readAllLines(f).asScala.toVector)
+  }
+
+  private def isCode(trimmed: String): Boolean =
+    !trimmed.startsWith("//") && !trimmed.startsWith("*") && !trimmed.startsWith("/*")
+
+  /** (file:line, trimmed code) for every non-comment line under src/main. */
+  private lazy val codeLines: List[(String, String)] =
     for {
-      f <- sources
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex.toList
+      (f, lines) <- sources
+      (line, i) <- lines.zipWithIndex.toList
       code = line.trim
-      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if isCode(code)
     } yield (s"$f:${i + 1}", code)
+
+  /** The object member (a `def` at two-space indent) that line `i` sits in. */
+  private def enclosingMember(lines: Vector[String], i: Int): String = {
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])? |override |final )*def (\w+)""".r
+    (i to 0 by -1).iterator
+      .flatMap(j => member.findFirstMatchIn(lines(j)).map(_.group(1)))
+      .nextOption().getOrElse("<top>")
   }
 
   /** Asserts that the literal names `named` captures on the lines `use`
@@ -81,5 +114,16 @@ class KnobInventorySpec extends AnyFunSuite {
       """(\.config|conf\.set)\(""".r,
       """(?:\.config|conf\.set)\(\s*"([\w.]+)"""".r,
       PinnedConf)
+  }
+
+  test("the localCheckpoint sites under src/main are exactly the pinned set") {
+    val found = for {
+      (f, lines) <- sources
+      (line, i) <- lines.zipWithIndex.toList
+      if isCode(line.trim) && line.contains("localCheckpoint(")
+    } yield s"${f.getFileName}#${enclosingMember(lines, i)}"
+    assert(found.sorted == PinnedCheckpoints.sorted,
+      s"added: ${found.diff(PinnedCheckpoints).mkString(", ")}; " +
+        s"gone: ${PinnedCheckpoints.diff(found).mkString(", ")}")
   }
 }

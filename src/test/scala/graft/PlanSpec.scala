@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,6 +28,24 @@ class PlanSpec extends AnyFunSuite {
   private def executedPlan(name: String): SparkPlan = {
     val df = SparkEntry.queries(name)(spark, dir)
     df.queryExecution.executedPlan
+  }
+
+  /** A face's frame, asserting that building it started no Spark job. */
+  private def lazyFace(name: String): DataFrame = {
+    var df: DataFrame = null
+    val jobs = JobsDuring(spark.sparkContext) { df = SparkEntry.queries(name)(spark, dir) }
+    assert(jobs == 0, s"$name: calling the face started $jobs job(s)")
+    df
+  }
+
+  /** Joins in, and parquet reads of `table` by, a frame's optimized plan. */
+  private def joinsAndReads(df: DataFrame, table: String): (Int, Int) = {
+    val plan = df.queryExecution.optimizedPlan
+    val reads = plan.collect { case l: LogicalRelation => l.relation }.count {
+      case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == s"$table.parquet")
+      case _ => false
+    }
+    (plan.collect { case j: Join => j }.size, reads)
   }
 
   private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
@@ -222,15 +242,33 @@ class PlanSpec extends AnyFunSuite {
     // (q_trend_robust measured 4.8 s with 5 scans vs 1.5 s with one).
     // (q_lsh_recall is excluded: its truth side rides the checkpoint but
     // the C2 candidate arm is an independent pipeline over the raw docs,
-    // so one parquet scan is legitimate there.)
+    // so one parquet scan is legitimate there. q_ks_drift and q_winsorize
+    // pin no frame of their own; the checkpoint they serve is their
+    // Graft.scoped copy. q_assoc_rules pins nothing and is pinned below.)
     for (q <- Seq("q_trend_robust", "q_ks_drift", "q_winsorize",
-        "q_assoc_rules", "q_training_set", "q_setsim_prefix")) {
+        "q_training_set", "q_setsim_prefix")) {
       val leaves = collectAll(executedPlan(q)).filter(_.children.isEmpty)
       val parquet = leaves.filter(_.nodeName.contains("Scan parquet"))
       assert(parquet.isEmpty,
         s"$q: ${parquet.size} parquet scan(s) above the checkpoint — " +
           leaves.map(_.nodeName).distinct.mkString(","))
     }
+  }
+
+  test("q_ewma: one pass — no job at call, no join, one lineitem read") {
+    // each day's revenue explodes forward to day + lag and one groupBy on
+    // the target folds it: no target spine joined back, no checkpoint
+    assert(joinsAndReads(lazyFace("q_ewma"), "lineitem") == ((0, 1)))
+  }
+
+  test("q_skyline: one window per pass — no job at call, no join, one orders read") {
+    assert(joinsAndReads(lazyFace("q_skyline"), "orders") == ((0, 1)))
+  }
+
+  test("q_assoc_rules: building the face starts no Spark job") {
+    // the basket frame is not pinned: its exchange is shared by the pair
+    // and item counts within the one executed plan
+    lazyFace("q_assoc_rules")
   }
 
   test("q_profile_drift: side-tagged CELLS passes — no Expand, one scan per column") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Source/sink format coverage beyond parquet: the engine's frames
   * round-trip through JSON, ORC, and CSV unchanged — at scale these are
@@ -270,5 +270,14 @@ class SourcesSpec extends AnyFunSuite {
       assert(roundTrip.contains("write") && inference(roundTrip).isEmpty,
         roundTrip.mkString("; "))
     } finally sc.removeSparkListener(probe)
+  }
+
+  test("Scratch.tempDir: distinct dirs under one per-JVM root") {
+    val a = Scratch.tempDir("graft_spec")
+    val b = Scratch.tempDir("graft_spec")
+    assert(a != b && Files.isDirectory(a) && Files.isDirectory(b))
+    assert(a.getParent == b.getParent, s"$a and $b have different parents")
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir")).toRealPath()
+    assert(a.getParent.toRealPath() != tmp, s"$a sits loose in the system temp dir")
   }
 }

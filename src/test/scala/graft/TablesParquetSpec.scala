@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -9,8 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,19 +42,6 @@ class TablesParquetSpec extends AnyFunSuite {
     val read = Tables.parquet(spark, path).schema
     // StructType equality covers names, types, nullability and metadata
     assert(read == inferred, s"$path: ${read.treeString} vs ${inferred.treeString}")
-  }
-
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    GraftBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; GraftBridge.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get
   }
 
   private def listing(dir: String): Seq[String] =
@@ -100,10 +85,10 @@ class TablesParquetSpec extends AnyFunSuite {
 
   test("Tables.parquet: resolving a dir's 10 tables starts no Spark job") {
     val dir = dirs.head
-    val inferred = jobsDuring(tables.foreach(t => spark.read.parquet(s"$dir/$t.parquet")))
+    val inferred = JobsDuring(spark.sparkContext)(tables.foreach(t => spark.read.parquet(s"$dir/$t.parquet")))
     assert(inferred == tables.size, "the listener must see Spark's inference jobs")
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val read = jobsDuring {
+    val read = JobsDuring(spark.sparkContext) {
       tables.foreach(t => frames += Tables.parquet(spark, s"$dir/$t.parquet"))
       val loaders = Tables(spark, dir)
       frames ++= Seq(loaders.region, loaders.nation, loaders.customer,
