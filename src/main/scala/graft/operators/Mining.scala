@@ -1633,14 +1633,16 @@ object Mining {
     */
   def assocRules(spark: SparkSession, dir: String): DataFrame = {
     // `collect_set` folds the distinct (ok, pk) INTO the one basket
-    // exchange, which the pair and item counts share within one plan;
-    // explode(parts) enumerates exactly the distinct (ok, pk) pairs. Not
-    // pinned: sf0.1 Bench medians, 4 vCPUs, 1.33 s vs 1.30 s with a pin,
-    // inside the pinned runs' quartiles [1.25, 1.34].
+    // exchange; explode(parts) enumerates exactly the distinct (ok, pk)
+    // pairs. Pinned: read by the pair counts, item counts and order total
+    // (unpinned, the collect_set merge runs per reader and the total
+    // rescans lineitem). sf0.1 Bench medians, one face per JVM, 4 vCPUs:
+    // 1.20 s with it, 1.29 s without.
     val baskets = Tables(spark, dir).lineitem
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .groupBy(col("ok"))
       .agg(sort_array(collect_set(col("pk"))).as("parts"))
+      .localCheckpoint(true)
     val counts = baskets
       .filter(size(col("parts")) >= 2)
       .select(explode(graft.functions.NativeExprs.pair_array(col("parts")))

@@ -50,6 +50,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "Dedup.scala#simhash",
     "Dedup.scala#simhash",
     "Graft.scala#materialize",
+    "Mining.scala#assocRules",
     "Mining.scala#bfs",
     "Mining.scala#pagerank",
     "Mining.scala#trendRobust",

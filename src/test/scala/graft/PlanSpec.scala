@@ -244,9 +244,9 @@ class PlanSpec extends AnyFunSuite {
     // the C2 candidate arm is an independent pipeline over the raw docs,
     // so one parquet scan is legitimate there. q_ks_drift and q_winsorize
     // pin no frame of their own; the checkpoint they serve is their
-    // Graft.scoped copy. q_assoc_rules pins nothing and is pinned below.)
+    // Graft.scoped copy.)
     for (q <- Seq("q_trend_robust", "q_ks_drift", "q_winsorize",
-        "q_training_set", "q_setsim_prefix")) {
+        "q_assoc_rules", "q_training_set", "q_setsim_prefix")) {
       val leaves = collectAll(executedPlan(q)).filter(_.children.isEmpty)
       val parquet = leaves.filter(_.nodeName.contains("Scan parquet"))
       assert(parquet.isEmpty,
@@ -263,12 +263,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_skyline: one window per pass — no job at call, no join, one orders read") {
     assert(joinsAndReads(lazyFace("q_skyline"), "orders") == ((0, 1)))
-  }
-
-  test("q_assoc_rules: building the face starts no Spark job") {
-    // the basket frame is not pinned: its exchange is shared by the pair
-    // and item counts within the one executed plan
-    lazyFace("q_assoc_rules")
   }
 
   test("q_profile_drift: side-tagged CELLS passes — no Expand, one scan per column") {
