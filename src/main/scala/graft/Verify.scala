@@ -12,59 +12,29 @@ object Verify {
     // dev loop only (driver sets no env): SPARK_GRAFT_ONLY=q_a,q_b
     // dumps + oracle-lists just those queries
     val only = SparkEntry.only
-    // SPARK_GRAFT_DUMP_PARTS=1 (dev scale-gate runs only) skips the
-    // coalesce: at 64× sf0.1 a fat query's final agg + parquet encode
-    // otherwise runs inside the ONE coalesced task (observed r9: 30+
-    // min single-threaded per lineitem-scale dump), while the checker
-    // already globs and concats every part file.
     dump(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) },
-      dumpParts = sys.env.contains("SPARK_GRAFT_DUMP_PARTS"))
-    // dev/diagnosis only (driver sets no env): SPARK_GRAFT_PROBE=q_x,…
-    // dumps per-row divergence diagnostics for the named queries next
-    // to the verify output — localizes a driver-environment hash
-    // failure (Spark-kernel vs builtin-SQL path vs DuckDB) in one run.
-    val probes: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "q_dedup_simhash" -> ((s, d) => graft.operators.Dedup.simhashProbe(s, d)))
-    sys.env.get("SPARK_GRAFT_PROBE")
-      .map(_.split(",").map(_.trim).toSet)
-      .foreach(_.foreach { name =>
-        probes.get(name).foreach { fn =>
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/${name}_probe")
-        }
-      })
-    def writeSql(file: String, sql: Iterable[(String, String)]): Unit =
-      Files.writeString(Paths.get(s"$outDir/$file"),
-        sql.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}"))
-    writeSql("oracle_sql.json",
+      dumpParts = false)
+    writeSql(outDir, "oracle_sql.json",
       SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) })
-    // Scale-gate oracles (r9 VERDICT #1): independent SUB-QUADRATIC
-    // DuckDB restatements for faces whose registered oracles cannot
-    // hold replica volumes. Dumped unconditionally (the driver ignores
-    // the file; tools/oracle_equiv.py proves each restatement
-    // value-identical to the registered oracle at the driver SFs, and
-    // tools/oracle_check.py --scale-oracles uses them at 64×).
-    writeSql("scale_oracle_sql.json", ScaleOracles.sql)
-    // Distinct-axis stage adjudication (r10 VERDICT #1): under
-    // SPARK_GRAFT_DUMP_STAGES=1 (dev scale-gate runs only) materialize
-    // the IVF/LSH stage artifacts + deterministic-sample subsets of the
-    // face dumps that tools/oracle_check.py --stage-oracles pins via
-    // {OUT}. The JSON is written unconditionally (driver ignores it).
-    writeSql("stage_oracle_sql.json", StageOracles.sql)
-    // runs after the face loop: the sample dumps re-read face outputs
-    // (q_dedup_simhash/q_knn_join/q_dedup_fuzzy must be in the dump set
-    // — a missing dir fails loudly rather than dumping silently wrong)
-    if (sys.env.contains("SPARK_GRAFT_DUMP_STAGES"))
-      StageOracles.dump(spark, sfDir, outDir)
     spark.stop()
   }
+
+  /** Writes `sql` (face → SQL) as one JSON object to `outDir/file`. */
+  private[graft] def writeSql(outDir: String, file: String, sql: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(s"$outDir/$file"),
+      sql.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}"))
 
   /** Writes each face's rows to `outDir/<face>`: one part file per face
     * (coalesce(1), the driver contract) unless `dumpParts`. A face that
     * fails is named on stderr and, with its exception class and message,
     * in `outDir/verify_failures.json`, written only when a face fails (a
     * stale one is removed first). Returns the failures, in face order.
+    *
+    * `dumpParts` is for replica-scale runs (the test tree's `graft.Gate`):
+    * the checker globs every part file, and a coalesced dump of a
+    * lineitem-scale face runs its final aggregate and parquet encode in
+    * one task (30+ minutes single-threaded at 64× sf0.1).
     */
   private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
       faces: Iterable[(String, (SparkSession, String) => DataFrame)],
@@ -83,13 +53,12 @@ object Verify {
         // a face's dead checkpoints would otherwise pile up until the
         // ContextCleaner gets to them, and the next face pays for them
         Bench.dropPersisted(spark)
-        // r12, gate runs only: shuffle FILES of a completed face are
-        // deleted by the ContextCleaner only after the dependency
-        // objects are GC'd — across a 128×-replica dump the live-JVM
-        // shuffle dirs otherwise accumulate tens of GB of dead spill
-        // (the r12 verbatim-gate wedge measured 73 GB). A gc() per
-        // face lets the cleaner reclaim them while the dump runs.
-        // Dump mode only: the driver's correctness run is untouched.
+        // The ContextCleaner deletes a finished face's shuffle files only
+        // after their dependency objects are collected; across a
+        // 128×-replica dump the dead shuffle dirs otherwise reach tens of
+        // GB (73 GB measured on one verbatim-arm run). A gc() per face
+        // lets the cleaner reclaim them while the dump runs; the driver's
+        // correctness run (no dumpParts) is untouched.
         if (dumpParts) System.gc()
       }
     }

@@ -145,9 +145,9 @@ object Dedup {
     */
   def lshRecall(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
-    // r9: the exact-truth side collapses to DISTINCT TEXTS before the
-    // posting join — the same dup-collapse the simhash kernel got. The
-    // r9 64× gate killed the doc-level truth join twice with disk
+    // The exact-truth side collapses to DISTINCT TEXTS before the
+    // posting join — the same dup-collapse the simhash kernel got. At a
+    // 64× replica the doc-level truth join died twice of disk
     // exhaustion (>60 GB of shuffle spill): with every text carrying m
     // verbatim copies, each shared gram posting is m× longer and the
     // pair space m²× — quadratic in DUPLICATION, the one thing a dedup
@@ -167,7 +167,7 @@ object Dedup {
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("m"),
         graft.functions.NativeExprs.gram_hashes(split(col("text"), " "), 3).as("sh"))
-      // r11 (guide §2.4): `tok` feeds the within-group census AND the
+      // `tok` feeds the within-group census AND the
       // posting explode — un-materialized, each re-ran the md5 group
       // collapse (a full corpus exchange) plus the gram hashing. One
       // eager checkpoint of the distinct-text gram frame serves both.
@@ -238,9 +238,9 @@ object Dedup {
 
   /** Library face: simhash near-dup summary over any (doc_id, text) frame.
     *
-    * r9 scale redesign, same output bit-for-bit: the band self-join now
-    * runs over DISTINCT SIGNATURES with group weights, not over docs.
-    * The r9 64× gate caught the doc-level join whale-ing: replicated
+    * Scale design, same output bit-for-bit as a doc-level join: the band
+    * self-join runs over DISTINCT SIGNATURES with group weights, not over
+    * docs. A doc-level join skews on replicated
     * corpora (and real corpora — exact dups are the COMMON case a dedup
     * pipeline exists for) put m copies of a signature in every bucket
     * it bands to, so pair generation did C(m,2) work per duplicate
@@ -252,13 +252,13 @@ object Dedup {
     * hamming ≤ 3 — arithmetic on group sizes, no doc-level pairs ever
     * materialize.
     *
-    * r10: candidate generation is Manku-style BLOCK-PAIR tables
+    * Candidate generation is Manku-style BLOCK-PAIR tables
     * (Manku/Jain/Sarma, WWW'07 §3, the production simhash-dedup
     * layout): the 60-bit signature splits into 5 blocks of 12 bits;
     * hamming ≤ 3 touches at most 3 blocks, so every qualifying pair
     * agrees on BOTH blocks of at least one of the C(5,2) = 10 block
     * pairs. Bucket key = (table id, 24-bit block-pair value) — a 2²⁴
-    * key domain per table where the r9 16-bit bands had 2¹⁶, so at
+    * key domain per table where 16-bit bands would have 2¹⁶, so at
     * 10⁹+ distinct signatures the expected bucket is ~256× smaller
     * and the within-bucket quadratic stays bounded. 10 rows per
     * signature instead of 4 (the classic Manku space-for-selectivity
@@ -338,8 +338,8 @@ object Dedup {
     * bit votes over 60 bits, same band slices, pairs, and counts.
     *
     * Deliberately ARITHMETIC-ONLY: this was the repo's single oracle
-    * using `>>`/`<<`/`&`/`xor()`/`bit_count()`, and the single r6 red
-    * row (hash divergence ONLY at the driver's DuckDB, never locally).
+    * using `>>`/`<<`/`&`/`xor()`/`bit_count()`, and the one face whose
+    * hash diverged only at the driver's DuckDB, never locally.
     * Every bit operation is restated as integer `//`-division and `%`
     * against a recursive-CTE powers-of-two table — constructs that 200+
     * driver-green oracles already prove version-stable. Hamming of a
@@ -392,52 +392,6 @@ object Dedup {
       |SELECT s.doc_id, s.b0, s.b1, s.b2, s.b3,
       |  COALESCE(n.n_near, 0) AS n_near
       |FROM sb s LEFT JOIN near n ON s.doc_id = n.doc_id""".stripMargin
-
-  /** Divergence probe for C3 (env-gated via SPARK_GRAFT_PROBE in
-    * [[graft.Verify]]; never part of the correctness gate). Recomputes
-    * the simhash signature through a SECOND, kernel-free path — Spark's
-    * own md5/conv builtins over exploded tokens, integer `div`/`%`
-    * arithmetic — and emits, per doc:
-    *
-    *   - `n_distinct` token count and the kernel's four bands
-    *   - the SQL-path bands (`sq0..sq3`) and `kernel_eq_sql`
-    *   - `n_tied`: bits whose ±1 vote tally is exactly 0 — the most
-    *     fragile boundary in the pipeline (any engine asymmetry in
-    *     token splitting or hashing flips these first)
-    *
-    * If a driver-side failure recurs, this localizes it in one run:
-    * kernel≠SQL rows → Spark kernel edge case on that corpus;
-    * all-equal rows with a red oracle → DuckDB-side divergence.
-    */
-  def simhashProbe(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.NativeExprs.{simhash64 => simhash64e}
-    val toks = Tables(spark, dir).documents
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("tk"))
-    val kernel = toks.select(col("doc_id"), size(col("tk")).as("n_distinct"),
-      simhash64e(col("tk")).as("sig"))
-      .select(col("doc_id") +: col("n_distinct") +: (0 until 4).map(k =>
-        shiftrightunsigned(col("sig"), 16 * k).bitwiseAND(0xffffL).as(s"b$k")): _*)
-    val bits = spark.createDataFrame(
-      (0 until 60).map(b => (b, 1L << b))).toDF("b", "p")
-    val votes = toks
-      .select(col("doc_id"), explode(col("tk")).as("t"))
-      .select(col("doc_id"),
-        conv(substring(md5(col("t")), 1, 15), 16, 10).cast("long").as("h"))
-      .crossJoin(broadcast(bits))
-      .groupBy(col("doc_id"), col("b"), col("p"))
-      .agg(sum(when(expr("(h div p) % 2") === 1, 1).otherwise(-1)).as("v"))
-    val sqlSig = votes.groupBy(col("doc_id"))
-      .agg(sum(when(col("v") > 0, col("p")).otherwise(0L)).as("s"),
-        sum(when(col("v") === 0, 1).otherwise(0)).as("n_tied"))
-      .select(col("doc_id"), col("n_tied"),
-        expr("s % 65536").as("sq0"), expr("(s div 65536) % 65536").as("sq1"),
-        expr("(s div 4294967296) % 65536").as("sq2"),
-        expr("(s div 281474976710656) % 65536").as("sq3"))
-    kernel.join(sqlSig, Seq("doc_id"))
-      .withColumn("kernel_eq_sql",
-        col("b0") === col("sq0") && col("b1") === col("sq1") &&
-          col("b2") === col("sq2") && col("b3") === col("sq3"))
-  }
 
   /** C4: exact word-3-gram Jaccard similarity pairs, blocked by `lang`
     * (the zone analog of blocking) — the oracle-checkable exact
@@ -568,8 +522,8 @@ object Dedup {
 
   /** The tuning arithmetic over an arbitrary `pairs` source (must yield
     * a `jaccard` column) — shared by the registered oracle above and
-    * [[graft.StageOracles]]'s pinned-pair-frame restatement, so the two
-    * cannot drift (the r10 ADVICE lesson on hand-copied SQL).
+    * the scale gate's StageOracles pinned-pair-frame restatement, so the
+    * two cannot drift, as hand-copied SQL would.
     */
   private[graft] def lshTuningSqlOver(pairsSql: String): String =
     s"""WITH pairs AS ($pairsSql),

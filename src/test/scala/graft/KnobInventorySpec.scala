@@ -17,10 +17,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_CPUS",        // Graft.localSession: local[N]
     "SPARK_GRAFT_SF_DIR",      // Bench: data dir
     "SPARK_GRAFT_ONLY",        // SparkEntry.only: Bench, Verify face filter
-    "SPARK_GRAFT_SCALE_DIR",   // Bench: 64× replica dir
-    "SPARK_GRAFT_DUMP_PARTS",  // Verify: per-partition dumps
-    "SPARK_GRAFT_PROBE",       // Verify: per-row divergence dumps
-    "SPARK_GRAFT_DUMP_STAGES") // Verify: stage-oracle dump
+    "SPARK_GRAFT_SCALE_DIR")   // Bench: 64× replica dir
 
   private val PinnedConf = Set(
     // Graft.tune
@@ -103,11 +100,19 @@ class KnobInventorySpec extends AnyFunSuite {
         s"not a literal: ${nonLiteral.mkString("; ")}")
   }
 
+  private val EnvRead = """(sys\.env|System\.getenv)""".r
+
   test("the env vars read under src/main are exactly the pinned set") {
     assertPinned(
-      """(sys\.env|System\.getenv)""".r,
+      EnvRead,
       """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"(\w+)"""".r,
       PinnedEnv)
+  }
+
+  test("the scale gate's entry point reads no env var itself: its input sets its mode") {
+    val reads = Files.readAllLines(Paths.get("src/test/scala/graft/Gate.scala")).asScala
+      .map(_.trim).filter(code => isCode(code) && EnvRead.findFirstIn(code).nonEmpty)
+    assert(reads.isEmpty, reads.mkString("; "))
   }
 
   test("the session confs set under src/main are exactly the pinned set") {

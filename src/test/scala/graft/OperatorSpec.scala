@@ -26,6 +26,14 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("the registry holds 244 faces under 244 distinct names, each with an oracle") {
+    val names = SparkEntry.faces.map(_.name)
+    assert(names.size == 244 && names.distinct.size == 244,
+      s"duplicated: ${names.diff(names.distinct).mkString(", ")}")
+    val noOracle = SparkEntry.faces.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(noOracle.isEmpty, s"no oracle: ${noOracle.mkString(", ")}")
+  }
+
   test("SURVEY §2 inventory and SparkEntry.queries stay in sync") {
     val survey = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("SURVEY.md")), java.nio.charset.StandardCharsets.UTF_8)
@@ -570,7 +578,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("q_ivf_stats: cell census covers the corpus, shares sum to ~1") {
     val d = run("q_ivf_stats").cache()
-    // at most the trained cell count (c = ceil(sqrt(N)) since r8)
+    // at most the trained cell count (c = ceil(sqrt(N)))
     val n = graft.sources.Tables(spark, dir).embeddings.count()
     assert(d.count() <= math.ceil(math.sqrt(n.toDouble)).toLong)
     val total = graft.sources.Tables(spark, dir).embeddings.count()
@@ -1035,7 +1043,7 @@ class OperatorSpec extends AnyFunSuite {
     val missed = labelPairs.join(sem,
       col("la") === col("vec_a") && col("lb") === col("vec_b"), "left_anti")
     // missed pairs are exactly the cross-cell ones — verify against the
-    // SAME build-once index the face serves from (r8: c = ceil(sqrt(N)))
+    // SAME build-once index the face serves from (c = ceil(sqrt(N)))
     import graft.functions.NativeExprs
     val e = graft.sources.Tables(spark, dir).embeddings
     val cents = graft.operators.Ann.loadIvfIndex(spark,

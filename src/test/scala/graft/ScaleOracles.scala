@@ -1,6 +1,6 @@
 package graft
 
-/** Scale-gate oracle restatements (r9 VERDICT #1).
+/** Scale-gate oracle restatements.
   *
   * Each entry is an INDEPENDENT sub-quadratic DuckDB restatement of a
   * registered oracle whose shape cannot hold 64× replica volumes —
@@ -42,8 +42,7 @@ package graft
   */
 object ScaleOracles {
 
-  /** 2-D skyline via one sorted pass (the r6 q_skyline precedent made
-    * durable): a point survives iff no strictly-higher price carries a
+  /** 2-D skyline via one sorted pass: a point survives iff no strictly-higher price carries a
     * strictly-later day — per distinct price take MAX(day), then the
     * running max over strictly-higher prices; O(n log n) vs the
     * registered NOT-EXISTS O(n²) dominance scan.
@@ -176,8 +175,8 @@ object ScaleOracles {
     * distinct text): grams → 60-bit base hashes → 32 affine
     * permutations → 8×4 band hashes, all per DISTINCT text.
     *
-    * r11 rewrite, forced by the distinct-64× arm (where nothing
-    * collapses and the front bears genuine 64× signature volume):
+    * Shaped for the distinct-64× arm, where nothing collapses and
+    * the front bears genuine 64× signature volume:
     *  - md5 fingerprints and gram strings are swapped for DENSE
     *    INTEGER ids (row_number over the distinct sets — exact, no
     *    hash-collision risk) before any join or wide aggregate, so
@@ -190,10 +189,11 @@ object ScaleOracles {
     *  - band hashes derive row-wise from the wide signature row
     *    (concat_ws over 4 named columns ≡ the ordered-list join of
     *    the grouped form, seeds 4b..4b+3 in index order).
-    * Same arithmetic, same band strings, same outputs — the r10 form
-    * measured 156 s (minhash) / 330 s (recall) at distinct-64× on
-    * this box vs 30/48 s for this one; equivalence to the registered
-    * oracles re-proven at sf0.01+sf0.1 by tools/oracle_equiv.py.
+    * Same arithmetic, same band strings, same outputs — the
+    * string-keyed cross-join form measured 156 s (minhash) / 330 s
+    * (recall) at distinct-64× vs 30/48 s for this one (32 cores);
+    * tools/oracle_equiv.py proves equivalence to the registered oracles
+    * at sf0.01 and sf0.1.
     */
   private val MinhashP = 2147483647L
 
@@ -396,8 +396,9 @@ object ScaleOracles {
 
   /** C3 simhash collapsed: votes/signature per DISTINCT text, band
     * join over distinct texts, n_near(doc) = (m−1) + Σ m over
-    * hamming≤3 neighbor groups — the oracle-side mirror of the r9
-    * kernel redesign, derived independently from the registered SQL.
+    * hamming≤3 neighbor groups — the oracle-side mirror of the
+    * kernel's dup-collapsed design, derived independently from the
+    * registered SQL.
     */
   private val dedupSimhash: String =
     """WITH RECURSIVE bits(b, p) AS (
@@ -985,8 +986,8 @@ object ScaleOracles {
   }
 
   // ---------------------------------------------------------------------
-  // Materialization-pin restatements (r10): the four iterative-graph
-  // faces left rows+schema-only by the r9 gate. Their registered
+  // Materialization-pin restatements: the four iterative-graph faces
+  // whose registered oracles time out at 64× volumes. Their registered
   // oracles are NOT quadratic in shape — every stage is an |E|-bounded
   // join or aggregate — but DuckDB re-inlines each multi-referenced
   // CTE per reference, so the shared pair-generation chain (the
@@ -1126,7 +1127,7 @@ object ScaleOracles {
       |  round(confidence, 6) AS confidence, round(lift, 6) AS lift
       |FROM scored""".stripMargin
 
-  /** r12 (128× verbatim gate): NOT a sub-quadratic restatement — a
+  /** For the 128× verbatim gate: NOT a sub-quadratic restatement — a
     * CAST-CORRECTNESS one. DuckDB 1.0.0's wide-DECIMAL→DOUBLE cast is
     * not correctly rounded once the integer part exceeds 2^53
     * (CAST(DECIMAL(38,0) '20738003564902361142' AS DOUBLE) returns

@@ -7,7 +7,7 @@ import graft.functions.NativeExprs
 import graft.operators.{Ann, Dedup}
 import graft.sources.Tables
 
-/** Distinct-axis scale-gate adjudication (r10 VERDICT #1).
+/** Distinct-axis scale-gate adjudication.
   *
   * The 64× DISTINCT-payload arm (ScaleUp `distinct` mode) defeats the
   * dup-collapse restatements in [[ScaleOracles]] by construction: with
@@ -15,10 +15,10 @@ import graft.sources.Tables
   * 11 similarity/ANN faces whose oracles are quadratic in signature
   * CARDINALITY genuinely cannot be restated sub-quadratically in plain
   * SQL over the base tables. This registry closes the evidence gap with
-  * the two levers the r10 verdict prescribed:
+  * two levers:
   *
-  *  1. STAGE MATERIALIZATION: [[dump]] (run by [[Verify]] under
-  *     `SPARK_GRAFT_DUMP_STAGES=1`, scale-gate runs only) writes the
+  *  1. STAGE MATERIALIZATION: [[dump]] (run by [[Gate]] when its
+  *     face set holds the [[SampleFaces]]) writes the
   *     IVF pipeline's intermediate frames — per-round centroids
   *     (`_ivf_c0/_c1/_c2`, the grown codebook `_ivf_cg`) and per-round
   *     assignment frames (`_ivf_a1/_a2/_af/_af5`) — plus the LSH-tuning
@@ -52,7 +52,7 @@ import graft.sources.Tables
   *    own dump (band-bucket candidates + hamming≤3 are superset-stable,
   *    so the 4×16 pigeonhole restatement equals the Manku-table face).
   *  - clusters (C23): the pinned edge set IS q_dedup_minhash's dump —
-  *    hash-adjudicated in the same run on this axis since r10 — so the
+  *    hash-adjudicated in the same run on this axis — so the
   *    reachability closure over it is a FULL value adjudication.
   *  - lsh_tuning (C85): pair frame pinned + sampled; the 6-row tuning
   *    arithmetic over the pinned jaccards is full.
@@ -85,6 +85,9 @@ object StageOracles {
     * check computed FROM it).
     */
   val RowsOnly = "ROWS_ONLY"
+
+  /** The faces whose own dumps [[dump]] re-reads for its sample subsets. */
+  val SampleFaces = Set("q_dedup_simhash", "q_knn_join", "q_dedup_fuzzy")
 
   // ---------------------------------------------------------------- helpers
 
@@ -513,10 +516,10 @@ object StageOracles {
 
   // ------------------------------------------------------------- stage dumps
 
-  /** Spark-side stage materialization ([[Verify]] under
-    * `SPARK_GRAFT_DUMP_STAGES=1`). Every sample dump is a re-read of
-    * the face's own dumped parquet (a literal subset of the adjudicated
-    * artifact, never a recomputation); the IVF stage loop re-runs the
+  /** Spark-side stage materialization, run by [[Gate]] after the face
+    * dumps, which must include the [[SampleFaces]]. Every sample dump is
+    * a re-read of the face's own dumped parquet (a literal subset of the
+    * adjudicated artifact, never a recomputation); the IVF stage loop re-runs the
     * deterministic training trace and ASSERTS its final codebook equals
     * the cached index the faces served from, binding the stage
     * artifacts to the adjudicated run.

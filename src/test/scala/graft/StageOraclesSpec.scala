@@ -6,12 +6,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contract pins for the distinct-axis stage-adjudication registry
-  * (r10 VERDICT #1). The SQL-vs-Spark equivalence is proven engine-side
-  * (the §7i drift gate runs oracle_check twice — registered and
-  * --stage-oracles — against the SAME dump at sf0.01/sf0.1); these pins
-  * keep the registry and the dumper structurally wired: keys match the
-  * enumerated r10 distinct-axis timeout class, every pin referenced in
+/** Contract pins for the distinct-axis stage-adjudication registry.
+  * The SQL-vs-Spark equivalence is proven engine-side (the drift gate
+  * runs oracle_check twice — registered and --stage-oracles — against
+  * the SAME Gate dump at sf0.01/sf0.1); these pins keep the registry and
+  * the dumper structurally wired: keys match the enumerated
+  * distinct-64× timeout class, every pin referenced in
   * SQL is actually dumped, the sample dumps are literal subsets of the
   * face dumps, and the IVF trace binds to the served index.
   */
@@ -21,23 +21,23 @@ class StageOraclesSpec extends AnyFunSuite {
     graft.core.Graft.tune(SparkSession.builder().master("local[4]"), 4).getOrCreate()
   private val sf = "/root/testdata/sf0.001"
 
-  /** The r10 distinct-64× gate's enumerated timeout class — the only
-    * FACES a stage restatement may shadow (SCALE_GATE_r10 arm 2).
+  /** The faces whose registered oracles time out on the distinct-64×
+    * replica — the only FACES a stage restatement may shadow.
     */
-  private val r10DistinctTimeoutClass = Set(
+  private val distinctTimeoutClass = Set(
     "q_ann_ivf", "q_ann_recall", "q_ann_refine", "q_dedup_clusters",
     "q_dedup_fuzzy", "q_dedup_semantic", "q_dedup_simhash",
     "q_ivf_rebalance", "q_ivf_stats", "q_knn_join", "q_lsh_tuning")
 
   test("face-shadowing stage oracles stay inside the r10 distinct timeout class") {
     val faces = StageOracles.sql.keySet.filter(SparkEntry.queries.contains)
-    val outside = faces.diff(r10DistinctTimeoutClass)
+    val outside = faces.diff(distinctTimeoutClass)
     assert(outside.isEmpty,
       s"stage oracle shadows a face whose oracle is healthy on this axis: $outside")
     // knn/fuzzy are sample-only (irreducibly pairwise kernels): their
     // full faces keep the registered oracle; everything else is fully
     // restated given pins
-    val fullyRestated = r10DistinctTimeoutClass -- Set("q_knn_join", "q_dedup_fuzzy")
+    val fullyRestated = distinctTimeoutClass -- Set("q_knn_join", "q_dedup_fuzzy")
     assert(fullyRestated.subsetOf(faces),
       s"missing full stage restatement: ${fullyRestated.diff(faces)}")
   }
@@ -69,7 +69,7 @@ class StageOraclesSpec extends AnyFunSuite {
   test("stage dump: trace binds to served index, samples are subsets of faces") {
     val out = Files.createTempDirectory("graft_stage_spec").toString
     // the face dumps the sample subsets re-read
-    Seq("q_dedup_simhash", "q_knn_join", "q_dedup_fuzzy").foreach { q =>
+    StageOracles.SampleFaces.foreach { q =>
       SparkEntry.queries(q)(spark, sf)
         .coalesce(1).write.mode("overwrite").parquet(s"$out/$q")
     }

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * the SF-scaling SortMergeJoins actually shuffle on (q18 / q5 / the
   * fact build); a partkey skew would be invisible, since the
   * lineitem⋈part join stays a broadcast at every captured scale (the
-  * r8 first attempt measured exactly that: skew=false everywhere).
+  * partkey-skewed replica measured exactly that: skew=false everywhere).
   * At 128× sf0.1 (~77 M lineitem rows) the hot reducer carries ≥20%
   * of the shuffle bytes, crossing BOTH default AQE skew gates
   * (`skewedPartitionFactor`=5× median and
@@ -22,7 +22,8 @@ import graft.sources.Tables
   * must split it — the skew-split arm of the 100 TB story, observed at
   * default settings rather than simulated with lowered thresholds.
   *
-  * Usage: runMain graft.tools.SkewUp <scaleDir> <outDir> [hotFrac=5]
+  * Usage (after `sbt Test/compile`):
+  *   tools/runjvm.sh graft.tools.SkewUp <scaleDir> <outDir> [hotFrac=5]
   * (hotFrac = modulus: rows with l_orderkey % hotFrac == 0 go hot.)
   */
 object SkewUp {

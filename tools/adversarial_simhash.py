@@ -1,28 +1,25 @@
 #!/usr/bin/env python3
 """Adversarial-corpus gate for q_dedup_simhash (dev-only; not engine code).
 
-The r6 driver red row diverged only on the driver's regenerated corpus,
-never on local testdata. This harness stages a documents table built to
-trip every boundary the simhash pipeline has — TIE-HEAVY vote bits
-(>50% of organic docs carry at least one tied bit; v=0 is where any
-engine asymmetry flips first), empty / whitespace-only / multi-space /
+Stages a documents table built to trip every boundary the simhash
+pipeline has — TIE-HEAVY vote bits (v=0 is where any engine asymmetry
+flips first), empty / whitespace-only / multi-space /
 leading-trailing-space texts, non-ASCII (CJK, emoji, combining marks,
 NBSP), tabs-newlines inside tokens, and exact-duplicate docs — then
-runs the full face-vs-oracle loop on it:
+runs the face-vs-oracle loop on it:
 
     python3 tools/adversarial_simhash.py [workdir]
 
 1. writes <workdir>/documents.parquet (+ copies the other sf0.001
    tables so oracle_check's view setup succeeds),
-2. runs `sbt runMain graft.Verify` with SPARK_GRAFT_ONLY=q_dedup_simhash
-   and SPARK_GRAFT_PROBE=q_dedup_simhash,
-3. runs tools/oracle_check.py (face vs DuckDB oracle, hash-grade), and
-4. asserts the probe's kernel_eq_sql column is all-true (the native
-   kernel and Spark's builtin md5/conv path agree bit-for-bit).
+2. runs `sbt runMain graft.Verify` with SPARK_GRAFT_ONLY=q_dedup_simhash,
+3. runs tools/oracle_check.py (face vs DuckDB oracle, hash-grade).
 
-Exit 0 = both gates green on the adversarial corpus.
+The kernel-vs-builtin-SQL signature check on the same corpus is the
+tier-1 SimhashProbeSpec.
+
+Exit 0 = the face matches its oracle on the adversarial corpus.
 """
-import glob
 import os
 import shutil
 import subprocess
@@ -94,32 +91,16 @@ def main(workdir: str) -> int:
         if os.path.exists(src):
             shutil.copyfile(src, f"{workdir}/{t}.parquet")
     out = f"{workdir}/verify_out"
-    env = dict(os.environ,
-               SPARK_GRAFT_ONLY="q_dedup_simhash",
-               SPARK_GRAFT_PROBE="q_dedup_simhash")
+    env = dict(os.environ, SPARK_GRAFT_ONLY="q_dedup_simhash")
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {workdir} {out}"],
         cwd=REPO, env=env, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:], r.stderr[-2000:])
         return 1
-    rc = subprocess.run(
+    return subprocess.run(
         [sys.executable, f"{REPO}/tools/oracle_check.py", out, workdir],
         cwd=REPO).returncode
-    probe = pd.concat([pd.read_parquet(f) for f in
-                       sorted(glob.glob(f"{out}/q_dedup_simhash_probe/*.parquet"))],
-                      ignore_index=True)
-    tied = int((probe["n_tied"] > 0).sum())
-    mismatch = probe[~probe["kernel_eq_sql"]]
-    print(f"probe: {len(probe)} docs, {tied} with tied vote bits, "
-          f"{len(mismatch)} kernel-vs-SQL band mismatches")
-    if len(mismatch):
-        print(mismatch.head(10))
-        return 1
-    if tied == 0:
-        print("WARNING: adversarial corpus produced no tied bits — "
-              "the fragile boundary went unexercised")
-    return rc
 
 
 if __name__ == "__main__":

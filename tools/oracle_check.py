@@ -12,9 +12,12 @@ restatements from <out>/scale_oracle_sql.json over the registered
 oracle map before adjudicating — the form that holds 64x replica
 volumes. Only legitimate after tools/oracle_equiv.py has proven each
 restatement value-identical to its registered oracle at a driver SF.
+--stage-oracles: adjudicate the distinct arm's pinned stage artifacts
+from <out>/stage_oracle_sql.json. Both files come from a graft.Gate
+dump (`sbt Test/compile`, then `tools/runjvm.sh graft.Gate <sf_dir>
+<out>`); a graft.Verify dump carries only oracle_sql.json.
 
-Round-5 hardening (the driver twice flagged hash mismatches this tool
-called green): the driver canonicalizes by FORMATTING values before
+Decimal and float strictness: the driver canonicalizes by FORMATTING values before
 hashing, so identical numbers carried in different logical types hash
 apart — a Spark parquet DECIMAL(18,6) renders '0.123450' while the
 same value through DuckDB's .df() is float 0.12345. Value compare
@@ -58,7 +61,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
 
     def connect():
         c = duckdb.connect()
-        # r12: bound DuckDB's footprint on replica-volume gates — an
+        # bound DuckDB's footprint on replica-volume gates — an
         # uncapped 128x join ballooned one checker process to 69 GB RSS
         # and the kernel OOM-killed it mid-chunk. A hard cap + a spill
         # dir turns that into disk-backed execution (or a per-query
@@ -84,7 +87,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
         print(f"scale-oracle overlay: {len(applied)} restatements active "
               f"({', '.join(applied)})")
     if stage_oracles:
-        # distinct-axis stage adjudication (r10 VERDICT #1): overrides
+        # distinct-axis stage adjudication: overrides
         # AND adds pseudo-faces (stage artifacts + __sample subsets).
         # {OUT} pins a previously-dumped artifact; applied after the
         # scale overlay so stage restatements win where both exist.
@@ -138,7 +141,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
         # flag checked under a lock prevents a late-firing timer from
         # interrupting work that already completed (e.g. during the
         # pandas compare of the NEXT query) and misclassifying a healthy
-        # query (r8 ADVICE).
+        # query.
         timer = None
         done_lock = threading.Lock()
         done = [False]
@@ -173,8 +176,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
                             f"DRIVER-RISK: output column {field.name} is "
                             f"{field.type} — decimal finals hash differently "
                             "in the driver; cast to DOUBLE/BIGINT")
-            # round-7 hardening (the q_dedup_simhash r6 red row): a DuckDB
-            # HUGEINT / DECIMAL oracle column converts to pandas float64
+            # a DuckDB HUGEINT / DECIMAL oracle column converts to pandas float64
             # (version-dependently), so the driver formats '9761.0' against
             # Spark's '9761' and the hash diverges — while the value-level
             # compare below coerces both sides to float and calls it green.
@@ -216,7 +218,7 @@ def main(outdir: str, sfdir: str, timeout: float = 0.0,
         except Exception as ex:  # noqa: BLE001
             # typed detection, not substring matching: a genuine error
             # whose message happens to contain "interrupt" must stay an
-            # ERROR (r8 ADVICE)
+            # ERROR
             if timeout > 0 and isinstance(ex, duckdb.InterruptException):
                 timeouts += 1
                 note = ""

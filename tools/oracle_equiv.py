@@ -9,7 +9,12 @@ is allowed to adjudicate a 64x run, THIS gate proves each one
 value-identical to the REGISTERED oracle at a driver SF, where both
 forms are feasible:
 
-    python3 tools/oracle_equiv.py <verify_out_dir> <sf_dir> [--only a,b]
+    python3 tools/oracle_equiv.py <gate_out_dir> <sf_dir> [--only a,b]
+
+<gate_out_dir> is a graft.Gate dump (`sbt Test/compile`, then
+`tools/runjvm.sh graft.Gate <sf_dir> <gate_out_dir>`), which writes
+scale_oracle_sql.json beside oracle_sql.json; graft.Verify writes only
+the latter.
 
 For every key in <out>/scale_oracle_sql.json, runs BOTH that SQL and
 <out>/oracle_sql.json's registered SQL over <sf_dir>'s tables and

@@ -1,6 +1,6 @@
 #!/bin/bash
-# Dev-only scale-gate runner (r10 VERDICT #1/#5/#6 → SCALE_GATE_r11;
-# r11 VERDICT #2 → SCALE_GATE_r12).
+# Dev-only scale-gate runner. Dumps with graft.Gate, which lives in the
+# test tree: run `sbt Test/compile` first.
 # Usage:
 #   tools/scale_gate.sh distinct     # 64x distinct-payload arm, stage-adjudicated
 #   tools/scale_gate.sh distinct128  # 128x distinct-payload arm, same adjudication
@@ -12,23 +12,23 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-# The r10 distinct arm's 32 similarity/ANN/vocab faces + the r10 VERDICT
-# item-6 extension (span/chunk/boilerplate/contamination dedup family,
-# whose shuffles are token-position-sized — the axis that multiplies
-# distinct spans is exactly their stressor).
+# The distinct arm's 32 similarity/ANN/vocab faces + the
+# span/chunk/boilerplate/contamination dedup family, whose shuffles are
+# token-position-sized — the axis that multiplies distinct spans is
+# exactly their stressor.
 #
-# r12: these faces are also EXCLUDED from the verbatim arm, with
-# measured cause. Verbatim replication leaves text/embedding payloads
+# These faces are also EXCLUDED from the verbatim arm, with measured
+# cause. Verbatim replication leaves text/embedding payloads
 # byte-identical across copies, so every similarity face's candidate
 # join — and its DECLARED OUTPUT — grows with the SQUARE of the factor
 # (each original match becomes factor^2 copy-pairs ≈ 16384x at 128x):
-# the r12 verbatim attempt spilled 73 GB of shuffle on
+# a 128x verbatim attempt spilled 73 GB of shuffle on
 # q_ngram_containment alone before exhausting the disk, and the DuckDB
 # oracle faces the same quadratic. That is a degeneracy of duplicated
 # corpora (an all-pairs answer), not an engine scale limit; the axis
 # that scales this family linearly while stressing signature
 # cardinality is the DISTINCT mode (disjoint per-copy payloads) —
-# adjudicated at 64x in r11 and at 128x by the distinct128 arm below.
+# adjudicated at 64x and at 128x by the distinct arms below.
 DISTINCT_FACES="q_ann_ivf,q_ann_lsh,q_ann_recall,q_ann_refine,q_ann_topk,\
 q_dedup_clusters,q_dedup_embedding,q_dedup_exact,q_dedup_fuzzy,\
 q_dedup_keep_best,q_dedup_minhash,q_dedup_semantic,q_dedup_simhash,\
@@ -39,13 +39,14 @@ q_vocab_approx,q_vocab_overlap,q_weighted_sample,q_zipf,\
 q_span_dedup,q_span_dedup_fast,q_chunk_dedup,q_boilerplate,\
 q_contamination_ngram,q_contamination"
 
-run_distinct_arm() {  # $1 = replica dir, $2 = verify out dir
-  SPARK_GRAFT_DUMP_PARTS=1 SPARK_GRAFT_DUMP_STAGES=1 \
-    SPARK_GRAFT_ONLY="$DISTINCT_FACES" \
+run_distinct_arm() {  # $1 = replica dir, $2 = gate out dir
+  # the face set holds StageOracles' sample faces, so Gate also dumps
+  # the stage artifacts --stage-oracles pins
+  SPARK_GRAFT_ONLY="$DISTINCT_FACES" \
     SPARK_EXTRA_JAVA_OPTS="-Dspark.io.compression.codec=zstd" \
-    tools/runjvm.sh graft.Verify "$1" "$2"
-  # q_vocab_approx adjudication is excluded by oracle precondition
-  # (r10 gate, annotated): the exact-count oracle is valid only while
+    tools/runjvm.sh graft.Gate "$1" "$2"
+  # q_vocab_approx adjudication is excluded by oracle precondition:
+  # the exact-count oracle is valid only while
   # |vocab| <= the 64 MG counters; the distinct axis multiplies the
   # vocabulary past that by design, entering the overflow regime whose
   # no-miss guarantee is pinned by the FreqAgg property spec. The face
@@ -62,10 +63,10 @@ case "${1:?arm}" in
     # Verify dump over the in-tree sf0.01 input) minus the similarity
     # family above (adjudicated on the distinct axis); gate_inventory.py
     # refuses an exclusion that names no registered face. Split into 3
-    # chunks (sorted-order modulus for balance), one Verify JVM per chunk
+    # chunks (sorted-order modulus for balance), one Gate JVM per chunk
     # run CONCURRENTLY: a JVM's shuffle/spill dirs are reclaimed at exit,
     # so no chunk inherits another's disk debt, and the per-face
-    # System.gc() inside dump-mode Verify lets the ContextCleaner reclaim
+    # System.gc() inside Gate's dump lets the ContextCleaner reclaim
     # shuffle files within a chunk. zstd shuffle compression bounds spill
     # for the token-position-sized exchanges.
     tools/runjvm.sh graft.Verify perfbench/data/sf0.01 target/verify_registry
@@ -74,10 +75,10 @@ case "${1:?arm}" in
     i=0
     pids=()
     while read -r chunk; do
-      SPARK_GRAFT_DUMP_PARTS=1 SPARK_GRAFT_CPUS=11 SPARK_DRIVER_MEM=12g \
+      SPARK_GRAFT_CPUS=11 SPARK_DRIVER_MEM=12g \
         SPARK_EXTRA_JAVA_OPTS="-Dspark.io.compression.codec=zstd" \
         SPARK_GRAFT_ONLY="$chunk" \
-        tools/runjvm.sh graft.Verify target/scaleup128 "target/verify128_c$i" \
+        tools/runjvm.sh graft.Gate target/scaleup128 "target/verify128_c$i" \
         > "target/verify128_c$i.log" 2>&1 &
       pids+=($!)
       i=$((i+1))
@@ -86,7 +87,7 @@ case "${1:?arm}" in
     for p in "${pids[@]}"; do wait "$p" || rc=$?; done
     [ "$rc" -eq 0 ] || { echo "verify chunk failed (rc=$rc)" >&2; exit "$rc"; }
     # each chunk dir carries its own filtered oracle_sql.json — 3
-    # checker processes, one per chunk (the r10 cadence)
+    # checker processes, one per chunk
     python3 - <<'EOF'
 import subprocess, sys
 procs = [subprocess.Popen(
